@@ -24,8 +24,8 @@ object Args {
 /**
  * The measured process. One run: set the workload up (timed from JVM
  * launch), replay whole seeded passes over its operations until `seconds`
- * have passed (at least one pass), dump one output per distinct operation
- * for the oracle check, and write
+ * have passed (at least one pass), leave every timed operation's output
+ * where its `output` path points for the oracle check, and write
  * `report.json` into `out`. With `trace`, listeners and spans also run and
  * the per-layer metrics land in the same report.
  *
@@ -49,7 +49,6 @@ object Main {
     val workload: Workload = a.workload match {
       case "tpch_jdbc" => new TpchJdbc(a)
       case "curation_sf1" => new Curation(a)
-      case "multistage_sf01" => new Multistage(a)
       case w => sys.error(s"unknown workload $w")
     }
     val tracer = if (a.trace) Some(new Tracer(a.cpus)) else None
@@ -74,8 +73,6 @@ object Main {
       "window_s" -> windowS,
       "ops" -> ops.map(_.toMap),
       "warm_failures" -> workload.warmFailures.toSeq,
-      "peak_rss_mb" -> JvmStats.peakRssMb(),
-      "extra" -> workload.extraReport,
       "layers" -> layers.getOrElse(Map.empty),
       "self_s" -> selfTimes.getOrElse(Map.empty),
       "host" -> Host.fingerprint(workload.sparkVersion, a),
@@ -88,13 +85,13 @@ object Main {
 final case class Op(
     name: String, id: Long, conn: Int, startNs: Long, endNs: Long,
     ok: Boolean, error: String, hash: String, rows: Long,
-    buildNs: Long = 0L, executeNs: Long = 0L, pass: Int = 0) {
+    buildNs: Long = 0L, executeNs: Long = 0L, pass: Int = 0, output: String = "") {
   def latencyMs: Double = (endNs - startNs) / 1e6
   def toMap: Map[String, Any] = Map(
     "name" -> name, "id" -> id, "conn" -> conn, "pass" -> pass,
     "start_ms" -> startNs / 1e6, "latency_ms" -> latencyMs,
     "ok" -> ok, "error" -> error, "hash" -> hash, "rows" -> rows,
-    "build_ms" -> buildNs / 1e6, "execute_ms" -> executeNs / 1e6)
+    "build_ms" -> buildNs / 1e6, "execute_ms" -> executeNs / 1e6, "output" -> output)
 }
 
 object Host {

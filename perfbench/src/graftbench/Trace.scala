@@ -188,11 +188,15 @@ class Tracer(cores: Int) {
     val outBytes = ts.map(_.outBytes).sum.toDouble
     def phaseMs(p: String): Double = qs.flatMap(_.phases.get(p)).map(x => (x._2 - x._1).toDouble).sum
     val planMs = Phases.map(p => phaseMs(p._1)).sum
-    // planning that happens inside an operation's action rather than
-    // while its frame is built
-    val inProcess = opRecs.asScala.filterNot(_.jdbc).toSeq
-    val actionPlanMs = qs.filter(q => inProcess.exists(o =>
-      q.startMs * 1000 >= o.midUs && q.startMs * 1000 <= o.endUs))
+    // planning inside the timed execution: an in-process action, or a
+    // statement's executeQuery (tied by text, as two statements overlap)
+    val recs = opRecs.asScala.toSeq
+    def inExecution(q: QueryRec): Boolean = {
+      val s = q.startMs * 1000
+      recs.exists(o => if (o.jdbc) s >= o.startUs && s <= o.midUs && (q.text.isEmpty || o.text == q.text)
+        else s >= o.midUs && s <= o.endUs)
+    }
+    val executionPlanMs = qs.filter(inExecution)
       .map(q => Phases.flatMap(p => q.phases.get(p._1)).map(x => (x._2 - x._1).toDouble).sum).sum
     val byEntry = ops.groupBy(_.name)
     Map(
@@ -201,7 +205,7 @@ class Tracer(cores: Int) {
       "plan.codegen_fallback_exprs" -> per(qs.map(_.fallbacks).sum.toDouble, n),
       "op.build_s" -> per(ops.map(_.buildNs).sum / 1e9, n),
       "op.plan_s" -> per(planMs / 1e3, n),
-      "op.exec_s" -> math.max(0.0, per(ops.map(_.executeNs).sum / 1e9 - actionPlanMs / 1e3, n)),
+      "op.exec_s" -> math.max(0.0, per(ops.map(_.executeNs).sum / 1e9 - executionPlanMs / 1e3, n)),
       "sched.jobs" -> per(js.size.toDouble, n),
       "sched.stages" -> per(stages.size.toDouble, n),
       "sched.tasks" -> per(ts.size.toDouble, n),

@@ -7,7 +7,7 @@ import java.util.concurrent.ConcurrentHashMap
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.types._
 
 import graft.{GraftServer, GraftSession, SparkEntry}
@@ -17,7 +17,6 @@ import graft.operators.TpchSql
 trait Workload {
   protected def a: Args
   protected var spark: SparkSession = _
-  protected val firstOutputs = new ConcurrentHashMap[String, (StructType, Seq[Row])]()
   val warmFailures: ArrayBuffer[String] = ArrayBuffer[String]()
 
   /** Session, inputs, endpoint and the untimed warm passes. Nothing is
@@ -27,11 +26,13 @@ trait Workload {
   def measure(seconds: Double, tracer: Option[Tracer]): Seq[Op]
   /** Operation name -> DuckDB SQL that computes its expected output. */
   def oracleSql: Map[String, String]
+  /** Write what the timed operations returned where their `output` paths
+    * point, for the oracle check. Runs after the timed window. */
+  def dumpOutputs(): Unit = ()
   /** Documents whose text feeds the kernel timings of a traced run. */
   def kernelSample(): Seq[String] =
     Workload.docSample(spark, s"${a.data}/documents.parquet")
   def layerExtras(t: Tracer): Map[String, Double] = Map.empty
-  def extraReport: Map[String, Any] = Map.empty
   def sparkVersion: String = spark.version
 
   protected def session(tracer: Option[Tracer], confs: Map[String, String] = Map.empty): Unit = {
@@ -39,18 +40,6 @@ trait Workload {
       tracer.map(_ => "spark.sql.queryExecutionListeners" -> classOf[QeListener].getName)
     spark = GraftSession.get(s"local[${a.cpus}]", a.cpus, all)
     tracer.foreach(_.attach(spark))
-  }
-
-  /** Keep the first successful output of each operation for the oracle. */
-  protected def keepFirst(name: String, schema: StructType, rows: => Seq[Row]): Unit =
-    if (!firstOutputs.containsKey(name)) firstOutputs.putIfAbsent(name, (schema, rows))
-
-  /** Write the kept outputs as one parquet file each, the layout the
-    * oracle check reads. Runs after the timed window. */
-  def dumpOutputs(): Unit = firstOutputs.asScala.toSeq.sortBy(_._1).foreach {
-    case (name, (schema, rows)) =>
-      spark.createDataFrame(rows.asJava, schema).coalesce(1).write.mode("overwrite")
-        .parquet(s"${a.out}/first/$name")
   }
 
   /** Whole passes until the deadline: every run replays each operation
@@ -93,77 +82,17 @@ object Workload {
       .collect().map(_.getString(0)).toSeq
 }
 
-/** In-process operator entries, one driver thread. */
-abstract class InProcess extends Workload {
-  def entries: Seq[String]
-
-  def oracleSql: Map[String, String] = entries.map(n => n -> SparkEntry.oracleSql(n)).toMap
-
-  /** Run the built frame to completion; returns (digest, rows). */
-  protected def action(name: String, df: DataFrame, pass: Int): (String, Long)
-
-  protected def once(name: String, id: Long, pass: Int, tracer: Option[Tracer]): Op = {
-    tracer.foreach(_.opStart(spark, id))
-    val t0 = System.nanoTime()
-    var t1 = t0
-    try {
-      val df = SparkEntry.queries(name)(spark, a.data)
-      t1 = System.nanoTime()
-      val (hash, rows) = action(name, df, pass)
-      val t2 = System.nanoTime()
-      tracer.foreach(_.opEnd(id, name, t0, t1, t2))
-      Op(name, id, 0, t0, t2, ok = true, "", hash, rows, t1 - t0, t2 - t1, pass)
-    } catch { case e: Exception =>
-      val t2 = System.nanoTime()
-      tracer.foreach(_.opEnd(id, name, t0, t1, t2))
-      Op(name, id, 0, t0, t2, ok = false, Workload.message(e), "", 0L, t1 - t0, t2 - t1, pass)
-    }
-  }
-
-  protected def warm(): Unit = entries.foreach { name =>
-    val op = once(name, Workload.nextId(), -1, None)
-    if (!op.ok) warmFailures += s"$name: ${op.error}"
-  }
-}
-
 /**
- * multistage_sf01: the floor-bound operators, whose cost is job and stage
- * count rather than rows. Each execution is built, planned and collected
- * to the driver; the seed fixes the replay order.
+ * curation_sf1: a curation batch over a seeded slice of the sf1 corpus,
+ * one driver thread in an in-process session. Every operator's result is
+ * written as parquet, one directory per pass, and the oracle check reads
+ * those files back.
  */
-class Multistage(val a: Args) extends InProcess {
-  val entries: Seq[String] = Seq("e12_gap_sketch", "e15_conversion_lag", "g02_hits",
-    "t21_bpe_train", "q10_percentile", "q137_percentile_disc")
-
-  def setUp(tracer: Option[Tracer]): Unit = {
-    session(tracer)
-    warm()
-  }
-
-  protected def action(name: String, df: DataFrame, pass: Int): (String, Long) = {
-    val rows = df.collect().toSeq
-    keepFirst(name, df.schema, rows)
-    Workload.digest(rows.iterator.map(_.toSeq))
-  }
-
-  def measure(seconds: Double, tracer: Option[Tracer]): Seq[Op] = {
-    val deadline = System.nanoTime() + (seconds * 1e9).toLong
-    passes(deadline) { p =>
-      Workload.shuffled(entries, a.seed * 1000003L + p)
-        .map(once(_, Workload.nextId(), p, tracer))
-    }
-  }
-}
-
-/**
- * curation_sf1: a curation batch over a seeded slice of the sf1 corpus.
- * Every operator's result is written as parquet, one directory per pass,
- * and the oracle check reads those files back.
- */
-class Curation(val a: Args) extends InProcess {
+class Curation(val a: Args) extends Workload {
   val entries: Seq[String] = Seq("c01_curation", "t08_pii_redact", "d10_winnowing",
     "a07_semantic_dedup", "t22_bpe_encode", "p05_shard_pack")
-  private val passTimes = ArrayBuffer[(Long, Long)]()
+
+  def oracleSql: Map[String, String] = entries.map(n => n -> SparkEntry.oracleSql(n)).toMap
 
   /** Two warm passes: after one, the next pass still runs 10-20% slower
     * while the JIT compiles, and that warm-up varies from run to run. */
@@ -173,25 +102,36 @@ class Curation(val a: Args) extends InProcess {
     warm()
   }
 
-  protected def action(name: String, df: DataFrame, pass: Int): (String, Long) = {
-    val dir = if (pass < 0) s"${a.out}/warm/$name" else s"${a.out}/outputs/p$pass/$name"
-    df.write.mode("overwrite").parquet(dir)
-    ("", 0L)
+  private def warm(): Unit = entries.foreach { name =>
+    val op = once(name, Workload.nextId(), -1, None)
+    if (!op.ok) warmFailures += s"$name: ${op.error}"
+  }
+
+  /** Build the entry's frame, then write it: the build and the write are
+    * timed apart. */
+  private def once(name: String, id: Long, pass: Int, tracer: Option[Tracer]): Op = {
+    val output = if (pass < 0) s"warm/$name" else s"outputs/p$pass/$name"
+    tracer.foreach(_.opStart(spark, id))
+    val t0 = System.nanoTime()
+    var t1 = t0
+    try {
+      val df = SparkEntry.queries(name)(spark, a.data)
+      t1 = System.nanoTime()
+      df.write.mode("overwrite").parquet(s"${a.out}/$output")
+      val t2 = System.nanoTime()
+      tracer.foreach(_.opEnd(id, name, t0, t1, t2))
+      Op(name, id, 0, t0, t2, ok = true, "", "", 0L, t1 - t0, t2 - t1, pass, output)
+    } catch { case e: Exception =>
+      val t2 = System.nanoTime()
+      tracer.foreach(_.opEnd(id, name, t0, t1, t2))
+      Op(name, id, 0, t0, t2, ok = false, Workload.message(e), "", 0L, t1 - t0, t2 - t1, pass)
+    }
   }
 
   def measure(seconds: Double, tracer: Option[Tracer]): Seq[Op] = {
     val deadline = System.nanoTime() + (seconds * 1e9).toLong
-    passes(deadline) { p =>
-      val t0 = System.nanoTime()
-      val ops = entries.map(once(_, Workload.nextId(), p, tracer))
-      passTimes += ((t0, System.nanoTime()))
-      ops
-    }
+    passes(deadline)(p => entries.map(once(_, Workload.nextId(), p, tracer)))
   }
-
-  override def extraReport: Map[String, Any] = Map(
-    "docs" -> spark.read.parquet(s"${a.data}/documents.parquet").count(),
-    "pass_s" -> passTimes.map { case (s, e) => (e - s) / 1e9 }.toSeq)
 }
 
 /**
@@ -207,6 +147,9 @@ class TpchJdbc(val a: Args) extends Workload {
   private var conns: Seq[Connection] = Seq.empty
   private var texts: Seq[(String, String)] = Seq.empty
   private val connectMs = ArrayBuffer[Double]()
+  /** One result per (statement, digest) among the timed executions, so
+    * every distinct result a timed statement returned is checked. */
+  private val results = new ConcurrentHashMap[String, (StructType, Seq[Row])]()
 
   /** The TPC-H suite as SQL text: TpchSql's 21 texts plus s11 (Q3). s11's
     * text is read back from the parsed plan of its front-door entry. */
@@ -229,7 +172,7 @@ class TpchJdbc(val a: Args) extends Workload {
     // the warm pass runs one connection per core: cold statements are
     // bound by single-threaded planning and code generation
     val extra = (Conns until math.max(Conns, a.cpus)).map(_ => connect())
-    deal(conns ++ extra, texts, None).filterNot(_.ok)
+    deal(conns ++ extra, texts, -1, None).filterNot(_.ok)
       .foreach(op => warmFailures += s"${op.name}: ${op.error}")
     extra.foreach(_.close())
   }
@@ -258,9 +201,11 @@ class TpchJdbc(val a: Args) extends Workload {
     Option(errors.peek()).foreach(e => throw e)
   }
 
-  /** One statement: executeQuery, then fetch every row. */
+  /** One statement: executeQuery, then fetch every row. A timed
+    * statement (`pass` >= 0) keeps its result under its digest unless an
+    * equal result is already kept. */
   private def statement(c: Connection, conn: Int, name: String, text: String, id: Long,
-                        tracer: Option[Tracer]): Op = {
+                        pass: Int, tracer: Option[Tracer]): Op = {
     val st = c.createStatement()
     val t0 = System.nanoTime()
     var t1 = t0
@@ -272,12 +217,15 @@ class TpchJdbc(val a: Args) extends Workload {
       while (rs.next()) rows += Array.tabulate(n)(i => rs.getObject(i + 1))
       val t2 = System.nanoTime()
       val (hash, count) = Workload.digest(rows.iterator.map(_.toSeq))
-      val schema = TpchJdbc.schema(rs)
-      keepFirst(name, schema, rows.map(r => Row.fromSeq(TpchJdbc.values(schema, r))).toSeq)
+      val output = s"outputs/$name/$hash"
+      if (pass >= 0 && !results.containsKey(output)) {
+        val schema = TpchJdbc.schema(rs)
+        results.putIfAbsent(output, (schema, rows.map(r => Row.fromSeq(TpchJdbc.values(schema, r))).toSeq))
+      }
       tracer.foreach(_.stmtEnd(id, name, text, t0, t1, t2, count))
-      Op(name, id, conn, t0, t2, ok = true, "", hash, count, 0L, t1 - t0)
+      Op(name, id, conn, t0, t2, ok = true, "", hash, count, 0L, t1 - t0, pass, output)
     } catch { case e: Exception =>
-      Op(name, id, conn, t0, System.nanoTime(), ok = false, Workload.message(e), "", 0L)
+      Op(name, id, conn, t0, System.nanoTime(), ok = false, Workload.message(e), "", 0L, pass = pass)
     } finally st.close()
   }
 
@@ -286,31 +234,37 @@ class TpchJdbc(val a: Args) extends Workload {
   def measure(seconds: Double, tracer: Option[Tracer]): Seq[Op] = {
     val deadline = System.nanoTime() + (seconds * 1e9).toLong
     passes(deadline) { p =>
-      deal(conns, Workload.shuffled(texts, a.seed * 1000003L + p), tracer).map(_.copy(pass = p))
+      deal(conns, Workload.shuffled(texts, a.seed * 1000003L + p), p, tracer)
     }
   }
 
   /** Run `order` once, each statement on whichever connection is free. */
-  private def deal(cs: Seq[Connection], order: Seq[(String, String)],
+  private def deal(cs: Seq[Connection], order: Seq[(String, String)], pass: Int,
                    tracer: Option[Tracer]): Seq[Op] = {
     val queue = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)](order.asJava)
     val out = new java.util.concurrent.ConcurrentLinkedQueue[Op]()
     parallel(cs.zipWithIndex) { case (c, i) =>
       var next = queue.poll()
       while (next != null) {
-        out.add(statement(c, i, next._1, next._2, Workload.nextId(), tracer))
+        out.add(statement(c, i, next._1, next._2, Workload.nextId(), pass, tracer))
         next = queue.poll()
       }
     }
     out.asScala.toSeq.sortBy(_.startNs)
   }
 
+  override def dumpOutputs(): Unit = results.asScala.toSeq.sortBy(_._1).foreach {
+    case (output, (schema, rows)) =>
+      spark.createDataFrame(rows.asJava, schema).coalesce(1).write.mode("overwrite")
+        .parquet(s"${a.out}/$output")
+  }
+
   override def layerExtras(t: Tracer): Map[String, Double] = t.serverLayers(connectMs.toSeq)
 }
 
 object TpchJdbc {
-  /** Spark schema for a JDBC result, so the first output of each text can
-    * be written as parquet for the oracle check. */
+  /** Spark schema for a JDBC result, so a kept result can be written as
+    * parquet for the oracle check. */
   def schema(rs: ResultSet): StructType = {
     val md = rs.getMetaData
     StructType((1 to md.getColumnCount).map { i =>

@@ -52,7 +52,10 @@ def bench_one(kernel, sf_dir, runs=3):
         if p.returncode != 0:
             print(p.stderr[-2000:], file=sys.stderr)
             sys.exit(f"[d2] bench JVM failed for {kernel} @ {sf_dir}")
-        runs = json.load(open(spread_path))["spread"][kernel]
+        dump = json.load(open(spread_path))
+        if kernel in dump.get("failed", {}):
+            sys.exit(f"[d2] {kernel} failed @ {sf_dir}: {dump['failed'][kernel]}")
+        runs = dump["spread"][kernel]
         return runs
     finally:
         if os.path.exists(spread_path):

@@ -49,7 +49,11 @@ for r in range(runs):
                      "bench stdout")
         totals.append(json.loads(line)["value"])
         with open(spread_path) as f:
-            run_spread = json.load(f)["spread"]
+            dump = json.load(f)
+        if dump.get("failed"):
+            sys.exit(f"[spread] run {r + 1}/{runs}: failed entries "
+                     f"{sorted(dump['failed'])} — see bench stderr")
+        run_spread = dump["spread"]
     finally:
         if os.path.exists(spread_path):
             os.unlink(spread_path)

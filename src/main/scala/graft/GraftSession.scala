@@ -19,6 +19,17 @@ import org.apache.spark.sql.SparkSession
  *    and let deployments size it (rule of thumb: 2-3x total cores).
  *  - Broadcast threshold kept at default 10 MB: region/nation/supplier/part
  *    style dims stay broadcast even at 100 TB fact scale.
+ *  - Codegen class cache sized to graft's working set. Spark keeps
+ *    compiled classes in one JVM-wide LRU of 100 entries by default. One
+ *    pass of the 22 TPC-H texts generates about 345 classes, the curation
+ *    batch about 148 and the whole 317-entry inventory about 3,400, and
+ *    an LRU smaller than a replayed cycle evicts every class before its
+ *    next use: each statement recompiled its code with Janino and ran it
+ *    cold in the JIT. 4096 covers the inventory plus the few classes
+ *    generated anew per call (OPTIMIZATION_r21.md), and stays finite so a
+ *    long-lived server facing ad-hoc SQL still evicts. Spark sizes the
+ *    cache once, from the session active when the JVM first generates
+ *    code, so the bound holds wherever that session came from here.
  */
 object GraftSession {
 
@@ -48,6 +59,8 @@ object GraftSession {
       // injection with lowered thresholds).
       .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
+      // Keep generated classes resident across statements (see class doc).
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
       .config("spark.ui.enabled", "false")
 
   /** Create (or reuse) a session with graft defaults; `extraConfs` are

@@ -15,6 +15,11 @@ import graft.{GraftSession, SparkEntry}
  *            single-threaded — the §7.3 "nothing is running" bucket),
  *   exec   — toRdd.count() (job execution, the bench's timed action).
  *
+ * It also counts `compiles`: the Janino compiles over the timed pass. A warm
+ * entry compiles nothing, so a nonzero count flags code generated anew on
+ * every call (a per-call literal baked into generated code) or a codegen
+ * cache too small for the working set.
+ *
  * Each phase is measured on the steady-state pass (one warm run first, so
  * janino/JIT warmup stays out of the numbers, matching Bench's protocol).
  * Usage: SPARK_GRAFT_PROBE_ONLY=a13_ivfpq_recall,q10_percentile
@@ -41,7 +46,8 @@ object PerfProbe {
           si.taskMetrics.shuffleReadMetrics.totalBytesRead)) }
       }
     })
-    println(f"${"entry"}%-24s ${"build"}%8s ${"plan"}%8s ${"exec"}%8s ${"total"}%8s")
+    def compiles: Long = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    println(f"${"entry"}%-24s ${"build"}%8s ${"plan"}%8s ${"exec"}%8s ${"total"}%8s ${"compiles"}%8s")
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
       // warm pass
@@ -52,6 +58,7 @@ object PerfProbe {
       // timed pass guarded too: a failing entry must not abort the whole
       // probe run — report it and continue with the next entry
       try {
+        val c0 = compiles
         val t0 = System.nanoTime()
         val df = fn(spark, sfDir)
         val t1 = System.nanoTime()
@@ -60,7 +67,7 @@ object PerfProbe {
         df.queryExecution.toRdd.count()
         val t3 = System.nanoTime()
         def s(a: Long, b: Long): Double = (b - a) / 1e9
-        println(f"$name%-24s ${s(t0, t1)}%8.3f ${s(t1, t2)}%8.3f ${s(t2, t3)}%8.3f ${s(t0, t3)}%8.3f")
+        println(f"$name%-24s ${s(t0, t1)}%8.3f ${s(t1, t2)}%8.3f ${s(t2, t3)}%8.3f ${s(t0, t3)}%8.3f ${compiles - c0}%8d")
       } catch { case e: Throwable => println(s"$name FAILED (timed): ${e.getMessage}") }
       if (showStages) {
         Thread.sleep(300)

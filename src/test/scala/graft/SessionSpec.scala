@@ -26,6 +26,7 @@ class SessionSpec extends GraftSpec {
     assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
     assert(spark.conf.get("spark.sql.extensions") == "graft.functions.GraftExtensions")
     assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") == "4096")
   }
 
   test("reliable-checkpoint mode: same results, digest-identical plans (q115/e13/q126/p05)") {

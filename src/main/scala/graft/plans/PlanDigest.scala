@@ -2,7 +2,8 @@ package graft.plans
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
 
@@ -22,7 +23,10 @@ import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNes
  *   - join type and build side,
  *   - exchange partitioning SHAPE (hash/range/single — but not the
  *     partition COUNT, which is a tuning conf, not a plan property),
- *   - scan output width (column-pruning tripwire).
+ *   - scan output width (column-pruning tripwire),
+ *   - the number of CodegenFallback expressions (interpreted-eval
+ *     tripwire: a lambda or kernel that leaves whole-stage codegen
+ *     changes no operator, so the tree alone cannot show it).
  *
  * Everything volatile — expression ids, statistics, file paths, codegen
  * stage ids, partition counts — is excluded, so the digest is identical
@@ -104,8 +108,18 @@ object PlanDigest {
       }
     }
     walk(root, 0)
+    sb.append("CodegenFallback exprs: ").append(codegenFallbacks(root)).append('\n')
     sb.toString
   }
+
+  /** Expressions in `plan` (subqueries included) that evaluate
+    * interpreted inside generated code. */
+  def codegenFallbacks(plan: SparkPlan): Int =
+    Plans.collectWithSubqueries(plan) { case p =>
+      p.expressions.map(_.collect { case f: CodegenFallback => f }.size).sum
+    }.sum
+
+  private object Plans extends AdaptiveSparkPlanHelper
 
   private def describe(p: SparkPlan): String = p match {
     case j: BroadcastHashJoinExec => s"BroadcastHashJoinExec(${j.joinType},build=${j.buildSide})"

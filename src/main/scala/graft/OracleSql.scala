@@ -391,7 +391,7 @@ object OracleSql {
       ORDER BY flag, status""",
 
     // d15: the d02 pair pipeline (minhashCtes → pr) + exact containment
-    // over gram STRINGS (Spark shuffles 8-byte Hash64 values — the
+    // over gram STRINGS (Spark shuffles 8-byte hash64 values — the
     // d08/d13 collision-free-replay discipline); flags compare the
     // ROUNDED containments so the 0.9 boundary can't fork.
     "d15_containment" -> s"""
@@ -2946,7 +2946,7 @@ object OracleSql {
       leaf AS (
         -- bin = exact count of edges <= x (clamped >= 1): the same
         -- definitional decision the engine's codegen binary-search
-        -- EdgeBin makes — pure IEEE comparisons against the shared
+        -- edge_bin makes — pure IEEE comparisons against the shared
         -- snapped table, no libm candidate, no plateau residual
         SELECT g1, g2,
           CAST(GREATEST(len(list_filter(edges, e -> e <= x)), 1)
@@ -3459,7 +3459,7 @@ object OracleSql {
       leaf AS (
         -- bin = exact count of edges <= x (clamped >= 1): the same
         -- definitional decision the engine's codegen binary-search
-        -- EdgeBin makes — pure IEEE comparisons against the shared
+        -- edge_bin makes — pure IEEE comparisons against the shared
         -- snapped table, no libm candidate, no plateau residual
         SELECT l_returnflag, l_linestatus,
           CAST(GREATEST(len(list_filter(edges, e -> e <= x)), 1)
@@ -4664,7 +4664,7 @@ object OracleSql {
       ORDER BY doc_id""",
 
     // d14: replayed over gram STRINGS (the d08/d13 discipline — the
-    // Spark side groups 8-byte ShingleHash64 values; FNV-1a64 over ≤ a
+    // Spark side groups 8-byte shingle_hash64 values; FNV-1a64 over ≤ a
     // few million grams is collision-free, and both engines would see
     // the same collision if one existed since the hash is deterministic).
     "d14_boilerplate" -> raw"""
@@ -4855,7 +4855,7 @@ object OracleSql {
       FROM documents d LEFT JOIN hits ON hits.doc_id = d.doc_id
       ORDER BY d.doc_id""",
 
-    // d10: per-shingle Hash64 replay (FNV-1a64 + splitmix64, seed 0) on
+    // d10: per-shingle hash64 replay (FNV-1a64 + splitmix64, seed 0) on
     // parallel-unnest-indexed shingles, 4-wide window minima, distinct
     // fingerprints, capped-bucket pair counts.
     "d10_winnowing" -> s"""

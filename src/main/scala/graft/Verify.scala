@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -16,13 +15,9 @@ object Verify {
     // exchanges, materialized broadcasts) for scale-posture evidence —
     // the closest local analogue to the reference's add_worker surface.
     val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val spark = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the session that ships (extensions, graft optimizer rules, Kryo,
+    // system catalog), so the oracle gate checks what users run
+    val spark = GraftSession.get(master, cpus.toInt)
     // reliable-checkpoint mode (spark.graft.checkpoint.reliable=true via
     // --conf / spark-submit) needs a checkpoint dir every executor can
     // reach; SPARK_GRAFT_CKPT_DIR pins it (a local path is genuinely

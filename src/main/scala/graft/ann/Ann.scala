@@ -274,7 +274,7 @@ object Ann {
    * (probe, cand).
    */
   /** Cosine over array<double> columns via codegen'd array lambdas (the
-    * native CosineSimilarity kernel is float-typed; the dequantized
+    * native cosine_sim kernel is float-typed; the dequantized
     * vectors here are doubles). */
   private def cosD(u: Column, v: Column): Column = {
     def dot(a: Column, b: Column): Column = GraftFunctions.dotD(a, b)
@@ -329,8 +329,8 @@ object Ann {
    * a08: binary (sign-bit) embedding search + recall eval — the third
    * point on the index compression curve after a04/a05's int8: each
    * vector collapses to a 32-bit hyperplane sign sketch, candidates rank
-   * by Hamming distance (xor + popcount — the codegen `Hamming64`
-   * expression, integer-exact so ranking can never fork on float
+   * by Hamming distance (xor + popcount — the codegen `hamming64`
+   * kernel, integer-exact so ranking can never fork on float
    * summation), and the report is recall@10 of the Hamming top-k against
    * exact cosine. The search topology is a01's: probes broadcast, corpus
    * scanned once, never shuffled; at 100 TB the sketch column is what an

@@ -528,7 +528,7 @@ object Dedup {
    * shared fingerprint. Report: doc pairs sharing ≥ 2 fingerprints.
    *
    * Scale shape: shingling, hashing (FNV-1a64+mix via the
-   * `WinnowFingerprints` codegen kernel — hash, window minima, and
+   * `winnow_fps` codegen kernel — hash, window minima, and
    * dedup in one JVM pass), all INSIDE the row — fingerprinting
    * shuffles nothing; only the 8-byte
    * (fp, doc_id) pairs shuffle, and pair expansion is bucket-capped at
@@ -850,7 +850,7 @@ object Dedup {
    * RefinedWeb removal class), and each doc is scored by the fraction of
    * its word positions covered by the union of its boilerplate shingles.
    *
-   * Scale: the corpus explodes ONCE to (doc, pos, 8-byte ShingleHash64)
+   * Scale: the corpus explodes ONCE to (doc, pos, 8-byte shingle_hash64)
    * — gram strings never leave the scan task (the d13 kernel); the
    * distinct-doc count shuffles hashes only and map-side partial
    * distinct applies per (h, doc) run. The coverage union re-explodes

@@ -1,58 +1,32 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
- * Native Catalyst expressions for the hot paths the built-in function
- * library can't express efficiently: vector cosine, one-pass MinHash
- * signatures, SimHash, and rolling fingerprints.
+ * graft's native Catalyst expressions.
  *
- * All of them generate code that calls the static kernels in [[Kernels]]
- * (single JIT-friendly call per row, no boxing, no UDF serialization) and
- * stay inside whole-stage codegen spans.
+ * [[Kernels]] holds the per-row logic as static methods. Every scalar
+ * function that is one Kernels call is a row of [[KernelTable]] and
+ * expands to the one [[KernelCall]] scaffold: generated code makes a
+ * single JIT-friendly static call per row (no boxing, no UDF
+ * serialization) inside the whole-stage codegen span, and the row's input
+ * types are enforced at analysis. The classes after the table carry logic
+ * one call cannot: the aggregates and sketches ([[GeometricMean]],
+ * [[BloomFilterBuild]], [[QuantileSketchAgg]], [[QuantileSketchMerge]])
+ * and the n-ary geometry predicates ([[NaryDoubleKernel]]).
  */
 
 /** Shared per-row kernels. Static so generated code can call them. */
 object Kernels {
-  import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-
-  /** Analysis-time guard for the unsafe-read array kernels: each argument
-    * must be an array of exactly the element type the kernel reads
-    * (getDouble/getFloat/getLong on a mistyped column would silently
-    * return garbage instead of failing resolution). */
-  def checkArrayArgs(fn: String, l: Expression, lt: DataType,
-                     r: Expression, rt: DataType): TypeCheckResult =
-    (l.dataType, r.dataType) match {
-      case (ArrayType(a, _), ArrayType(b, _)) if a == lt && b == rt =>
-        TypeCheckResult.TypeCheckSuccess
-      case (ld, rd) => TypeCheckResult.TypeCheckFailure(
-        s"$fn requires (array<${lt.simpleString}>, array<${rt.simpleString}>), " +
-          s"got (${ld.catalogString}, ${rd.catalogString})")
-    }
-
-  /** Unary variant of [[checkArrayArgs]]. */
-  def checkArrayArg(fn: String, c: Expression, et: DataType): TypeCheckResult =
-    c.dataType match {
-      case ArrayType(a, _) if a == et => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$fn requires array<${et.simpleString}>, got ${other.catalogString}")
-    }
-
-  /** (array<et>, scalar st) variant of [[checkArrayArgs]]. */
-  def checkArrayScalarArgs(fn: String, l: Expression, et: DataType,
-                           r: Expression, st: DataType): TypeCheckResult =
-    (l.dataType, r.dataType) match {
-      case (ArrayType(a, _), s) if a == et && s == st =>
-        TypeCheckResult.TypeCheckSuccess
-      case (ld, rd) => TypeCheckResult.TypeCheckFailure(
-        s"$fn requires (array<${et.simpleString}>, ${st.simpleString}), " +
-          s"got (${ld.catalogString}, ${rd.catalogString})")
-    }
   /** 64-bit avalanche mix (splitmix64 finalizer) — stable across JVMs. */
   @inline def mix64(z0: Long): Long = {
     var z = z0
@@ -61,8 +35,8 @@ object Kernels {
     z ^ (z >>> 31)
   }
 
-  /** Equal-position count over two long arrays — [[graft.ZipEqCount]]'s
-    * scalar core: common-prefix positions where both sides are non-null
+  /** Equal-position count over two long arrays — the zip_eq_count
+    * fold ([[KernelTable.zipEqCount]]): common-prefix positions where both sides are non-null
     * and equal (the HOF form's padded/null positions contribute 0). */
   def zipEqCount(a: ArrayData, b: ArrayData): Int = {
     val n = math.min(a.numElements(), b.numElements())
@@ -91,7 +65,7 @@ object Kernels {
   }
 
   /** Sequential left-fold dot product over two double arrays — the
-    * bit-exact scalar core of [[graft.DotProductD]]; null (boxed) when
+    * bit-exact scalar core of [[KernelTable.dotD]]; null (boxed) when
     * the HOF form would be NULL. */
   def dotD(a: ArrayData, b: ArrayData): java.lang.Double = {
     val n = a.numElements()
@@ -943,7 +917,7 @@ object Kernels {
    * interpreted per element, so on the corpus-scan hot path (every token
    * of every document — the highest-volume scoring pass a curation
    * pipeline has) the lambda form pays non-codegen eval + concat
-   * allocation per feature; this kernel is the d10 WinnowFingerprints
+   * allocation per feature; this kernel is the d10 winnow_fps
    * lesson applied to the model-based-selection featurizer.
    *
    * Null tokens are skipped (split() never produces them; the lambda
@@ -1056,6 +1030,9 @@ object Kernels {
       !isVowelAt(w, end - 2) &&
       w(end) != 'w' && w(end) != 'x' && w(end) != 'y'
 
+  /** Porter's 1980 stemmer (Presto's word_stem with the default 'en'
+    * stemmer). Inputs that are not all lowercase letters pass through
+    * unchanged, like Presto's behavior on non-words. */
   def porterStem(in: UTF8String): UTF8String = {
     val s = in.toString
     if (s.length < 3 || !s.forall(c => c >= 'a' && c <= 'z')) return in
@@ -1625,420 +1602,462 @@ object Kernels {
   }
 }
 
-/** cosine_sim(array<float>, array<float>) -> double */
-case class CosineSimilarity(left: Expression, right: Expression)
-  extends BinaryExpression {
+/** A constant argument of a kernel (k, seed, zoom, ...): a literal after
+  * the column arguments in SQL, a plain value in the typed facade, a Java
+  * literal in generated code. `check` is its validation: it maps an
+  * accepted value to what the kernel receives and is undefined on the
+  * rest, which `rule` describes. `default` fills a SQL call that omits
+  * the argument. A param with `toKernel = false` is checked, not passed. */
+final case class Param(
+    name: String,
+    literal: (String, Expression) => Any = Param.literalInt,
+    default: Option[Any] = None,
+    rule: String = "",
+    check: PartialFunction[Any, AnyRef] = { case v => v.asInstanceOf[AnyRef] },
+    toKernel: Boolean = true)
+
+object Param {
+  /** Extract a foldable integral argument from a SQL call site. A plain SQL
+    * integer literal parses as Literal(_, IntegerType) (java.lang.Integer),
+    * so a blind asInstanceOf[Long] would ClassCastException on the natural
+    * call form `hash64(c, 42)`; accept both widths and fail non-literals
+    * with a clear message naming the function. */
+  def literalLong(fn: String, arg: Expression): Long = arg match {
+    case Literal(v: Int, IntegerType) => v.toLong
+    case Literal(v: Long, LongType)   => v
+    case other => throw new IllegalArgumentException(
+      s"$fn: argument must be an integer literal, got ${other.sql}")
+  }
+
+  def literalInt(fn: String, arg: Expression): Int =
+    literalLong(fn, arg).toInt
+
+  def literalDouble(fn: String, arg: Expression): Double = arg match {
+    case Literal(v: Double, DoubleType) => v
+    case Literal(v: Decimal, _) => v.toDouble
+    case Literal(v: Int, IntegerType) => v.toDouble
+    case other => throw new IllegalArgumentException(
+      s"$fn: argument must be a numeric literal, got ${other.sql}")
+  }
+
+  /** Extract a foldable string argument (e.g. a normalization form). */
+  def literalString(fn: String, arg: Expression): String = arg match {
+    case Literal(v: UTF8String, StringType) => v.toString
+    case other => throw new IllegalArgumentException(
+      s"$fn: argument must be a string literal, got ${other.sql}")
+  }
+}
+
+/** One row of [[KernelTable]]: how a graft function reaches its static
+  * [[Kernels]] method. The method takes the column arguments, then
+  * `bound`, then the params.
+  *
+  * @param sqlName    the registered SQL name; None for facade-only rows
+  * @param inputs     the column types the method's unsafe reads expect,
+  *                   enforced at analysis (see [[KernelCall]])
+  * @param result     the result type, from the input types
+  * @param nullResult the method can return null for non-null input (its
+  *                   primitive results are then boxed; no other row's are)
+  * @param bound      constants the row fixes (hmac's JCA name, the
+  *                   centroid axis) */
+final class Kernel(
+    val sqlName: Option[String],
+    val method: String,
+    val inputs: Seq[DataType],
+    val result: Seq[DataType] => DataType,
+    val nullResult: Boolean,
+    val bound: Seq[AnyRef],
+    val params: Seq[Param]) extends Serializable {
+
+  /** The name in plans, column names and error messages. */
+  def name: String = sqlName.getOrElse(method)
+
+  /** The row applied to `columns`, with one value per param. */
+  def call(columns: Seq[Expression], values: Seq[Any] = Nil): Expression = {
+    require(values.length == params.length, s"$name takes ${params.length} constant(s)")
+    val consts = params.zip(values).flatMap { case (p, v) =>
+      val k = p.check.applyOrElse(v, (_: Any) => throw new IllegalArgumentException(
+        s"$name: ${p.name} must be ${p.rule}, got $v"))
+      if (p.toKernel) Some(k) else None
+    }
+    KernelCall(this, bound ++ consts, columns.toIndexedSeq)
+  }
+
+  /** The SQL form: the columns, then each param as a literal. */
+  def sqlBuilder(args: Seq[Expression]): Expression = {
+    val n = inputs.length
+    if (args.length < n + params.count(_.default.isEmpty) || args.length > n + params.length)
+      throw new IllegalArgumentException(s"$name: wrong number of arguments (${args.length})")
+    call(args.take(n), params.zipWithIndex.map { case (p, i) =>
+      args.lift(n + i).map(p.literal(name, _)).getOrElse(p.default.get)
+    })
+  }
+}
+
+/** The one scaffold for every [[KernelTable]] row: `kernel` applied to
+  * `children`, its constants already checked. Generated code makes one
+  * static `graft.functions.Kernels` call per row inside whole-stage
+  * codegen, after the standard null short-circuit over the inputs;
+  * interpreted eval reaches the same method by reflection.
+  *
+  * The type guard: an argument of another type than the row declares is
+  * widened by a Catalyst Cast when that is an up-cast (int to bigint,
+  * array<int> to array<double>) or a decimal into a double (SQL parses a
+  * literal such as 1.5 as a DECIMAL); any other type fails analysis
+  * naming the row, so no kernel reads a column its unsafe reads do not
+  * expect. Catalyst's implicit casts are not used because under ANSI
+  * they also narrow (array<double> to array<float>). */
+case class KernelCall(kernel: Kernel, consts: Seq[AnyRef], children: IndexedSeq[Expression])
+  extends Expression {
 
   override def nullIntolerant: Boolean = true
-
-  override def dataType: DataType = DoubleType
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    Kernels.cosineF(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.Kernels.cosineF($a, $b)")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): CosineSimilarity =
-    copy(left = l, right = r)
-}
-
-/** dot_product_d(array<double>, array<double>) -> double — the exact
-  * sequential left fold `aggregate(zip_with(a, b, (x, y) -> x * y), 0D,
-  * (acc, e) -> acc + e)` as ONE codegen call: same IEEE addition order,
-  * same null semantics (null input, length mismatch, or a null element
-  * all yield NULL — zip_with pads the shorter side with nulls and the
-  * fold absorbs them), none of the higher-order-function machinery.
-  * HOFs are CodegenFallback: each row pays interpreted lambda eval plus
-  * an intermediate products array — the a11/a13/a18 ADC/PQ hot path
-  * measured 2-3x slower than this kernel on the same arithmetic. */
-case class DotProductD(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  override def nullable: Boolean = true
-
-  // Analysis-time type guard: the kernel reads via unsafe getDouble, so a
-  // mistyped argument must fail resolution, not yield garbage.
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    Kernels.checkArrayArgs("dot_product_d", left, DoubleType, right, DoubleType)
-
-  override def dataType: DataType = DoubleType
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    Kernels.dotD(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => s"""
-      java.lang.Double ${ev.value}_r = graft.functions.Kernels.dotD($a, $b);
-      if (${ev.value}_r == null) { ${ev.isNull} = true; }
-      else { ${ev.value} = ${ev.value}_r.doubleValue(); }
-    """)
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): DotProductD =
-    copy(left = l, right = r)
-}
-
-/** zip_eq_count(array<bigint>, array<bigint>) -> int — the exact value
-  * of `aggregate(zip_with(a, b, (x, y) -> IF(x = y, 1, 0)), 0, (acc, v)
-  * -> acc + v)`: equal positions count 1; a null element, or a position
-  * only one side has (zip_with pads the shorter side with nulls), makes
-  * `x = y` NULL and IF(NULL,...) takes the 0 branch — so the count runs
-  * over the common prefix and the result is never null for non-null
-  * inputs. The d09 signature-agreement hot path (128 positions per
-  * candidate pair through interpreted HOF eval before this). */
-case class ZipEqCount(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  override def nullIntolerant: Boolean = true
-
-  // Analysis-time type guard (unsafe getLong reads in the kernel).
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    Kernels.checkArrayArgs("zip_eq_count", left, LongType, right, LongType)
-
-  override def dataType: DataType = IntegerType
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    Kernels.zipEqCount(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.Kernels.zipEqCount($a, $b)")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): ZipEqCount =
-    copy(left = l, right = r)
-}
-
-/** dot_product_fd(array<float>, array<double>) -> double — the float-
-  * corpus variant of [[DotProductD]]: each float widens exactly to
-  * double before the multiply, replicating `zip_with(f, d, (x, y) ->
-  * x * y)`'s implicit cast, same fold order and null semantics. The
-  * a03/a08 hyperplane-signature hot path (16-64 planes per row). */
-case class FloatDotProductD(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  override def nullable: Boolean = true
-
-  // Analysis-time type guard (unsafe getFloat/getDouble reads in the
-  // kernel — array<double> on the float side would silently read wrong).
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    Kernels.checkArrayArgs("dot_product_fd", left, FloatType, right, DoubleType)
-
-  override def dataType: DataType = DoubleType
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    Kernels.dotFD(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => s"""
-      java.lang.Double ${ev.value}_r = graft.functions.Kernels.dotFD($a, $b);
-      if (${ev.value}_r == null) { ${ev.isNull} = true; }
-      else { ${ev.value} = ${ev.value}_r.doubleValue(); }
-    """)
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): FloatDotProductD =
-    copy(left = l, right = r)
-}
-
-/** json_extract_scalar(json, path) -> string — Presto semantics: text of
-  * a true JSON SCALAR at the path, NULL for objects/arrays/JSON-null/
-  * misses/malformed input. Type-classified on the parsed node (see
-  * Kernels.jsonExtractScalar), unlike get_json_object whose text output
-  * can't distinguish a string scalar that LOOKS like JSON. */
-case class JsonExtractScalar(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  override def nullIntolerant: Boolean = true
-
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-
-  override protected def nullSafeEval(json: Any, path: Any): Any =
-    Kernels.jsonExtractScalar(json.asInstanceOf[UTF8String],
-      path.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (j, p) => s"""
-      ${ev.value} = graft.functions.Kernels.jsonExtractScalar($j, $p);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): JsonExtractScalar =
-    copy(left = l, right = r)
-}
-
-/** minhash_sig(array<string>, k) -> array<bigint> */
-case class MinHashSignature(child: Expression, k: Int)
-  extends UnaryExpression {
-
-  override def nullIntolerant: Boolean = true
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override protected def nullSafeEval(in: Any): Any =
-    Kernels.minhash(in.asInstanceOf[ArrayData], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.minhash($c, $k)")
-
-  override protected def withNewChildInternal(c: Expression): MinHashSignature =
-    copy(child = c)
-}
-
-/** winnow_fps(array<string>, w) -> array<bigint> — distinct w-window
-  * minima of per-shingle hash64 values (the MOSS fingerprint set). */
-case class WinnowFingerprints(child: Expression, w: Int)
-  extends UnaryExpression {
-
-  override def nullIntolerant: Boolean = true
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override protected def nullSafeEval(in: Any): Any =
-    Kernels.winnow(in.asInstanceOf[ArrayData], w)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.winnow($c, $w)")
-
-  override protected def withNewChildInternal(c: Expression): WinnowFingerprints =
-    copy(child = c)
-}
-
-/** shingle_hash64(array<string> words, k) -> array<bigint> — per-position
-  * k-word shingle hash64s (see [[Kernels.shingleHash64]]). */
-case class ShingleHash64(child: Expression, k: Int)
-  extends UnaryExpression {
-
-  override def nullIntolerant: Boolean = true
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override protected def nullSafeEval(in: Any): Any =
-    Kernels.shingleHash64(in.asInstanceOf[ArrayData], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.shingleHash64($c, $k)")
-
-  override protected def withNewChildInternal(c: Expression): ShingleHash64 =
-    copy(child = c)
-}
-
-/** simhash64(array<string>) -> bigint */
-case class SimHash64(child: Expression)
-  extends UnaryExpression {
-
-  override def nullIntolerant: Boolean = true
-
-  override def dataType: DataType = LongType
-
-  override protected def nullSafeEval(in: Any): Any =
-    Kernels.simhash(in.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.simhash($c)")
-
-  override protected def withNewChildInternal(c: Expression): SimHash64 =
-    copy(child = c)
-}
-
-/** hash64(string, seed) -> bigint — FNV-1a64 + splitmix64 finalizer.
-  * The building block of graft's order-independent checksum aggregate
-  * (Presto's checksum(): bit_xor of per-row hash64). */
-case class Hash64(child: Expression, seed: Long)
-  extends UnaryExpression {
-
-  override def nullIntolerant: Boolean = true
-
-  override def dataType: DataType = LongType
-
-  override protected def nullSafeEval(in: Any): Any =
-    Kernels.hash64(in.asInstanceOf[UTF8String], seed)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.hash64($c, ${seed}L)")
-
-  override protected def withNewChildInternal(c: Expression): Hash64 =
-    copy(child = c)
-}
-
-/** hashed_ngram_buckets(array<string> words, seed, bits) -> array<bigint>
-  * — fused "u "-marked unigram + "b "-marked bigram feature buckets
-  * (hashing trick, 2^bits buckets); see [[Kernels.hashedNgramBuckets]].
-  * The t25 DSIR featurizer's hot path. */
-case class HashedNgramBuckets(child: Expression, seed: Long, bits: Int)
-  extends UnaryExpression {
-
-  override def nullIntolerant: Boolean = true
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override protected def nullSafeEval(in: Any): Any =
-    Kernels.hashedNgramBuckets(in.asInstanceOf[ArrayData], seed, bits)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.Kernels.hashedNgramBuckets($c, ${seed}L, $bits)")
-
-  override protected def withNewChildInternal(c: Expression): HashedNgramBuckets =
-    copy(child = c)
-}
-
-/** hashed_ngram_score(array<string> words, seed) ->
-  * struct<n_feat: int, score_sum: bigint> — fused hashed-linear
-  * classifier score (t23); see [[Kernels.hashedNgramScore]]. */
-case class HashedNgramScore(child: Expression, seed: Long)
-  extends UnaryExpression {
-
-  override def nullIntolerant: Boolean = true
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_feat", IntegerType, nullable = false),
-    StructField("score_sum", LongType, nullable = false)))
-
-  override protected def nullSafeEval(in: Any): Any =
-    Kernels.hashedNgramScore(in.asInstanceOf[ArrayData], seed)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.Kernels.hashedNgramScore($c, ${seed}L)")
-
-  override protected def withNewChildInternal(c: Expression): HashedNgramScore =
-    copy(child = c)
-}
-
-/** fingerprint64(string) -> bigint (normalized rolling hash) */
-case class RollingFingerprint(child: Expression)
-  extends UnaryExpression {
-
-  override def nullIntolerant: Boolean = true
-
-  override def dataType: DataType = LongType
-
-  override protected def nullSafeEval(in: Any): Any =
-    Kernels.fingerprint(in.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.fingerprint($c)")
-
-  override protected def withNewChildInternal(c: Expression): RollingFingerprint =
-    copy(child = c)
-}
-
-/** hamming64(bigint, bigint) -> int */
-case class Hamming64(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  override def nullIntolerant: Boolean = true
-
-  override def dataType: DataType = IntegerType
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    Kernels.hamming64(a.asInstanceOf[Long], b.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.Kernels.hamming64($a, $b)")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Hamming64 =
-    copy(left = l, right = r)
-}
-
-/** bing_tile_quadkey(lat, lon, zoom) -> string — Presto's
-  * bing_tile_at + bing_tile_quadkey composed; zoom bounded to Presto's
-  * 1..23 (quadkey length = zoom). */
-case class BingTileQuadkey(left: Expression, right: Expression, zoom: Int)
-  extends BinaryExpression {
-
-  require(zoom >= 1 && zoom <= 23,
-    s"bing_tile_quadkey: zoom must be in [1, 23], got $zoom")
-
-  override def nullIntolerant: Boolean = true
-
-  override def dataType: DataType = StringType
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    Kernels.bingTileQuadkey(a.asInstanceOf[Double], b.asInstanceOf[Double], zoom)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.Kernels.bingTileQuadkey($a, $b, $zoom)")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): BingTileQuadkey =
-    copy(left = l, right = r)
-}
-
-/** normalize_unicode(string, NFC|NFD|NFKC|NFKD) -> string — Presto
-  * 0.248's normalize(string, form) (presto-docs string functions; default
-  * form NFC). Codegen-native: one static call per row, the common
-  * already-normalized case returns the input without allocating, and the
-  * expression stays inside the scan stage's whole-stage-codegen span —
-  * the property that matters when this runs as the first cleaning step
-  * over 100 TB of crawl text. */
-case class NormalizeUnicode(child: Expression, form: String)
-  extends UnaryExpression {
-
-  require(Set("NFC", "NFD", "NFKC", "NFKD")(form),
-    s"normalize_unicode: form must be NFC|NFD|NFKC|NFKD, got $form")
-
-  override def nullIntolerant: Boolean = true
-
-  override def dataType: DataType = StringType
-
-  private lazy val f = java.text.Normalizer.Form.valueOf(form)
-
-  override protected def nullSafeEval(in: Any): Any =
-    Kernels.normalizeUtf8(in.asInstanceOf[UTF8String], f)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.Kernels.normalizeUtf8($c, java.text.Normalizer.Form.$form)")
-
-  override protected def withNewChildInternal(c: Expression): NormalizeUnicode =
-    copy(child = c)
-}
-
-/** haversine_km(lat1, lon1, lat2, lon2) -> double — great-circle
-  * distance in km (Presto great_circle_distance). */
-case class HaversineKm(first: Expression, second: Expression,
-                       third: Expression, fourth: Expression)
-  extends QuaternaryExpression {
-
-  override def nullIntolerant: Boolean = true
-
-  override def dataType: DataType = DoubleType
-
-  override protected def nullSafeEval(a: Any, b: Any, c: Any, d: Any): Any =
-    Kernels.haversineKm(a.asInstanceOf[Double], b.asInstanceOf[Double],
-      c.asInstanceOf[Double], d.asInstanceOf[Double])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b, c, d) =>
-      s"graft.functions.Kernels.haversineKm($a, $b, $c, $d)")
+  override def foldable: Boolean = children.forall(_.foldable)
+  override def nullable: Boolean = kernel.nullResult || children.exists(_.nullable)
+  override def dataType: DataType = kernel.result(args.map(_.dataType))
+  override def prettyName: String = kernel.name
+  override protected def stringArgs: Iterator[Any] = children.iterator ++ consts.iterator
+
+  /** The children as the kernel reads them (see the class doc). */
+  @transient private lazy val args: IndexedSeq[Expression] =
+    children.zip(kernel.inputs).map {
+      case (c, t) if DataTypeUtils.sameType(c.dataType, t) => c
+      case (c, t) => Cast(c, t, Option(SQLConf.get.sessionLocalTimeZone))
+    }
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (children.map(_.dataType).corresponds(kernel.inputs)((c, t) =>
+        DataTypeUtils.sameType(c, t) || Cast.canUpCast(c, t) ||
+          (c.isInstanceOf[DecimalType] && t == DoubleType)))
+      TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"${kernel.name} requires (${kernel.inputs.map(_.simpleString).mkString(", ")}), " +
+        s"got (${children.map(_.dataType.catalogString).mkString(", ")})")
+
+  @transient private lazy val method = Kernels.getClass.getMethod(kernel.method,
+    kernel.inputs.map(CodeGenerator.javaClass) ++ consts.map(KernelCall.jvmClass): _*)
+
+  override def eval(input: InternalRow): Any = {
+    val values = new Array[AnyRef](args.length + consts.length)
+    var i = 0
+    while (i < args.length) {
+      val v = args(i).eval(input)
+      if (v == null) return null
+      values(i) = v.asInstanceOf[AnyRef]
+      i += 1
+    }
+    consts.copyToArray(values, args.length)
+    try method.invoke(Kernels, values: _*)
+    catch { case e: java.lang.reflect.InvocationTargetException => throw e.getCause }
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val gens = args.map(_.genCode(ctx))
+    val call = (gens.map(_.value.toString) ++ consts.map(KernelCall.javaLiteral))
+      .mkString(s"graft.functions.Kernels.${kernel.method}(", ", ", ")")
+    val javaType = CodeGenerator.javaType(dataType)
+    if (!nullable) {
+      ev.copy(code = code"""
+        ${gens.map(_.code.toString).mkString("\n")}
+        $javaType ${ev.value} = $call;""", isNull = FalseLiteral)
+    } else {
+      val result =
+        if (!kernel.nullResult) s"${ev.isNull} = false;\n${ev.value} = $call;"
+        else if (CodeGenerator.isPrimitiveType(dataType)) {
+          val boxed = ctx.freshName("boxed")
+          s"""${CodeGenerator.boxedType(dataType)} $boxed = $call;
+             |${ev.isNull} = $boxed == null;
+             |if (!${ev.isNull}) { ${ev.value} = $boxed.${javaType}Value(); }""".stripMargin
+        } else s"${ev.value} = $call;\n${ev.isNull} = ${ev.value} == null;"
+      val body = args.zip(gens).foldRight(result) { case ((c, g), inner) =>
+        g.code.toString + "\n" + ctx.nullSafeExec(c.nullable, g.isNull.toString)(inner)
+      }
+      ev.copy(code = code"""
+        boolean ${ev.isNull} = true;
+        $javaType ${ev.value} = ${CodeGenerator.defaultValue(dataType)};
+        $body""")
+    }
+  }
 
   override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression, q: Expression): HaversineKm =
-    copy(first = f, second = s, third = t, fourth = q)
+      newChildren: IndexedSeq[Expression]): KernelCall = copy(children = newChildren)
 }
 
-/** point_in_polygon(px, py, xs array<double>, ys array<double>) ->
-  * boolean — ray casting against a closed ring (Presto ST_Contains,
-  * point-in-ring case). */
-case class PointInPolygon(first: Expression, second: Expression,
-                          third: Expression, fourth: Expression)
-  extends QuaternaryExpression {
+object KernelCall {
+  private def jvmClass(v: AnyRef): Class[_] = v match {
+    case _: java.lang.Integer => java.lang.Integer.TYPE
+    case _: java.lang.Long => java.lang.Long.TYPE
+    case _: java.lang.Boolean => java.lang.Boolean.TYPE
+    case o => o.getClass
+  }
 
-  override def nullIntolerant: Boolean = true
+  private def javaLiteral(v: AnyRef): String = v match {
+    case l: java.lang.Long => s"${l}L"
+    case s: String => "\"" + s + "\""
+    case f: java.text.Normalizer.Form => s"java.text.Normalizer.Form.$f"
+    case o => o.toString
+  }
+}
 
-  override def dataType: DataType = BooleanType
+/**
+ * The kernel table: every graft scalar function that is one static
+ * [[Kernels]] call is a row here, expanded by the one [[KernelCall]]
+ * scaffold. `GraftFunctions` builds the SQL surface and the typed Column
+ * facade from these rows, and ExpressionsSpec walks them for the
+ * codegen-vs-interpreted parity pin. A new kernel is a `Kernels` method
+ * plus one row.
+ *
+ * A row's doc gives what its kernel's doc does not: the SQL semantics it
+ * serves and why it is a kernel at all.
+ */
+object KernelTable {
+  import Param.{literalLong, literalString}
 
-  override protected def nullSafeEval(a: Any, b: Any, c: Any, d: Any): Any =
-    Kernels.pointInPolygon(a.asInstanceOf[Double], b.asInstanceOf[Double],
-      c.asInstanceOf[ArrayData], d.asInstanceOf[ArrayData])
+  private val rows = scala.collection.mutable.ArrayBuffer.empty[Kernel]
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b, c, d) =>
-      s"graft.functions.Kernels.pointInPolygon($a, $b, $c, $d)")
+  /** Every row, in declaration order. */
+  def all: Seq[Kernel] = rows.toSeq
 
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression, q: Expression): PointInPolygon =
-    copy(first = f, second = s, third = t, fourth = q)
+  private def row(sqlName: Option[String], method: String, inputs: Seq[DataType],
+                  result: Seq[DataType] => DataType, nullResult: Boolean = false,
+                  bound: Seq[AnyRef] = Nil, params: Seq[Param] = Nil): Kernel = {
+    val k = new Kernel(sqlName, method, inputs, result, nullResult, bound, params)
+    rows += k
+    k
+  }
+
+  private val floats = ArrayType(FloatType)
+  private val doubles = ArrayType(DoubleType)
+  private val longs = ArrayType(LongType)
+  private val strings = ArrayType(StringType)
+  private val longsOut = ArrayType(LongType, containsNull = false)
+  private val stringsOut = ArrayType(StringType, containsNull = false)
+  private val ring = Seq(doubles, doubles)
+
+  /** The first input array's containsNull: kernels that copy or map
+    * elements through keep their nulls, so the declared result must
+    * admit them. */
+  private def nullsOf(inputs: Seq[DataType]): Boolean =
+    inputs.head.asInstanceOf[ArrayType].containsNull
+
+  private val seed = Param("seed", literalLong)
+
+  /** Cosine of two float vectors. */
+  val cosineSim = row(Some("cosine_sim"), "cosineF", Seq(floats, floats), _ => DoubleType)
+
+  /** dot_product_d: the exact sequential left fold `aggregate(zip_with(a,
+    * b, (x, y) -> x * y), 0D, (acc, e) -> acc + e)` as ONE codegen call:
+    * same IEEE addition order, same null semantics (null input, length
+    * mismatch, or a null element all yield NULL — zip_with pads the
+    * shorter side with nulls and the fold absorbs them), none of the
+    * higher-order-function machinery. HOFs are CodegenFallback: each row
+    * pays interpreted lambda eval plus an intermediate products array —
+    * the a11/a13/a18 ADC/PQ hot path measured 2-3x slower than this
+    * kernel on the same arithmetic. */
+  val dotD = row(None, "dotD", Seq(doubles, doubles), _ => DoubleType, nullResult = true)
+
+  /** dot_product_fd: the float-corpus variant of [[dotD]], replicating
+    * `zip_with(f, d, (x, y) -> x * y)`'s implicit cast. The a03/a08
+    * hyperplane-signature hot path (16-64 planes per row). */
+  val dotFD = row(None, "dotFD", Seq(floats, doubles), _ => DoubleType, nullResult = true)
+
+  /** zip_eq_count: the exact value of `aggregate(zip_with(a, b, (x, y) ->
+    * IF(x = y, 1, 0)), 0, (acc, v) -> acc + v)` — a null element, or a
+    * position only one side has, makes `x = y` NULL and IF takes the 0
+    * branch, so the result is never null for non-null inputs. The d09
+    * signature-agreement hot path (128 positions per candidate pair
+    * through interpreted HOF eval before this). */
+  val zipEqCount = row(None, "zipEqCount", Seq(longs, longs), _ => IntegerType)
+
+  /** Presto json_extract_scalar: NULL for non-scalar matches (objects,
+    * arrays) where Spark's get_json_object returns their JSON text. */
+  val jsonExtractScalar = row(Some("json_extract_scalar"), "jsonExtractScalar",
+    Seq(StringType, StringType), _ => StringType, nullResult = true)
+
+  val minhashSig = row(Some("minhash_sig"), "minhash", Seq(strings), _ => longsOut,
+    params = Seq(Param("k")))
+
+  val winnowFps = row(Some("winnow_fps"), "winnow", Seq(strings), _ => longsOut,
+    params = Seq(Param("w")))
+
+  val shingleHash64 = row(Some("shingle_hash64"), "shingleHash64", Seq(strings),
+    _ => longsOut, params = Seq(Param("k")))
+
+  val simhash64 = row(Some("simhash64"), "simhash", Seq(strings), _ => LongType)
+
+  /** The building block of graft's order-independent checksum aggregate
+    * (Presto's checksum(): bit_xor of per-row hash64). */
+  val hash64 = row(Some("hash64"), "hash64", Seq(StringType), _ => LongType,
+    params = Seq(Param("seed", literalLong, default = Some(0L))))
+
+  /** The t25 DSIR featurizer's hot path. */
+  val hashedNgramBuckets = row(Some("hashed_ngram_buckets"), "hashedNgramBuckets",
+    Seq(strings), _ => longsOut, params = Seq(seed, Param("bits")))
+
+  /** The t23 quality filter's per-row score. */
+  val hashedNgramScore = row(Some("hashed_ngram_score"), "hashedNgramScore", Seq(strings),
+    _ => StructType(Seq(
+      StructField("n_feat", IntegerType, nullable = false),
+      StructField("score_sum", LongType, nullable = false))),
+    params = Seq(seed))
+
+  val fingerprint64 = row(Some("fingerprint64"), "fingerprint", Seq(StringType), _ => LongType)
+
+  /** Matched by [[graft.plans.SelfHammingRule]]. */
+  val hamming64 = row(Some("hamming64"), "hamming64", Seq(LongType, LongType), _ => IntegerType)
+
+  /** Presto's bing_tile_at + bing_tile_quadkey composed; zoom bounded to
+    * Presto's 1..23 (quadkey length = zoom). */
+  val bingTileQuadkey = row(Some("bing_tile_quadkey"), "bingTileQuadkey",
+    Seq(DoubleType, DoubleType), _ => StringType,
+    params = Seq(Param("zoom", rule = "in [1, 23]",
+      check = { case z: Int if z >= 1 && z <= 23 => Int.box(z) })))
+
+  /** Presto 0.248's normalize(string, form), default NFC. Codegen-native
+    * so it stays inside the scan stage's whole-stage-codegen span — the
+    * property that matters when this runs as the first cleaning step
+    * over 100 TB of crawl text. */
+  val normalizeUnicode = row(Some("normalize_unicode"), "normalizeUtf8", Seq(StringType),
+    _ => StringType, params = Seq(Param("form", literalString, Some("NFC"),
+      "NFC|NFD|NFKC|NFKD", {
+        case f: String if Set("NFC", "NFD", "NFKC", "NFKD")(f) =>
+          java.text.Normalizer.Form.valueOf(f)
+      })))
+
+  /** Presto great_circle_distance. */
+  val haversineKm = row(Some("haversine_km"), "haversineKm", Seq.fill(4)(DoubleType),
+    _ => DoubleType)
+
+  /** Presto ST_Contains, point-in-ring case. */
+  val pointInPolygon = row(Some("point_in_polygon"), "pointInPolygon",
+    Seq(DoubleType, DoubleType, doubles, doubles), _ => BooleanType)
+
+  /** The probe of a bloom_build filter: true is presence-or-false-
+    * positive, so it is a PREFILTER — an exact confirm must follow
+    * wherever false positives matter. */
+  val bloomMightContain = row(Some("bloom_might_contain"), "bloomTest",
+    Seq(BinaryType, StringType), _ => BooleanType, params = Seq(Param("numHashes")))
+
+  /** The one bin function the q115/e12/s09 topologies share with their
+    * oracles' count-of-edges replay. */
+  val edgeBin = row(Some("edge_bin"), "edgeBin", Seq(doubles, DoubleType), _ => IntegerType)
+
+  /** `element_at(edges, sketch_quantile_bin(sk, p))` reads the same
+    * quantile value the DataFrame topology reports. It runs over
+    * already-aggregated sketch rows, never the corpus. */
+  val sketchQuantileBin = row(Some("sketch_quantile_bin"), "sketchQuantileBin",
+    Seq(longs, DoubleType), _ => IntegerType)
+
+  /** Presto ST_Area, polygon-shell case. */
+  val stArea = row(Some("st_area"), "ringArea", ring, _ => DoubleType)
+
+  /** Presto ST_Length / ST_Perimeter core. */
+  val stLength = row(Some("st_length"), "ringLength", ring, _ => DoubleType)
+
+  /** Presto ST_X(ST_Centroid(g)) and ST_Y(ST_Centroid(g)). */
+  val stCentroidX = row(Some("st_centroid_x"), "ringCentroid", ring, _ => DoubleType,
+    bound = Seq(Int.box(0)))
+  val stCentroidY = row(Some("st_centroid_y"), "ringCentroid", ring, _ => DoubleType,
+    bound = Seq(Int.box(1)))
+
+  /** The t21 trainer's per-iteration hot path, codegen-native so the
+    * vocabulary-sized merge application stays inside whole-stage codegen
+    * (the lambda-HOF fold form pays interpreted eval per symbol). */
+  val bpeMerge = row(Some("bpe_merge"), "bpeMerge", Seq.fill(3)(StringType), _ => StringType)
+
+  /** The parsed geometry: the same (xs, ys) closed-ring / vertex-list
+    * convention as st_area / st_length / point_in_polygon. */
+  private val geometryType = StructType(Seq(
+    StructField("gtype", StringType, nullable = false),
+    StructField("xs", ArrayType(DoubleType, containsNull = false), nullable = false),
+    StructField("ys", ArrayType(DoubleType, containsNull = false), nullable = false)))
+
+  /** Presto ST_GeometryFromText, null on malformed input: one call per
+    * row inside whole-stage codegen, so a 100 TB WKT column parses in
+    * the scan projection. */
+  val stGeometryFromText = row(Some("st_geometry_from_text"), "wktParse", Seq(StringType),
+    _ => geometryType, nullResult = true)
+
+  /** Presto ST_Area over a multi-ring polygon. */
+  val stAreaWkt = row(Some("st_area_wkt"), "stAreaWkt", Seq(StringType), _ => DoubleType,
+    nullResult = true)
+
+  /** Presto ST_Contains, polygon-with-holes case. */
+  val stContainsWkt = row(Some("st_contains_wkt"), "stContainsWkt",
+    Seq(StringType, DoubleType, DoubleType), _ => BooleanType, nullResult = true)
+
+  val stNumInteriorRings = row(Some("st_num_interior_rings"), "stNumInteriorRings",
+    Seq(StringType), _ => IntegerType, nullResult = true)
+
+  val stNumGeometries = row(Some("st_num_geometries"), "stNumGeometries", Seq(StringType),
+    _ => IntegerType, nullResult = true)
+
+  /** Presto ST_AsText, the inverse of st_geometry_from_text. */
+  val stAsText = row(Some("st_as_text"), "wktText", Seq(StringType, doubles, doubles),
+    _ => StringType, nullResult = true)
+
+  /** Presto word_stem: only the default 'en' stemmer is served, so the
+    * 2-arg form refuses any other language loudly. */
+  val wordStem = row(Some("word_stem"), "porterStem", Seq(StringType), _ => StringType,
+    params = Seq(Param("lang", literalString, Some("en"), "'en'",
+      { case "en" => "en" }, toKernel = false)))
+
+  /** Presto's user-facing ngrams(). The hashed-n-gram kernels remain the
+    * shuffle-narrow scale path; this is the exploratory SQL surface. */
+  val ngrams = row(Some("ngrams"), "ngrams", Seq(strings),
+    in => ArrayType(ArrayType(StringType, nullsOf(in)), containsNull = false),
+    params = Seq(Param("n", rule = ">= 1", check = { case n: Int if n >= 1 => Int.box(n) })))
+
+  // Presto's keyed digest family: data first, key second, like Presto.
+  Seq("hmac_md5" -> "HmacMD5", "hmac_sha1" -> "HmacSHA1",
+      "hmac_sha256" -> "HmacSHA256", "hmac_sha512" -> "HmacSHA512").foreach {
+    case (sql, algo) =>
+      row(Some(sql), "hmac", Seq(BinaryType, BinaryType), _ => BinaryType, bound = Seq(algo))
+  }
+
+  // The fold/transform rows below replace CodegenFallback higher-order
+  // functions on corpus-per-row paths. Each kernel's doc states the exact
+  // expression it replicates; ExpressionsSpec pins bit-for-bit parity
+  // with it (nulls, NaN, mismatch).
+
+  val maxAbsF = row(None, "maxAbsF", Seq(floats), _ => DoubleType)
+
+  val quantizeI8 = row(None, "quantizeI8", Seq(floats, DoubleType),
+    in => ArrayType(LongType, nullsOf(in)))
+
+  val longArraySum = row(None, "sumLong", Seq(longs), _ => LongType, nullResult = true,
+    params = Seq(Param("abs", rule = "a boolean", check = { case b: Boolean => Boolean.box(b) })))
+
+  val quantErrSq = row(None, "quantErrSq", Seq(floats, longs, DoubleType), _ => DoubleType,
+    nullResult = true)
+
+  val scaleLongs = row(None, "scaleLongs", Seq(longs, DoubleType),
+    in => ArrayType(DoubleType, nullsOf(in)))
+
+  val floatsToDoubles = row(None, "floatsToDoubles", Seq(floats),
+    in => ArrayType(DoubleType, nullsOf(in)))
+
+  val shingles3 = row(None, "shingles3", Seq(strings), _ => stringsOut)
+
+  val minhashWords3 = row(None, "minhashWords3", Seq(strings), _ => longsOut,
+    params = Seq(Param("k")))
+
+  val winnowWords3 = row(None, "winnowWords3", Seq(strings), _ => longsOut,
+    params = Seq(Param("w")))
+
+  val chunkLongs = row(None, "chunkLongs", Seq(longs),
+    in => ArrayType(ArrayType(LongType, nullsOf(in)), containsNull = false),
+    params = Seq(Param("size")))
+
+  val bigramPairs = row(None, "bigramPairs", Seq(strings), _ => ArrayType(
+    StructType(Seq(StructField("w1", StringType), StructField("w2", StringType))),
+    containsNull = false))
+
+  val bigramStrings = row(None, "bigramStrings", Seq(strings), _ => ArrayType(StringType))
+
+  val blocks16 = row(None, "blocks16", Seq(LongType), _ => longsOut)
+
+  val wordGrams = row(None, "wordGrams", Seq(strings), _ => stringsOut,
+    params = Seq(Param("k")))
 }
 
 /**
@@ -2150,27 +2169,6 @@ case class BloomFilterBuild(
     copy(inputAggBufferOffset = newOffset)
   override protected def withNewChildInternal(c: Expression): BloomFilterBuild =
     copy(child = c)
-}
-
-/** bloom_might_contain(binary, string) -> boolean — codegen'd probe
-  * against a [[BloomFilterBuild]] filter: false is definite absence,
-  * true is presence-or-false-positive, so it is a PREFILTER — an exact
-  * confirm must follow wherever false positives matter. */
-case class BloomMightContain(left: Expression, right: Expression, numHashes: Int)
-  extends BinaryExpression {
-
-  override def nullIntolerant: Boolean = true
-
-  override def dataType: DataType = BooleanType
-
-  override protected def nullSafeEval(bloom: Any, v: Any): Any =
-    Kernels.bloomTest(bloom.asInstanceOf[Array[Byte]], v.asInstanceOf[UTF8String], numHashes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (b, v) => s"graft.functions.Kernels.bloomTest($b, $v, $numHashes)")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): BloomMightContain =
-    copy(left = l, right = r)
 }
 
 /**
@@ -2313,51 +2311,6 @@ case class QuantileSketchMerge(
     copy(child = c)
 }
 
-/** edge_bin(array<double> edges, x) -> int — the histogram-sketch bin
-  * decision (see [[Kernels.edgeBin]]): count of sorted edges <= x,
-  * clamped to >= 1, by codegen binary search. The one bin function the
-  * q115/e12/s09 topologies share with their oracles' count-of-edges
-  * replay. */
-case class EdgeBin(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = IntegerType
-
-  override protected def nullSafeEval(edges: Any, x: Any): Any =
-    Kernels.edgeBin(edges.asInstanceOf[ArrayData], x.asInstanceOf[Double])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (e, x) => s"graft.functions.Kernels.edgeBin($e, $x)")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): EdgeBin =
-    copy(left = l, right = r)
-}
-
-/** sketch_quantile_bin(array<bigint>, p) -> int — the CDF read of the
-  * histogram sketch: the smallest 1-based bin whose cumulative count
-  * reaches ceil(total * p), exactly the q115 kernel's
-  * `min(bin where cum >= ceil(total * p))` pick (and the DuckDB oracle's
-  * replay of it), so `element_at(edges, sketch_quantile_bin(sk, p))`
-  * reads the same quantile value the DataFrame topology reports.
-  * Codegen'd via the static kernel; runs over already-aggregated sketch
-  * rows, never the corpus. */
-case class SketchQuantileBin(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = IntegerType
-
-  override protected def nullSafeEval(sk: Any, p: Any): Any =
-    Kernels.sketchQuantileBin(sk.asInstanceOf[ArrayData], p.asInstanceOf[Double])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (sk, p) => s"graft.functions.Kernels.sketchQuantileBin($sk, $p)")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): SketchQuantileBin =
-    copy(left = l, right = r)
-}
-
 /** Shared shape for the n-ary geometry predicates (Catalyst ships fixed
   * helpers only up to QuaternaryExpression; segment-segment needs 8
   * doubles, point-segment 6): children all cast to double upstream, one
@@ -2448,662 +2401,4 @@ case class PointSegmentDist(children: IndexedSeq[Expression])
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): PointSegmentDist =
     copy(children = newChildren)
-}
-
-/** st_area(xs array<double>, ys array<double>) -> double — shoelace
-  * area of a closed ring (Presto ST_Area, polygon-shell case); see
-  * [[Kernels.ringArea]]. */
-case class RingArea(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = DoubleType
-
-  override protected def nullSafeEval(xs: Any, ys: Any): Any =
-    Kernels.ringArea(xs.asInstanceOf[ArrayData], ys.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.Kernels.ringArea($a, $b)")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): RingArea =
-    copy(left = l, right = r)
-}
-
-/** st_length(xs array<double>, ys array<double>) -> double — perimeter
-  * of a closed ring (Presto ST_Length/ST_Perimeter core); see
-  * [[Kernels.ringLength]]. */
-case class RingLength(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = DoubleType
-
-  override protected def nullSafeEval(xs: Any, ys: Any): Any =
-    Kernels.ringLength(xs.asInstanceOf[ArrayData], ys.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.Kernels.ringLength($a, $b)")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): RingLength =
-    copy(left = l, right = r)
-}
-
-/** st_centroid_x / st_centroid_y (xs, ys arrays) -> double — one
-  * coordinate of the area-weighted polygon centroid (Presto
-  * ST_X/ST_Y(ST_Centroid(g))); see [[Kernels.ringCentroid]]. */
-case class RingCentroid(left: Expression, right: Expression, axis: Int)
-  extends BinaryExpression {
-  require(axis == 0 || axis == 1, s"ring centroid axis must be 0 (x) or 1 (y), got $axis")
-
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = DoubleType
-
-  override protected def nullSafeEval(xs: Any, ys: Any): Any =
-    Kernels.ringCentroid(xs.asInstanceOf[ArrayData], ys.asInstanceOf[ArrayData], axis)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.Kernels.ringCentroid($a, $b, $axis)")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): RingCentroid =
-    copy(left = l, right = r)
-}
-
-/** bpe_merge(syms, a, b) -> string — one greedy BPE merge pass over a
-  * space-joined symbol string (see [[Kernels.bpeMerge]]); the t21
-  * trainer's per-iteration hot path, codegen-native so the
-  * vocabulary-sized merge application stays inside whole-stage codegen
-  * (the lambda-HOF fold form pays interpreted eval per symbol). */
-case class BpeMerge(first: Expression, second: Expression, third: Expression)
-  extends TernaryExpression {
-
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = StringType
-
-  override protected def nullSafeEval(s: Any, a: Any, b: Any): Any =
-    Kernels.bpeMerge(s.asInstanceOf[UTF8String],
-      a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (s, a, b) => s"graft.functions.Kernels.bpeMerge($s, $a, $b)")
-
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): BpeMerge =
-    copy(first = f, second = s, third = t)
-}
-
-/** st_geometry_from_text(wkt) -> struct(gtype, xs, ys), null on
-  * malformed input — Presto ST_GeometryFromText's POINT / LINESTRING /
-  * single-ring POLYGON subset, parsed straight into the coordinate-array
-  * representation the ring/segment kernels consume (see
-  * [[Kernels.wktParse]] for the grammar and the total-function null
-  * contract). One codegen-native call per row, inside whole-stage
-  * codegen — a 100 TB WKT column parses in the scan projection. */
-case class WktParse(child: Expression) extends UnaryExpression {
-
-  override def nullIntolerant: Boolean = true
-  override def nullable: Boolean = true
-  override def dataType: DataType = WktParse.geometryType
-
-  override protected def nullSafeEval(in: Any): Any =
-    Kernels.wktParse(in.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.Kernels.wktParse($c);
-      if (${ev.value} == null) { ${ev.isNull} = true; }
-    """)
-
-  override protected def withNewChildInternal(c: Expression): WktParse =
-    copy(child = c)
-}
-
-/** st_area_wkt(string) -> double — shoelace area of a WKT POLYGON with
-  * holes subtracted; parse + area in one codegen pass, null on malformed
-  * text (see [[Kernels.stAreaWkt]]). */
-case class StAreaWkt(child: Expression) extends UnaryExpression {
-
-  override def nullIntolerant: Boolean = true
-  override def nullable: Boolean = true
-  override def dataType: DataType = DoubleType
-
-  override protected def nullSafeEval(in: Any): Any =
-    Kernels.stAreaWkt(in.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, { c =>
-      val tmp = ctx.freshName("areaRes")
-      s"""
-      java.lang.Double $tmp = graft.functions.Kernels.stAreaWkt($c);
-      if ($tmp == null) { ${ev.isNull} = true; }
-      else { ${ev.value} = $tmp.doubleValue(); }
-      """
-    })
-
-  override protected def withNewChildInternal(c: Expression): StAreaWkt =
-    copy(child = c)
-}
-
-/** st_contains_wkt(string, x, y) -> boolean — point containment in a WKT
-  * POLYGON honoring holes (in shell, not in any hole); null on malformed
-  * text (see [[Kernels.stContainsWkt]]). */
-case class StContainsWkt(first: Expression, second: Expression,
-                         third: Expression)
-  extends TernaryExpression {
-
-  override def nullIntolerant: Boolean = true
-  override def nullable: Boolean = true
-  override def dataType: DataType = BooleanType
-
-  override protected def nullSafeEval(w: Any, x: Any, y: Any): Any =
-    Kernels.stContainsWkt(w.asInstanceOf[UTF8String],
-      x.asInstanceOf[Double], y.asInstanceOf[Double])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, { (w, x, y) =>
-      val tmp = ctx.freshName("containsRes")
-      s"""
-      java.lang.Boolean $tmp = graft.functions.Kernels.stContainsWkt($w, $x, $y);
-      if ($tmp == null) { ${ev.isNull} = true; }
-      else { ${ev.value} = $tmp.booleanValue(); }
-      """
-    })
-
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): StContainsWkt =
-    copy(first = f, second = s, third = t)
-}
-
-/** st_num_interior_rings(string) -> int — hole count of a WKT POLYGON
-  * (Presto ST_NumInteriorRing); null on malformed text. */
-case class StNumInteriorRings(child: Expression) extends UnaryExpression {
-
-  override def nullIntolerant: Boolean = true
-  override def nullable: Boolean = true
-  override def dataType: DataType = IntegerType
-
-  override protected def nullSafeEval(in: Any): Any =
-    Kernels.stNumInteriorRings(in.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, { c =>
-      val tmp = ctx.freshName("nringsRes")
-      s"""
-      java.lang.Integer $tmp = graft.functions.Kernels.stNumInteriorRings($c);
-      if ($tmp == null) { ${ev.isNull} = true; }
-      else { ${ev.value} = $tmp.intValue(); }
-      """
-    })
-
-  override protected def withNewChildInternal(c: Expression): StNumInteriorRings =
-    copy(child = c)
-}
-
-/** st_num_geometries(string) -> int — part count of a WKT POLYGON /
-  * MULTIPOLYGON (Presto ST_NumGeometries); null on malformed text. */
-case class StNumGeometries(child: Expression) extends UnaryExpression {
-
-  override def nullIntolerant: Boolean = true
-  override def nullable: Boolean = true
-  override def dataType: DataType = IntegerType
-
-  override protected def nullSafeEval(in: Any): Any =
-    Kernels.stNumGeometries(in.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, { c =>
-      val tmp = ctx.freshName("ngeomRes")
-      s"""
-      java.lang.Integer $tmp = graft.functions.Kernels.stNumGeometries($c);
-      if ($tmp == null) { ${ev.isNull} = true; }
-      else { ${ev.value} = $tmp.intValue(); }
-      """
-    })
-
-  override protected def withNewChildInternal(c: Expression): StNumGeometries =
-    copy(child = c)
-}
-
-object WktParse {
-  /** The parsed-geometry struct: the same (xs, ys) closed-ring /
-    * vertex-list convention as st_area / st_length / point_in_polygon. */
-  val geometryType: StructType = StructType(Seq(
-    StructField("gtype", StringType, nullable = false),
-    StructField("xs", ArrayType(DoubleType, containsNull = false), nullable = false),
-    StructField("ys", ArrayType(DoubleType, containsNull = false), nullable = false)))
-}
-
-/** st_as_text(gtype, xs, ys) -> string — Presto ST_AsText; the exact
-  * inverse of [[WktParse]] (shortest-round-trip double text). Null on
-  * tags/shapes outside the subset. */
-case class WktText(first: Expression, second: Expression, third: Expression)
-  extends TernaryExpression {
-
-  override def nullIntolerant: Boolean = true
-  override def nullable: Boolean = true
-  override def dataType: DataType = StringType
-
-  override protected def nullSafeEval(t: Any, xs: Any, ys: Any): Any =
-    Kernels.wktText(t.asInstanceOf[UTF8String],
-      xs.asInstanceOf[ArrayData], ys.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b, c) => s"""
-      ${ev.value} = graft.functions.Kernels.wktText($a, $b, $c);
-      if (${ev.value} == null) { ${ev.isNull} = true; }
-    """)
-
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): WktText =
-    copy(first = f, second = s, third = t)
-}
-
-/** word_stem(string) -> string — Presto's Porter stemmer (word_stem(x)
-  * with the default 'en' stemmer serves the 1980 Porter algorithm).
-  * Non-lowercase-letter inputs pass through unchanged, like Presto's
-  * behavior on non-words. */
-case class WordStem(child: Expression) extends UnaryExpression {
-
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = StringType
-
-  override protected def nullSafeEval(in: Any): Any =
-    Kernels.porterStem(in.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.porterStem($c)")
-
-  override protected def withNewChildInternal(c: Expression): WordStem =
-    copy(child = c)
-}
-
-/** ngrams(array<string>, n) -> array<array<string>> — Presto's user-facing
-  * ngrams(): every length-n sliding window; n >= length yields one n-gram
-  * holding the whole array (Presto's convention). The hashed-n-gram
-  * KERNELS (hashedNgramBuckets/Score) remain the shuffle-narrow scale
-  * path; this is the exploratory SQL surface. */
-case class NGrams(child: Expression, n: Int) extends UnaryExpression {
-  require(n >= 1, s"ngrams: n must be >= 1, got $n")
-
-  override def nullIntolerant: Boolean = true
-  // inner containsNull mirrors the INPUT array's: ngrams copies elements
-  // verbatim (Presto's convention), so an input that can hold NULL
-  // elements yields grams that can too — declaring false there while
-  // copying nulls would hand codegen a schema it can mis-read
-  override def dataType: DataType = {
-    val inner = child.dataType match {
-      case ArrayType(_, cn) => cn
-      case _ => true
-    }
-    ArrayType(ArrayType(StringType, containsNull = inner), containsNull = false)
-  }
-
-  override protected def nullSafeEval(in: Any): Any =
-    Kernels.ngrams(in.asInstanceOf[ArrayData], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.ngrams($c, $n)")
-
-  override protected def withNewChildInternal(c: Expression): NGrams =
-    copy(child = c)
-}
-
-/** hmac_<algo>(binary, binary) -> binary — Presto's keyed digest family
-  * (RFC 2104; hmac_md5 / hmac_sha1 / hmac_sha256 / hmac_sha512); data
-  * first, key second, like Presto. `algo` is the JCA Mac name. */
-case class HmacDigest(left: Expression, right: Expression, algo: String)
-  extends BinaryExpression {
-
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = BinaryType
-
-  override protected def nullSafeEval(data: Any, key: Any): Any =
-    Kernels.hmac(data.asInstanceOf[Array[Byte]], key.asInstanceOf[Array[Byte]], algo)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (d, k) => s"""graft.functions.Kernels.hmac($d, $k, "$algo")""")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): HmacDigest =
-    copy(left = l, right = r)
-}
-
-// ---------------------------------------------------------------------
-// r20 fold/transform expressions — the CodegenFallback-HOF replacements.
-// Each one's kernel doc states the exact HOF expression it replicates;
-// ExpressionsSpec pins bit-for-bit parity (nulls, NaN, mismatch) and
-// codegen == interpreted.
-
-/** max_abs_f(array<float>) -> double — the a04 scale fold (see
-  * [[Kernels.maxAbsF]]). */
-case class FloatMaxAbs(child: Expression) extends UnaryExpression {
-
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    Kernels.checkArrayArg("max_abs_f", child, FloatType)
-
-  override def dataType: DataType = DoubleType
-
-  override protected def nullSafeEval(in: Any): Any =
-    Kernels.maxAbsF(in.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.maxAbsF($c)")
-
-  override protected def withNewChildInternal(c: Expression): FloatMaxAbs =
-    copy(child = c)
-}
-
-/** quantize_i8(array<float>, double scale) -> array<bigint> — the a04
-  * pinned floor(x/scale + 0.5) tie rule (see [[Kernels.quantizeI8]]). */
-case class QuantizeI8(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    Kernels.checkArrayScalarArgs("quantize_i8", left, FloatType, right, DoubleType)
-
-  override def dataType: DataType = ArrayType(LongType,
-    left.dataType.asInstanceOf[ArrayType].containsNull)
-
-  override protected def nullSafeEval(a: Any, s: Any): Any =
-    Kernels.quantizeI8(a.asInstanceOf[ArrayData], s.asInstanceOf[Double])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, s) => s"graft.functions.Kernels.quantizeI8($a, $s)")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): QuantizeI8 =
-    copy(left = l, right = r)
-}
-
-/** long_array_sum(array<bigint>) -> bigint — the a04 `aggregate(q, 0L,
-  * (a, v) -> a + v)` / `a + abs(v)` fold (see [[Kernels.sumLong]]).
-  * NULL if any element is null (the HOF's absorbing accumulator). */
-case class LongArraySum(child: Expression, abs: Boolean)
-  extends UnaryExpression {
-
-  override def nullIntolerant: Boolean = true
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    Kernels.checkArrayArg("long_array_sum", child, LongType)
-
-  override def dataType: DataType = LongType
-
-  override protected def nullSafeEval(in: Any): Any =
-    Kernels.sumLong(in.asInstanceOf[ArrayData], abs)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      java.lang.Long ${ev.value}_r = graft.functions.Kernels.sumLong($c, $abs);
-      if (${ev.value}_r == null) { ${ev.isNull} = true; }
-      else { ${ev.value} = ${ev.value}_r.longValue(); }
-    """)
-
-  override protected def withNewChildInternal(c: Expression): LongArraySum =
-    copy(child = c)
-}
-
-/** quant_err_sq(array<float>, array<bigint>, double) -> double — the a04
-  * reconstruction-error fold (see [[Kernels.quantErrSq]]). */
-case class QuantErrSq(first: Expression, second: Expression, third: Expression)
-  extends TernaryExpression {
-
-  override def nullIntolerant: Boolean = true
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (first.dataType, second.dataType, third.dataType) match {
-      case (ArrayType(FloatType, _), ArrayType(LongType, _), DoubleType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case (a, b, c) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"quant_err_sq requires (array<float>, array<bigint>, double), " +
-            s"got (${a.catalogString}, ${b.catalogString}, ${c.catalogString})")
-    }
-
-  override def dataType: DataType = DoubleType
-
-  override protected def nullSafeEval(a: Any, q: Any, s: Any): Any =
-    Kernels.quantErrSq(a.asInstanceOf[ArrayData], q.asInstanceOf[ArrayData],
-      s.asInstanceOf[Double])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, q, s) => s"""
-      java.lang.Double ${ev.value}_r = graft.functions.Kernels.quantErrSq($a, $q, $s);
-      if (${ev.value}_r == null) { ${ev.isNull} = true; }
-      else { ${ev.value} = ${ev.value}_r.doubleValue(); }
-    """)
-
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): QuantErrSq =
-    copy(first = f, second = s, third = t)
-}
-
-/** scale_longs(array<bigint>, double) -> array<double> — the a05
-  * dequantization map (see [[Kernels.scaleLongs]]). */
-case class ScaleLongArray(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    Kernels.checkArrayScalarArgs("scale_longs", left, LongType, right, DoubleType)
-
-  override def dataType: DataType = ArrayType(DoubleType,
-    left.dataType.asInstanceOf[ArrayType].containsNull)
-
-  override protected def nullSafeEval(q: Any, s: Any): Any =
-    Kernels.scaleLongs(q.asInstanceOf[ArrayData], s.asInstanceOf[Double])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (q, s) => s"graft.functions.Kernels.scaleLongs($q, $s)")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): ScaleLongArray =
-    copy(left = l, right = r)
-}
-
-/** floats_to_doubles(array<float>) -> array<double> — the exact widening
-  * map in front of the double-precision ANN kernels (see
-  * [[Kernels.floatsToDoubles]]). */
-case class FloatsToDoubles(child: Expression) extends UnaryExpression {
-
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    Kernels.checkArrayArg("floats_to_doubles", child, FloatType)
-
-  override def dataType: DataType = ArrayType(DoubleType,
-    child.dataType.asInstanceOf[ArrayType].containsNull)
-
-  override protected def nullSafeEval(in: Any): Any =
-    Kernels.floatsToDoubles(in.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.floatsToDoubles($c)")
-
-  override protected def withNewChildInternal(c: Expression): FloatsToDoubles =
-    copy(child = c)
-}
-
-/** shingles3(array<string>) -> array<string> — the canonical 3-word
-  * shingle array (see [[Kernels.shingles3]]). */
-case class Shingles3(child: Expression) extends UnaryExpression {
-
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    Kernels.checkArrayArg("shingles3", child, StringType)
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  override protected def nullSafeEval(in: Any): Any =
-    Kernels.shingles3(in.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.shingles3($c)")
-
-  override protected def withNewChildInternal(c: Expression): Shingles3 =
-    copy(child = c)
-}
-
-/** minhash_words3(array<string>, k) -> array<bigint> — fused
-  * minhash(shingles3(words), k) with no shingle-string build (see
-  * [[Kernels.minhashWords3]]). */
-case class MinHashWords3(child: Expression, k: Int) extends UnaryExpression {
-
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    Kernels.checkArrayArg("minhash_words3", child, StringType)
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override protected def nullSafeEval(in: Any): Any =
-    Kernels.minhashWords3(in.asInstanceOf[ArrayData], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.minhashWords3($c, $k)")
-
-  override protected def withNewChildInternal(c: Expression): MinHashWords3 =
-    copy(child = c)
-}
-
-/** winnow_words3(array<string>, w) -> array<bigint> — fused
-  * winnow(shingles3(words), w), w >= 2 (see [[Kernels.winnowWords3]]). */
-case class WinnowWords3(child: Expression, w: Int) extends UnaryExpression {
-
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    Kernels.checkArrayArg("winnow_words3", child, StringType)
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override protected def nullSafeEval(in: Any): Any =
-    Kernels.winnowWords3(in.asInstanceOf[ArrayData], w)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.winnowWords3($c, $w)")
-
-  override protected def withNewChildInternal(c: Expression): WinnowWords3 =
-    copy(child = c)
-}
-
-/** chunk_longs(array<bigint>, size) -> array<array<bigint>> — consecutive
-  * fixed-size chunks (the minhash band-key split; see
-  * [[Kernels.chunkLongs]]). */
-case class ChunkLongArray(child: Expression, size: Int) extends UnaryExpression {
-
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    Kernels.checkArrayArg("chunk_longs", child, LongType)
-
-  override def dataType: DataType = ArrayType(
-    ArrayType(LongType, child.dataType.asInstanceOf[ArrayType].containsNull),
-    containsNull = false)
-
-  override protected def nullSafeEval(in: Any): Any =
-    Kernels.chunkLongs(in.asInstanceOf[ArrayData], size)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.chunkLongs($c, $size)")
-
-  override protected def withNewChildInternal(c: Expression): ChunkLongArray =
-    copy(child = c)
-}
-
-/** bigram_pairs(array<string>) -> array<struct<w1,w2>> — the adjacent-
-  * word pair stream (see [[Kernels.bigramPairs]]). */
-case class BigramPairs(child: Expression) extends UnaryExpression {
-
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    Kernels.checkArrayArg("bigram_pairs", child, StringType)
-
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(
-      StructField("w1", StringType, nullable = true),
-      StructField("w2", StringType, nullable = true))),
-    containsNull = false)
-
-  override protected def nullSafeEval(in: Any): Any =
-    Kernels.bigramPairs(in.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.bigramPairs($c)")
-
-  override protected def withNewChildInternal(c: Expression): BigramPairs =
-    copy(child = c)
-}
-
-/** bigram_strings(array<string>) -> array<string> — the t06 concat
-  * bigram stream (see [[Kernels.bigramStrings]]). */
-case class BigramStrings(child: Expression) extends UnaryExpression {
-
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    Kernels.checkArrayArg("bigram_strings", child, StringType)
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = true)
-
-  override protected def nullSafeEval(in: Any): Any =
-    Kernels.bigramStrings(in.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.bigramStrings($c)")
-
-  override protected def withNewChildInternal(c: Expression): BigramStrings =
-    copy(child = c)
-}
-
-/** blocks16(bigint) -> array<bigint> — four 16-bit pigeonhole blocks
-  * (see [[Kernels.blocks16]]). */
-case class Blocks16(child: Expression) extends UnaryExpression {
-
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case LongType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"blocks16 requires bigint, got ${other.catalogString}")
-    }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override protected def nullSafeEval(in: Any): Any =
-    Kernels.blocks16(in.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.blocks16($c)")
-
-  override protected def withNewChildInternal(c: Expression): Blocks16 =
-    copy(child = c)
-}
-
-/** word_grams(array<string>, k) -> array<string> — full k-word gram
-  * strings (see [[Kernels.wordGrams]]). */
-case class WordGrams(child: Expression, k: Int) extends UnaryExpression {
-
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    Kernels.checkArrayArg("word_grams", child, StringType)
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  override protected def nullSafeEval(in: Any): Any =
-    Kernels.wordGrams(in.asInstanceOf[ArrayData], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.wordGrams($c, $k)")
-
-  override protected def withNewChildInternal(c: Expression): WordGrams =
-    copy(child = c)
 }

@@ -62,8 +62,8 @@ object QuantileSketch {
                |  round(lo + (CAST(j AS DOUBLE) - 1.0D)
                |    * (hi - lo) / $Bins, 6))""".stripMargin)))
     // bin = COUNT of edges at or below x (clamped >= 1) — the exact
-    // definitional decision, via the codegen binary-search EdgeBin
-    // expression: O(log Bins) pure IEEE comparisons per row against the
+    // definitional decision, via the codegen binary-search edge_bin
+    // kernel: O(log Bins) pure IEEE comparisons per row against the
     // shared snapped table, no lambda interpretation, no allocation (the
     // d10 lesson), and none of the r10 closed-form-candidate residual —
     // that ±1 correction could land on a bin whose rounded edge still

@@ -1754,8 +1754,8 @@ object Relational {
   // residual ~1-ulp libm variance near the 6-dp round / 2000 km cut is
   // a documented accepted risk — see [[graft.functions.Kernels
   // .haversineKm]]). The
-  // kernel is a codegen-native QuaternaryExpression ([[graft.functions
-  // .HaversineKm]]): narrow per-row inside whole-stage codegen, the only
+  // kernel is a codegen-native table row ([[graft.functions.KernelTable
+  // .haversineKm]]): narrow per-row inside whole-stage codegen, the only
   // exchange is the final output sort.
   def q122(s: SparkSession, d: String): DataFrame = {
     val lat = (col("c_custkey") % 171).cast("double") * 0.9 - 76.5
@@ -1788,7 +1788,7 @@ object Relational {
   // --- q124: Bing-tile spatial rollup (Presto's bing_tile_at +
   // bing_tile_quadkey — the rest of the 0.248 geo family beyond
   // q122/q123). Points bucket into zoom-6 Web-Mercator tiles via the
-  // codegen-native BingTileQuadkey kernel; the quadkey's PREFIX is the
+  // codegen-native bing_tile_quadkey kernel; the quadkey's PREFIX is the
   // parent tile at any coarser zoom (emitted as parent4), which is what
   // makes quadkeys the idiomatic distributed geo join/rollup key: a
   // zoom-out re-aggregation is a substring groupBy over already-reduced
@@ -2261,7 +2261,7 @@ object Relational {
     * arrays. Each customer FORMATS its q128 triangle and its q123 probe
     * point as WKT strings (Spark's double→string cast = Java's shortest
     * round-trip representation), parses both back through the codegen
-    * [[graft.functions.WktParse]] kernel, and computes area / perimeter
+    * [[graft.functions.KernelTable.stGeometryFromText]] kernel, and computes area / perimeter
     * / centroid / point-in-ring on the PARSED arrays. The oracle replays
     * the geometry NUMERICALLY from the keys — so any parser or formatter
     * defect (lossy double text, vertex-order slip, bad ring closure)

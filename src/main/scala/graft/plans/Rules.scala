@@ -1,12 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{If, IsNull, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.IntegerType
 
-import graft.functions.Hamming64
+import graft.functions.{KernelCall, KernelTable}
 
 /**
  * Catalyst optimizer rules for the graft expression family.
@@ -16,7 +15,7 @@ import graft.functions.Hamming64
  * itself — folds to a literal. This shape appears when dedup pipelines join
  * candidate tables back to themselves and compare signatures.
  *
- * Null semantics: Hamming64 is null-intolerant, so hamming64(NULL, NULL) is
+ * Null semantics: hamming64 is null-intolerant, so hamming64(NULL, NULL) is
  * NULL (e.g. signatures arriving through an outer join). Folding to a bare 0
  * would change results for nullable inputs — those fold to
  * IF(x IS NULL, NULL, 0) instead, which still skips the XOR/popcount and
@@ -24,21 +23,9 @@ import graft.functions.Hamming64
  */
 object SelfHammingRule extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformAllExpressions {
-    case Hamming64(a, b) if a.deterministic && a.semanticEquals(b) =>
+    case KernelCall(KernelTable.hamming64, _, Seq(a, b))
+        if a.deterministic && a.semanticEquals(b) =>
       if (a.nullable) If(IsNull(a), Literal(null, IntegerType), Literal(0, IntegerType))
       else Literal(0, IntegerType)
-  }
-}
-
-object Rules {
-  /** Attach graft optimizer rules to an existing session (the
-    * SparkSessionExtensions path in GraftExtensions covers new sessions). */
-  def install(spark: SparkSession): Unit = {
-    val rules = Seq(SelfHammingRule, IntervalJoinRule, FastDecimalCastRule)
-    val missing = rules.filterNot(spark.experimental.extraOptimizations.contains)
-    if (missing.nonEmpty) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations ++ missing
-    }
   }
 }

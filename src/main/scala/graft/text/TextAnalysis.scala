@@ -554,7 +554,7 @@ object TextAnalysis {
   /**
    * t18: Unicode normalization (Presto 0.248's normalize(string, form) —
    * presto-main StringFunctions) as a standalone verified entry, via the
-   * codegen-native [[graft.functions.NormalizeUnicode]] expression (c01
+   * codegen-native [[graft.functions.KernelTable.normalizeUnicode]] kernel (c01
    * uses the same kernel inside its content hash). Every document gets a
    * deterministic DECOMPOSED suffix ("Cafe" + U+0301 combining acute) so
    * NFC has real composition work on every row — the synthetic corpus is

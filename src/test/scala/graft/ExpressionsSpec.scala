@@ -75,7 +75,6 @@ class ExpressionsSpec extends GraftSpec {
   }
 
   test("SelfHammingRule folds hamming64(x, x) to a literal during optimization") {
-    graft.plans.Rules.install(spark)
     // parquet-backed (a LocalRelation would be eagerly evaluated anyway)
     val t = graft.sources.Tables.orders(spark, sf)
     val df = t.select(hamming64($"o_orderkey", $"o_orderkey").as("h"))
@@ -102,7 +101,12 @@ class ExpressionsSpec extends GraftSpec {
   }
 
   test("SQL registration via GraftFunctions.install and via extensions class") {
+    // install() registers what the session lacks: drop one extension-
+    // registered name and let install() restore it from the same table
+    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("cosine_sim")
+    spark.sessionState.functionRegistry.dropFunction(id)
     graft.functions.GraftFunctions.install(spark)
+    assert(spark.sessionState.functionRegistry.functionExists(id))
     val r = spark.sql(
       "SELECT cosine_sim(array(cast(1.0 as float), cast(0.0 as float)), " +
         "array(cast(1.0 as float), cast(0.0 as float))) AS c, " +
@@ -114,7 +118,6 @@ class ExpressionsSpec extends GraftSpec {
 
 
   test("word_stem: the Porter 1980 rule tables, step by step") {
-    graft.functions.GraftFunctions.install(spark)
     // one vector per rule family, from the paper's own examples —
     // step 1a plurals, 1b ed/ing + restoration, 1c y->i, step 2/3
     // suffix maps, step 4 strips (incl. the s/t-guarded ION), 5a/5b
@@ -156,7 +159,6 @@ class ExpressionsSpec extends GraftSpec {
   }
 
   test("ngrams: sliding windows, whole-array convention, empty input") {
-    graft.functions.GraftFunctions.install(spark)
     val r = spark.sql(
       "SELECT ngrams(array('a','b','c','d'), 2) AS g2, " +
         "ngrams(array('a','b'), 5) AS whole, " +
@@ -188,7 +190,6 @@ class ExpressionsSpec extends GraftSpec {
   }
 
   test("hmac_sha256 matches RFC 4231 test case 2 and the digest builtins stay on-surface") {
-    graft.functions.GraftFunctions.install(spark)
     // RFC 4231 test case 2: key "Jefe", data "what do ya want for nothing?"
     val hm = spark.sql("SELECT lower(hex(hmac_sha256(" +
       "encode('what do ya want for nothing?', 'utf-8'), " +
@@ -223,7 +224,6 @@ class ExpressionsSpec extends GraftSpec {
   }
 
   test("SQL hash64 accepts plain INT literal seeds and rejects non-literals") {
-    graft.functions.GraftFunctions.install(spark)
     // the natural SQL call form: 42 parses as an IntegerType literal
     val viaInt = spark.sql("SELECT hash64('x', 42) AS h").head().getLong(0)
     // out-of-int-range integral parses as a LongType literal
@@ -258,7 +258,6 @@ class ExpressionsSpec extends GraftSpec {
     val none = Seq(Option.empty[Double]).toDF("x")
     assert(none.agg(graft.functions.GraftFunctions.geometricMean($"x")).head().isNullAt(0))
     // SQL registration path
-    graft.functions.GraftFunctions.install(spark)
     Seq(2.0, 8.0).toDF("x").createOrReplaceTempView("gm_t")
     assert(math.abs(spark.sql("SELECT geometric_mean(x) FROM gm_t").head().getDouble(0) - 4.0) < 1e-12)
     // partial aggregation across many partitions agrees with single-partition
@@ -313,7 +312,6 @@ class ExpressionsSpec extends GraftSpec {
       .collect()
       .foreach(r => assert(r.getBoolean(0) == r.getBoolean(1), r.toString))
     // SQL registration round-trip for both geo functions
-    graft.functions.GraftFunctions.install(spark)
     val viaSql = spark.sql(
       "SELECT point_in_polygon(0.0D, 0.0D, " +
         "array(-50.0D, 60.0D, 70.0D, 0.0D, -60.0D, -50.0D), " +
@@ -346,7 +344,6 @@ class ExpressionsSpec extends GraftSpec {
       .select(bingTileQuadkey($"lat", $"lon", 3)).collect()
     assert(poles.forall(_.getString(0).length == 3))
     // SQL registration + Presto's zoom bound
-    graft.functions.GraftFunctions.install(spark)
     assert(spark.sql("SELECT bing_tile_quadkey(45.0D, 90.0D, 1) AS q")
       .head().getString(0) == "1")
     val err = intercept[Exception](
@@ -380,7 +377,6 @@ class ExpressionsSpec extends GraftSpec {
     val merged = half1.zip(half2).map { case (a, b) => (a | b).toByte }
     assert(java.util.Arrays.equals(merged, bloom))
     // SQL registration round-trip
-    graft.functions.GraftFunctions.install(spark)
     val viaSql = spark.sql(
       s"SELECT bloom_might_contain(bf, 'member-gram-7', $k) AS hit FROM " +
       s"(SELECT bloom_build(g, $bits, $k) AS bf FROM VALUES ('member-gram-7') t(g))")
@@ -394,7 +390,6 @@ class ExpressionsSpec extends GraftSpec {
       (3L, Seq("", "x", "", "y", "zz"))   // empty words keep separators honest
     ).toDF("id", "w")
     val k = 3
-    graft.functions.GraftFunctions.install(spark)
     val viaKernel = docs.select($"id",
       shingleHash64($"w", k).as("hs")).collect()
       .map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
@@ -466,7 +461,6 @@ class ExpressionsSpec extends GraftSpec {
       .collect().map(r => r.getLong(0) -> ((r.getInt(1), r.getLong(2)))).toMap
     assert(gotScore == expScore, s"\ngot      $gotScore\nexpected $expScore")
     // SQL surface (both registration paths share sqlBuilders)
-    graft.functions.GraftFunctions.install(spark)
     val viaSql = spark.sql(
       s"SELECT hashed_ngram_buckets(array('a','b'), ${seed}L, $bits) AS bs")
       .head().getSeq[Long](0)
@@ -506,7 +500,6 @@ class ExpressionsSpec extends GraftSpec {
       .head().getString(0)
     assert(rt == composed)
     // SQL registration, both 1-arg (NFC default) and explicit-form paths
-    graft.functions.GraftFunctions.install(spark)
     val viaSql2 = spark.sql(
       "SELECT normalize_unicode('Cafe\u0301') AS a, " +
       "normalize_unicode('\ufb01le', 'NFKC') AS b").head()
@@ -548,7 +541,6 @@ class ExpressionsSpec extends GraftSpec {
   }
 
   test("st_intersects / st_distance run codegen'd through the SQL surface") {
-    graft.functions.GraftFunctions.install(spark)
     val r = spark.sql(
       """SELECT st_intersects(0D,0D,10D,10D, 0D,10D,10D,0D) AS hit,
                 st_intersects(0D,0D,1D,0D, 2D,0D,3D,0D) AS miss,
@@ -560,7 +552,6 @@ class ExpressionsSpec extends GraftSpec {
   }
 
   test("st_area / st_length / st_centroid: known shapes through SQL") {
-    graft.functions.GraftFunctions.install(spark)
     // 4x3 rectangle, CCW, closed ring
     val rect = spark.sql(
       """SELECT st_area(array(0D,4D,4D,0D,0D), array(0D,0D,3D,3D,0D)) AS a,
@@ -588,7 +579,6 @@ class ExpressionsSpec extends GraftSpec {
   }
 
   test("st_centroid: degenerate (collinear) ring falls back to the vertex mean") {
-    graft.functions.GraftFunctions.install(spark)
     val r = spark.sql(
       """SELECT st_area(array(0D,2D,4D,0D), array(0D,0D,0D,0D)) AS a,
                 st_length(array(0D,2D,4D,0D), array(0D,0D,0D,0D)) AS l,
@@ -708,6 +698,8 @@ class ExpressionsSpec extends GraftSpec {
     case d: Double => java.lang.Double.doubleToLongBits(d)
     case f: Float => java.lang.Float.floatToIntBits(f)
     case s: scala.collection.Seq[_] => s.map(bits)
+    case b: Array[Byte] => b.toSeq
+    case r: org.apache.spark.sql.Row => r.toSeq.map(bits)
     case other => other
   }
 
@@ -852,5 +844,79 @@ class ExpressionsSpec extends GraftSpec {
     assert(short.map(_.getSeq[String](0)).toSeq ==
       Seq(Seq(""), Seq("one"), Seq("one two")))
     assert(short.forall(_.getSeq[Long](1).isEmpty))
+  }
+
+  test("every kernel table row: generated code and interpreted eval agree bit-for-bit") {
+    import org.apache.spark.sql.{GraftBridge, Row}
+    import org.apache.spark.sql.types._
+    // shared inputs per declared column type: nulls, empty arrays, NaN,
+    // -0.0, null elements, and text the string kernels parse
+    val samples: Map[DataType, Seq[Any]] = Map(
+      DoubleType -> Seq(null, 0.0, -0.0, Double.NaN, 0.5, 2.25, -37.5),
+      LongType -> Seq(null, 0L, -1L, Long.MinValue, 0x123456789abcdefL, 42L),
+      StringType -> Seq(null, "", "a b", "Cafe\u0301 \ufb01le", "to be or not",
+        "POLYGON ((0 0, 4 0, 4 3, 0 3, 0 0))", """{"a": "x", "b": [1]}""", "$.a", "a"),
+      BinaryType -> Seq(null, Array[Byte](1), Array[Byte](0, -1, 7, 9)),
+      ArrayType(FloatType) -> Seq(null, Seq(), Seq(1.5f, -0.0f, 3f),
+        Seq(Float.NaN, 2f, null), Seq(3f, 4f)),
+      ArrayType(DoubleType) -> Seq(null, Seq(), Seq(0.0, 4.0, 4.0, 0.0, 0.0),
+        Seq(0.0, 0.0, 3.0, 3.0, 0.0), Seq(-0.0, Double.NaN, 1.0), Seq(1.0, null, 2.0)),
+      ArrayType(LongType) -> Seq(null, Seq(), Seq(1L, 2L, 3L), Seq(5L, null, 7L),
+        Seq(0L, 9L, 2L, 2L)),
+      ArrayType(StringType) -> Seq(null, Seq(), Seq("a"), Seq("a", "b", null, ""),
+        Seq("to", "be", "or", "not", "to", "be")))
+    val params = Map[String, Any]("k" -> 4, "w" -> 2, "seed" -> 7L, "bits" -> 6,
+      "zoom" -> 5, "form" -> "NFKC", "numHashes" -> 3, "lang" -> "en", "n" -> 2,
+      "abs" -> true, "size" -> 2)
+    def collect(df: org.apache.spark.sql.DataFrame, confs: (String, String)*): Seq[Any] = {
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      try df.collect().toSeq.map(r => bits(r.get(0)))
+      finally confs.foreach { case (k, _) => spark.conf.unset(k) }
+    }
+    // arguments the shared strings would rarely make valid: a JSON path
+    // (refused outright when malformed) and a WKT geometry tag
+    val overrides = Map[(String, Int), Seq[Any]](
+      ("json_extract_scalar", 1) -> Seq(null, "$.a", "$.b", "$"),
+      ("st_as_text", 0) -> Seq(null, "POINT", "LINESTRING", "POLYGON"))
+    graft.functions.KernelTable.all.foreach { k =>
+      val rnd = new scala.util.Random(k.name.hashCode)
+      val rows = Seq.fill(64)(Row.fromSeq(k.inputs.zipWithIndex.map { case (t, i) =>
+        val s = overrides.getOrElse((k.name, i), samples(t))
+        s(rnd.nextInt(s.size))
+      }))
+      val schema = StructType(k.inputs.zipWithIndex.map { case (t, i) => StructField(s"c$i", t) })
+      // an RDD source: a local relation would be evaluated by the optimizer
+      val in = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+      val df = in.select(GraftBridge.column(k.call(
+        in.columns.toSeq.map(c => GraftBridge.expression(in(c))),
+        k.params.map(p => params(p.name)))))
+      val generated = collect(df, "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+        "spark.sql.codegen.fallback" -> "false")
+      val interpreted = collect(df, "spark.sql.codegen.factoryMode" -> "NO_CODEGEN",
+        "spark.sql.codegen.wholeStage" -> "false")
+      assert(generated == interpreted, s"${k.name}: codegen and interpreted disagree")
+      assert(interpreted.exists(_ != null), s"${k.name}: the shared inputs never reach the kernel")
+    }
+  }
+
+  test("kernel type guard: a mistyped argument is widened exactly or fails analysis by name") {
+    // array<int> read after a shuffle: widened to array<double> (the
+    // unguarded kernel read int bits as doubles: 0.0 for the unit square)
+    val area = spark.sql(
+      """SELECT st_area(xs, ys) AS a FROM (
+           SELECT * FROM VALUES (array(0, 1, 1, 0, 0), array(0, 0, 1, 1, 0)) AS t(xs, ys)
+           DISTRIBUTE BY xs)""").head().getDouble(0)
+    assert(area == 1.0)
+    // parquet array<double> into the float kernel: no exact widening
+    // exists, so analysis refuses it instead of the scan failing mid-task
+    val dir = java.nio.file.Files.createTempDirectory("guard").resolve("v").toString
+    Seq(Tuple1(Seq(1.0, 0.0))).toDF("v").write.parquet(dir)
+    spark.read.parquet(dir).createOrReplaceTempView("guard_v")
+    val err = intercept[org.apache.spark.sql.AnalysisException](
+      spark.sql("SELECT cosine_sim(v, v) FROM guard_v").collect())
+    assert(err.getMessage.contains("cosine_sim requires (array<float>, array<float>)"),
+      err.getMessage)
+    // int literals widen to bigint
+    assert(spark.sql("SELECT hamming64(1, 3)").head().getInt(0) == 1)
   }
 }

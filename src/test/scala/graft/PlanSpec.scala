@@ -139,7 +139,7 @@ class PlanSpec extends GraftSpec {
     // prefilter), and the exact confirm must be the shuffle-hash form —
     // at real scale the benchmark gram set outgrows broadcast, so the
     // plan must not depend on small-side luck
-    assert(plan.toLowerCase.contains("bloommightcontain"),
+    assert(plan.toLowerCase.contains("bloom_might_contain"),
       s"bloom prefilter missing from the corpus scan stage:\n$plan")
     assert(plan.contains("ShuffledHashJoin"),
       s"gram confirm must be a shuffle join, not a broadcast:\n$plan")
@@ -357,10 +357,10 @@ class PlanSpec extends GraftSpec {
     // aggregate / filter over arrays) INTERPRETED per element — on the
     // corpus-scan scoring pass that is non-codegen eval + a string
     // allocation per token (the r12 verdict's 12-14s/entry finding, and
-    // the same defect d10 had before WinnowFingerprints). Pin that the
+    // the same defect d10 had before winnow_fps). Pin that the
     // model-based-selection entries stay on the fused codegen kernel:
-    // per-token work must appear only as hashedngrambuckets /
-    // hashedngramscore, never as a lambda HOF.
+    // per-token work must appear only as hashed_ngram_buckets /
+    // hashed_ngram_score, never as a lambda HOF.
     // t25 is audited through its UNSTAGED scoring frame: the entry plan
     // itself is a projection over the staged RDD, the kernel lives in
     // the frame dsir() checkpoints (dsirScored)
@@ -372,8 +372,8 @@ class PlanSpec extends GraftSpec {
           assert(!plan.contains(bad),
             s"$name: interpreted lambda HOF '$bad' in executed plan:\n$plan")
         }
-        val kernel = if (name.startsWith("t23")) "hashedngramscore"
-                     else "hashedngrambuckets"
+        val kernel = if (name.startsWith("t23")) "hashed_ngram_score"
+                     else "hashed_ngram_buckets"
         assert(plan.contains(kernel), s"$name: fused $kernel kernel missing:\n$plan")
       }
   }

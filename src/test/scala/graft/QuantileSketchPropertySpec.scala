@@ -125,7 +125,7 @@ class QuantileSketchPropertySpec extends GraftSpec {
 
   test("binary-search binning equals the count-of-edges definition, " +
        "including sub-grid plateau regions") {
-    // The kernel's EdgeBin IS the count of edges <= x (binary search over
+    // The kernel's edge_bin IS the count of edges <= x (binary search over
     // the snapped table) — this replays the count definition literally on
     // the driver over a domain where adjacent log edges collapse on the
     // 1e-6 rounding grid (lo near the grid, e.g. e12's 1µs-resolution

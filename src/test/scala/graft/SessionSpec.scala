@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 /** The cluster-elasticity surface: the reference's add_worker/del_worker
   * maps to a declared executor range under dynamic allocation. */
 class SessionSpec extends GraftSpec {
@@ -20,6 +22,19 @@ class SessionSpec extends GraftSpec {
     // builder construction must be side-effect free (no session started)
     val b = GraftSession.clusterBuilder("spark://example:7077", maxWorkers = 8)
     assert(b != null)
+  }
+
+  test("every main builds its session through GraftSession") {
+    // one way to build a session: the oracle gate, the bench, the CLI and
+    // the server must all run with graft's extensions, rules and serializer
+    val builderCall = """SparkSession\s*\.\s*builder\s*\(""".r
+    val offenders = {
+      val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      try files.iterator().asScala.toVector finally files.close()
+    }.filter(p => p.toString.endsWith(".scala") && p.getFileName.toString != "GraftSession.scala")
+      .filter(p => builderCall.findFirstIn(java.nio.file.Files.readString(p)).isDefined)
+    assert(offenders.isEmpty,
+      s"build sessions with GraftSession.builder/get, not SparkSession.builder(): ${offenders.mkString(", ")}")
   }
 
   test("active session carries graft engine defaults") {

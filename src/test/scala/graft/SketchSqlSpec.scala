@@ -2,18 +2,13 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.GraftFunctions
-
 /** SQL-registered sketch aggregates (quantile_sketch_agg / merge /
   * sketch_quantile_bin — Presto's qdigest_agg / merge / value_at_quantile
   * surface) and the s09 SQL-text entry that runs the q115 topology
   * through them. */
 class SketchSqlSpec extends GraftSpec {
 
-  private def sqlDf(q: String) = {
-    GraftFunctions.install(spark)
-    spark.sql(q)
-  }
+  private def sqlDf(q: String) = spark.sql(q)
 
   test("quantile_sketch_agg builds dense 1-based bin counts, growing to the max bin") {
     val r = sqlDf("""

@@ -94,7 +94,6 @@ class WinnowPropertySpec extends GraftSpec {
   test("shingle_hash64 matches concat_ws byte-for-byte on arrays containing nulls") {
     import spark.implicits._
     import org.apache.spark.sql.functions.expr
-    graft.functions.GraftFunctions.install(spark)
     // concat_ws SKIPS nulls (and their separator) but keeps empty strings
     // (with separators) — the kernel must reproduce both, per position
     for (seed <- 1 to 5) {

@@ -90,7 +90,6 @@ class WktSpec extends GraftSpec {
   }
 
   test("SQL front door serves st_geometry_from_text / st_as_text") {
-    graft.functions.GraftFunctions.install(spark)
     val row = spark.sql("""
       SELECT g.gtype AS t, st_area(g.xs, g.ys) AS a,
              st_as_text(g.gtype, g.xs, g.ys) AS w,
@@ -203,7 +202,6 @@ class WktSpec extends GraftSpec {
       assert(r.isNullAt(0) && r.isNullAt(1) && r.isNullAt(2), s"must be null: $w")
     }
     // SQL surface
-    graft.functions.GraftFunctions.install(spark)
     assert(spark.sql(s"SELECT st_num_geometries('$mp') AS n").head().getInt(0) == 2)
   }
 
@@ -226,7 +224,6 @@ class WktSpec extends GraftSpec {
       lit(1.0), lit(1.0)), stNumInteriorRings(lit(bad))).head()
     assert(r.isNullAt(0) && r.isNullAt(1) && r.isNullAt(2))
     // SQL surface serves the family
-    graft.functions.GraftFunctions.install(spark)
     val viaSql = spark.sql(
       "SELECT st_area_wkt('POLYGON ((0 0, 4 0, 4 4, 0 4, 0 0), (1 1, 2 1, 2 2, 1 2, 1 1))') AS a, " +
       "st_contains_wkt('POLYGON ((0 0, 4 0, 4 4, 0 4, 0 0))', 1.5, 1.5) AS c, " +

@@ -1698,7 +1698,11 @@ final class Kernel(
   * `children`, its constants already checked. Generated code makes one
   * static `graft.functions.Kernels` call per row inside whole-stage
   * codegen, after the standard null short-circuit over the inputs;
-  * interpreted eval reaches the same method by reflection.
+  * interpreted eval reaches the same method by reflection. It is its own
+  * expression rather than Catalyst's StaticInvoke because the typed
+  * facade builds calls over unresolved columns (so the result type can
+  * only be computed after analysis) and because plans and type errors
+  * should name the SQL function, not `staticinvoke(...)`.
   *
   * The type guard: an argument of another type than the row declares is
   * widened by a Catalyst Cast when that is an up-cast (int to bigint,

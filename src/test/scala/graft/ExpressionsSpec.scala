@@ -916,7 +916,8 @@ class ExpressionsSpec extends GraftSpec {
       spark.sql("SELECT cosine_sim(v, v) FROM guard_v").collect())
     assert(err.getMessage.contains("cosine_sim requires (array<float>, array<float>)"),
       err.getMessage)
-    // int literals widen to bigint
+    // int literals widen to bigint; an untyped NULL stays a NULL
     assert(spark.sql("SELECT hamming64(1, 3)").head().getInt(0) == 1)
+    assert(spark.sql("SELECT hamming64(NULL, 3)").head().isNullAt(0))
   }
 }

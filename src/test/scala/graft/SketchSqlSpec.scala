@@ -8,28 +8,26 @@ import org.apache.spark.sql.functions._
   * through them. */
 class SketchSqlSpec extends GraftSpec {
 
-  private def sqlDf(q: String) = spark.sql(q)
-
   test("quantile_sketch_agg builds dense 1-based bin counts, growing to the max bin") {
-    val r = sqlDf("""
+    val r = spark.sql("""
       SELECT quantile_sketch_agg(b) AS sk
       FROM VALUES (1), (1), (3), (2), (3), (3) AS t(b)""").collect().head
     assert(r.getSeq[Long](0) == Seq(2L, 1L, 3L))
   }
 
   test("quantile_sketch_agg skips nulls and rejects out-of-range bins") {
-    val r = sqlDf("""
+    val r = spark.sql("""
       SELECT quantile_sketch_agg(b) AS sk
       FROM VALUES (2), (CAST(NULL AS INT)), (2) AS t(b)""").collect().head
     assert(r.getSeq[Long](0) == Seq(0L, 2L))
     val e = intercept[Exception] {
-      sqlDf("SELECT quantile_sketch_agg(b) FROM VALUES (0) AS t(b)").collect()
+      spark.sql("SELECT quantile_sketch_agg(b) FROM VALUES (0) AS t(b)").collect()
     }
     assert(e.getMessage.contains("bin must be in"))
   }
 
   test("quantile_sketch_merge pads shorter sketches with zeros") {
-    val r = sqlDf("""
+    val r = spark.sql("""
       SELECT quantile_sketch_merge(sk) AS m FROM VALUES
         (array(1L, 2L)), (array(0L, 1L, 5L)) AS t(sk)""").collect().head
     assert(r.getSeq[Long](0) == Seq(1L, 3L, 5L))
@@ -37,7 +35,7 @@ class SketchSqlSpec extends GraftSpec {
 
   test("sketch_quantile_bin reads the CDF like the q115 kernel pick") {
     // counts [2,1,3]: total 6; p50 -> ceil(3)=3 -> bin 2; p95 -> ceil(5.7)=6 -> bin 3
-    val r = sqlDf("""
+    val r = spark.sql("""
       SELECT sketch_quantile_bin(array(2L, 1L, 3L), 0.5D) AS b50,
              sketch_quantile_bin(array(2L, 1L, 3L), 0.95D) AS b95,
              sketch_quantile_bin(array(2L, 1L, 3L), 0.01D) AS b01""").collect().head
@@ -46,7 +44,7 @@ class SketchSqlSpec extends GraftSpec {
 
   test("two-level sketch rollup via SQL aggregates equals a flat count") {
     // leaf sketches per group, merged rollup: total n must equal row count
-    val r = sqlDf("""
+    val r = spark.sql("""
       WITH leaf AS (
         SELECT g, quantile_sketch_agg(b) AS sk
         FROM VALUES ('a', 1), ('a', 2), ('b', 2), ('b', 2), ('c', 4) AS t(g, b)

@@ -79,9 +79,10 @@ object GraftCli {
     * EXPLAIN flavor. */
   private[graft] def rewriteDialect(text: String): String = PrestoRewrite(text)
 
-  /** Execute one SQL statement (the programmatic front door). */
+  /** Execute one SQL statement (the programmatic front door): any CLI
+    * statement that returns rows, routed on a fresh session state. */
   def sql(spark: SparkSession, sfDir: String, text: String): DataFrame =
-    open(spark, sfDir).sql(rewriteDialect(text))
+    routeRows(open(spark, sfDir), text)
 
   /** Split ;-terminated SQL statements, leaving semicolons inside
     * single-quoted literals alone ('' quote escaping falls out naturally:
@@ -187,35 +188,18 @@ object GraftCli {
     * node's runtime SQLMetrics (output rows, spill bytes, build/probe
     * times) — the operator-level runtime report Presto's EXPLAIN
     * ANALYZE emits, which plain EXPLAIN (plan only, never run) cannot.
-    * Spark's own SQL surface has no ANALYZE mode, so the CLI routes the
-    * statement itself. */
+    * The walk is the plan digest's, so query stages and subqueries are
+    * reported too. Spark's own SQL surface has no ANALYZE mode, so the
+    * CLI routes the statement itself. */
   private[graft] def explainAnalyze(spark: SparkSession, query: String): String = {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    val df = spark.sql(query)
-    val plan = df.queryExecution.executedPlan
+    val plan = spark.sql(query).queryExecution.executedPlan
     val nRows = plan.execute().count()
-    val sb = new StringBuilder("== Physical Plan (executed, with metrics) ==\n")
-    def walk(p: SparkPlan, depth: Int): Unit = {
-      val ms = p.metrics.toSeq.sortBy(_._1)
-        .filter(_._2.value != 0)
-        .map { case (name, m) => s"$name=${m.value}" }
-      sb.append("  " * depth).append(p.nodeName)
-      if (ms.nonEmpty) sb.append("  [").append(ms.mkString(", ")).append("]")
-      sb.append('\n')
-      p match {
-        // descend into the finalized AQE plan — the pre-AQE skeleton's
-        // children never executed and carry no metrics
-        case a: AdaptiveSparkPlanExec => walk(a.executedPlan, depth + 1)
-        // a materialized stage hides its subtree behind `plan`, not
-        // `children` — without this the report stops at the stage shell
-        case qs: QueryStageExec => walk(qs.plan, depth + 1)
-        case _ => p.children.foreach(walk(_, depth + 1))
-      }
-    }
-    walk(plan, 0)
-    sb.append(s"rows: $nRows\n")
-    sb.toString
+    "== Physical Plan (executed, with metrics) ==\n" +
+      graft.plans.PlanDigest.render(plan) { p =>
+        val ms = p.metrics.toSeq.sortBy(_._1).filter(_._2.value != 0)
+          .map { case (name, m) => s"$name=${m.value}" }
+        p.nodeName + (if (ms.isEmpty) "" else ms.mkString("  [", ", ", "]"))
+      } + s"rows: $nRows\n"
   }
 
   private val ExplainAnalyze = "(?is)^\\s*EXPLAIN\\s+ANALYZE\\s+(.*)$".r
@@ -542,27 +526,11 @@ object GraftCli {
       .orderBy(col("column_name").asc_nulls_first)
   }
 
-  /** s14's front door: route a SHOW STATS statement through the REAL
-    * router regex (the driver needs a DataFrame; main's render path
-    * wraps this same plumbing). */
-  private[graft] def showStatsStatement(spark: SparkSession, sfDir: String,
-      stmt: String): DataFrame = {
-    open(spark, sfDir)
-    stmt.stripSuffix(";") match {
-      case ShowStats(mode, table) =>
-        showStats(spark, table, exact = mode != null &&
-          mode.equalsIgnoreCase("EXACT"))
-      case other => throw new IllegalArgumentException(
-        s"not a SHOW STATS statement: $other")
-    }
-  }
-
-  /** s15's front door: run SET SESSION statements through the REAL
-    * router regexes, snapshot SHOW SESSION (values read back from the
-    * live conf — the snapshot IS the evidence the SETs landed), then
-    * restore the pre-entry confs so the entry never poisons the
-    * session for whatever runs next (Verify runs 250+ entries in one
-    * session). */
+  /** s15: route the session statements, snapshot SHOW SESSION (values
+    * read back from the live conf — the snapshot IS the evidence the
+    * SETs landed), then restore the pre-entry confs so the entry never
+    * poisons the session for whatever runs next (Verify runs 250+
+    * entries in one session). */
   private[graft] def sessionEntry(spark: SparkSession, sfDir: String,
       statements: Seq[String]): DataFrame = {
     val sess = open(spark, sfDir)
@@ -576,13 +544,9 @@ object GraftCli {
       "spark.graft.dedup.maxBucket")
     val saved = touched.map(k => k -> sess.conf.getOption(k))
     try {
-      statements.foreach {
-        case SetSession(n, v) => setSession(sess, n, v)
-        case ResetSession(n)  => resetSession(sess, n)
-        case other => throw new IllegalArgumentException(
-          s"not a session statement: $other")
-      }
-      showSession(sess) // materializes conf reads into a literal relation
+      statements.foreach(route(sess, _))
+      // SHOW SESSION materializes the conf reads into a literal relation
+      routeRows(sess, "SHOW SESSION")
     } finally saved.foreach {
       case (k, Some(v)) => sess.conf.set(k, v)
       case (k, None)    => sess.conf.unset(k)
@@ -871,17 +835,6 @@ object GraftCli {
       if (fs.exists(p)) fs.delete(p, true)
     }
 
-  /** s17's front door: route a DELETE statement through the REAL router
-    * regex + rewrite (the entry needs the routed path, not a direct
-    * helper call). Returns rows deleted. */
-  private[graft] def deleteStatement(spark: SparkSession, stmt: String): Long =
-    stmt.stripSuffix(";") match {
-      case Delete(table, whereCond) =>
-        deleteFrom(spark, table, Option(whereCond))
-      case other => throw new IllegalArgumentException(
-        s"not a DELETE statement: $other")
-    }
-
   /** Session transaction envelope (Presto semantics over autocommit
     * connectors): `active` while a START TRANSACTION block is open,
     * `aborted` once a statement inside it failed — from then on every
@@ -889,6 +842,10 @@ object GraftCli {
   private[graft] final class TxnState {
     var active = false
     var aborted = false
+
+    /** Run `body`; its failure inside an open transaction aborts it. */
+    def guard[T](body: => T): T =
+      try body catch { case e: Exception => if (active) aborted = true; throw e }
   }
 
   /** Validate START TRANSACTION's mode list (Presto 0.248 grammar:
@@ -1088,29 +1045,133 @@ object GraftCli {
       .like(p.toLowerCase(java.util.Locale.ROOT)))).getOrElse(df)
   }
 
-  /** s21's front door: route a SHOW PARTITIONS statement through the
-    * REAL router regex (the driver needs a DataFrame; main's render
-    * path wraps this same plumbing). */
-  private[graft] def showPartitionsStatement(spark: SparkSession,
-      stmt: String): DataFrame =
-    stmt.stripSuffix(";") match {
-      case ShowPartitions(t) => showPartitions(spark, t)
-      case other => throw new IllegalArgumentException(
-        s"not a SHOW PARTITIONS statement: $other")
-    }
+  /** What one statement produces: result rows, a free-text report
+    * (EXPLAIN ANALYZE, EXPLAIN (TYPE DISTRIBUTED)), or the line that
+    * acknowledges a statement run for its effect. */
+  private[graft] sealed trait Outcome
+  private[graft] final case class Rows(df: DataFrame) extends Outcome
+  private[graft] final case class Report(text: String) extends Outcome
+  private[graft] final case class Ack(line: String) extends Outcome
 
-  /** Run one ;-stripped statement: route EXPLAIN ANALYZE and the
-    * prepared-statement verbs, render everything else (including
-    * CREATE/DROP VIEW, which Spark SQL serves natively through the
-    * session catalog — the Presto views surface), and report wall time
-    * to `err` (stderr, so csv/json stdout stays machine-clean — the
-    * reference CLI reports elapsed per query the same way). EXPLAIN
-    * ANALYZE's plan report is free text, so under csv/json it ALSO goes
-    * to stderr — stdout carries machine-readable rows only, in every
-    * mode. The timing line prints even when the statement throws
+  /** The one statement router: every SQL-text path (the CLI's
+    * runStatement, `sql`, the s-entries) sends a statement here, so each
+    * statement regex is matched in this one place. Routes the
+    * transaction verbs, EXPLAIN ANALYZE / typed EXPLAIN, the
+    * prepared-statement verbs and the Presto statements Spark SQL lacks;
+    * everything else (including CREATE/DROP VIEW, which Spark serves
+    * natively through the session catalog) is bare SQL after the dialect
+    * rewrite. `prepared` is the session's named-statement store and `txn`
+    * its transaction envelope (the CLI main owns one of each per run,
+    * like a Presto session). */
+  private[graft] def route(spark: SparkSession, stmt: String,
+                           prepared: scala.collection.mutable.Map[String, String] =
+                             scala.collection.mutable.Map.empty,
+                           txn: TxnState = new TxnState): Outcome = txn.guard {
+    def lower(name: String) = name.toLowerCase(java.util.Locale.ROOT)
+    stmt.stripSuffix(";") match {
+      // transaction verbs run FIRST: ROLLBACK must work inside an
+      // aborted block, and the envelope check below must not see them
+      case StartTransaction(modes) =>
+        if (txn.active) throw new IllegalStateException(
+          "START TRANSACTION: a transaction is already in progress " +
+            "(nested transactions are not supported)")
+        Option(modes).foreach(validateTxnModes)
+        txn.active = true; txn.aborted = false
+        Ack("START TRANSACTION (autocommit connectors: each statement commits individually)")
+      case CommitStmt() =>
+        if (!txn.active) throw new IllegalStateException(
+          "COMMIT: no transaction in progress")
+        if (txn.aborted) throw new IllegalStateException(
+          "COMMIT: the current transaction is aborted — ROLLBACK it")
+        txn.active = false
+        Ack("COMMIT")
+      case RollbackStmt() =>
+        if (!txn.active) throw new IllegalStateException(
+          "ROLLBACK: no transaction in progress")
+        txn.active = false; txn.aborted = false
+        Ack("ROLLBACK (autocommit connectors: statements that completed were already committed)")
+      case _ if txn.active && txn.aborted =>
+        throw new IllegalStateException(
+          "current transaction is aborted — ROLLBACK before issuing " +
+            "further statements")
+      // EXPLAIN paths get the same dialect rewrite as execution paths:
+      // a Presto-spelled query that runs must also EXPLAIN (r17 ADVICE)
+      case ExplainAnalyze(query) =>
+        Report(explainAnalyze(spark, rewriteDialect(query)))
+      case ExplainTyped(mode, query0) =>
+        val query = rewriteDialect(query0)
+        if (mode.equalsIgnoreCase("VALIDATE")) Rows(explainValidate(spark, query))
+        else if (mode.equalsIgnoreCase("DISTRIBUTED")) Report(explainDistributed(spark, query))
+        else Rows(explainIo(spark, query))
+      case Prepare(name, query) =>
+        prepared(lower(name)) = query
+        Ack(s"PREPARE ${lower(name)}")
+      case Deallocate(name) =>
+        val key = lower(name)
+        if (prepared.remove(key).isEmpty) throw new IllegalArgumentException(
+          s"DEALLOCATE PREPARE: no prepared statement named $key")
+        Ack(s"DEALLOCATE $key")
+      case Execute(name, usingArgs) =>
+        val key = lower(name)
+        val template = prepared.getOrElse(key, throw new IllegalArgumentException(
+          s"EXECUTE: no prepared statement named $key (PREPARE it first)"))
+        // rewrite the TEMPLATE, then bind: a bound string PARAMETER whose
+        // value happens to contain a rewritable pattern must stay verbatim
+        Rows(spark.sql(bindParameters(rewriteDialect(template),
+          Option(usingArgs).map(splitArgs).getOrElse(Nil))))
+      case ShowStats(mode, table) =>
+        Rows(showStats(spark, table, exact = "EXACT".equalsIgnoreCase(mode)))
+      case Analyze(table) =>
+        val t = lower(table)
+        if (!Tables.all.contains(t)) throw new IllegalArgumentException(
+          s"ANALYZE: unknown table $t (warehouse tables: ${Tables.all.mkString(", ")})")
+        val dir = spark.conf.getOption("spark.graft.sfDir").getOrElse(
+          throw new IllegalStateException("ANALYZE: session has no warehouse dir"))
+        graft.plans.CboSupport.registerWithStats(spark, dir, Seq(t))
+        Ack(s"ANALYZE $t -> catalog table ${graft.plans.CboSupport.tableName(t)} " +
+          "(row count + column stats recorded; enable CBO to feed the planner)")
+      case Delete(table, whereCond) =>
+        val n = deleteFrom(spark, table, Option(whereCond))
+        Ack(s"DELETE $n row(s) from ${lower(table)}")
+      case SetSession(name, value) =>
+        setSession(spark, name, value)
+        Ack(s"SET SESSION ${lower(name)}")
+      case ResetSession(name) =>
+        resetSession(spark, name)
+        Ack(s"RESET SESSION ${lower(name)}")
+      case ShowSession() => Rows(showSession(spark))
+      case DescribeInput(name) => Rows(describeInput(spark, prepared, name))
+      case DescribeOutput(name) => Rows(describeOutput(spark, prepared, name))
+      case ShowColumns(table) => Rows(showColumns(spark, table))
+      case ShowPartitions(table) => Rows(showPartitions(spark, table))
+      case ShowFunctions(pattern) => Rows(showFunctions(spark, Option(pattern)))
+      case bare => Rows(spark.sql(rewriteDialect(bare)))
+    }
+  }
+
+  /** The rows `route` gives for `stmt`; a statement that produces a
+    * report or an acknowledgement instead fails, naming its verb. */
+  private[graft] def routeRows(spark: SparkSession, stmt: String,
+      prepared: scala.collection.mutable.Map[String, String] =
+        scala.collection.mutable.Map.empty): DataFrame = route(spark, stmt, prepared) match {
+    case Rows(df) => df
+    case other =>
+      val verb = stmt.trim.takeWhile(!_.isWhitespace).toUpperCase(java.util.Locale.ROOT)
+      val what = if (other.isInstanceOf[Report]) "a text report" else "an acknowledgement"
+      throw new IllegalArgumentException(
+        s"$verb returns $what, not rows: run it through the CLI (GraftCli.main)")
+  }
+
+  /** Run one ;-stripped statement through `route` and render its
+    * outcome: rows to `out` in `format`, an acknowledgement to `err`,
+    * and wall time to `err` (stderr, so csv/json stdout stays
+    * machine-clean — the reference CLI reports elapsed per query the
+    * same way). A text report is free text, so under csv/json it ALSO
+    * goes to stderr — stdout carries machine-readable rows only, in
+    * every mode. The timing line prints even when the statement throws
     * (finally), so a csv/json consumer can rely on exactly one timing
-    * line per statement. `prepared` is the session's named-statement
-    * store (the CLI main owns one per run, like a Presto session). */
+    * line per statement. A failure while rendering rows aborts an open
+    * transaction like a failure while routing. */
   private[graft] def runStatement(spark: SparkSession, stmt: String,
                                   format: String, out: java.io.PrintStream,
                                   err: java.io.PrintStream,
@@ -1122,106 +1183,11 @@ object GraftCli {
     // system.runtime.queries, stages attributable in .tasks, and
     // CALL system.runtime.kill_query(id) can cancel it live
     val queryId = graft.sources.GraftSystemCatalog.beginStatement(spark, stmt)
-    try stmt.stripSuffix(";") match {
-      // transaction verbs run FIRST: ROLLBACK must work inside an
-      // aborted block, and the envelope check below must not see them
-      case StartTransaction(modes) =>
-        if (txn.active) throw new IllegalStateException(
-          "START TRANSACTION: a transaction is already in progress " +
-            "(nested transactions are not supported)")
-        Option(modes).foreach(validateTxnModes)
-        txn.active = true; txn.aborted = false
-        err.println("[graft-cli] START TRANSACTION (autocommit " +
-          "connectors: each statement commits individually)")
-      case CommitStmt() =>
-        if (!txn.active) throw new IllegalStateException(
-          "COMMIT: no transaction in progress")
-        if (txn.aborted) throw new IllegalStateException(
-          "COMMIT: the current transaction is aborted — ROLLBACK it")
-        txn.active = false
-        err.println("[graft-cli] COMMIT")
-      case RollbackStmt() =>
-        if (!txn.active) throw new IllegalStateException(
-          "ROLLBACK: no transaction in progress")
-        txn.active = false; txn.aborted = false
-        err.println("[graft-cli] ROLLBACK (autocommit connectors: " +
-          "statements that completed were already committed)")
-      case _ if txn.active && txn.aborted =>
-        throw new IllegalStateException(
-          "current transaction is aborted — ROLLBACK before issuing " +
-            "further statements")
-      case ExplainAnalyze(query0) =>
-        // EXPLAIN paths get the same dialect rewrite as execution paths:
-        // a Presto-spelled query that runs must also EXPLAIN (r17 ADVICE)
-        val query = rewriteDialect(query0)
-        (if (format == "table") out else err).println(explainAnalyze(spark, query))
-      case ExplainTyped(mode, query0) =>
-        val query = rewriteDialect(query0)
-        if (mode.equalsIgnoreCase("VALIDATE"))
-          render(explainValidate(spark, query), format, out)
-        else if (mode.equalsIgnoreCase("DISTRIBUTED"))
-          (if (format == "table") out else err)
-            .println(explainDistributed(spark, query))
-        else render(explainIo(spark, query), format, out)
-      case Prepare(name, query) =>
-        prepared(name.toLowerCase(java.util.Locale.ROOT)) = query
-        err.println(s"[graft-cli] PREPARE ${name.toLowerCase(java.util.Locale.ROOT)}")
-      case Deallocate(name) =>
-        val key = name.toLowerCase(java.util.Locale.ROOT)
-        if (prepared.remove(key).isEmpty) throw new IllegalArgumentException(
-          s"DEALLOCATE PREPARE: no prepared statement named $key")
-        err.println(s"[graft-cli] DEALLOCATE $key")
-      case Execute(name, usingArgs) =>
-        val key = name.toLowerCase(java.util.Locale.ROOT)
-        val template = prepared.getOrElse(key, throw new IllegalArgumentException(
-          s"EXECUTE: no prepared statement named $key (PREPARE it first)"))
-        // rewrite the TEMPLATE, then bind: a bound string PARAMETER whose
-        // value happens to contain a rewritable pattern must stay verbatim
-        val bound = bindParameters(rewriteDialect(template),
-          Option(usingArgs).map(splitArgs).getOrElse(Nil))
-        render(spark.sql(bound), format, out)
-      case ShowStats(mode, table) =>
-        render(showStats(spark, table,
-          exact = mode != null && mode.equalsIgnoreCase("EXACT")), format, out)
-      case Analyze(table) =>
-        val t = table.toLowerCase(java.util.Locale.ROOT)
-        if (!Tables.all.contains(t)) throw new IllegalArgumentException(
-          s"ANALYZE: unknown table $t (warehouse tables: ${Tables.all.mkString(", ")})")
-        val dir = spark.conf.getOption("spark.graft.sfDir").getOrElse(
-          throw new IllegalStateException("ANALYZE: session has no warehouse dir"))
-        graft.plans.CboSupport.registerWithStats(spark, dir, Seq(t))
-        err.println(s"[graft-cli] ANALYZE $t -> catalog table " +
-          s"${graft.plans.CboSupport.tableName(t)} (row count + column stats " +
-          "recorded; enable CBO to feed the planner)")
-      case Delete(table, whereCond) =>
-        val n = deleteFrom(spark, table, Option(whereCond))
-        err.println(s"[graft-cli] DELETE $n row(s) from " +
-          table.toLowerCase(java.util.Locale.ROOT))
-      case SetSession(name, value) =>
-        setSession(spark, name, value)
-        err.println(s"[graft-cli] SET SESSION ${name.toLowerCase(java.util.Locale.ROOT)}")
-      case ResetSession(name) =>
-        resetSession(spark, name)
-        err.println(s"[graft-cli] RESET SESSION ${name.toLowerCase(java.util.Locale.ROOT)}")
-      case ShowSession() =>
-        render(showSession(spark), format, out)
-      case DescribeInput(name) =>
-        render(describeInput(spark, prepared, name), format, out)
-      case DescribeOutput(name) =>
-        render(describeOutput(spark, prepared, name), format, out)
-      case ShowColumns(table) =>
-        render(showColumns(spark, table), format, out)
-      case ShowPartitions(table) =>
-        render(showPartitions(spark, table), format, out)
-      case ShowFunctions(pattern) =>
-        render(showFunctions(spark, Option(pattern)), format, out)
-      case bare => render(spark.sql(rewriteDialect(bare)), format, out)
-    } catch { case e: Exception =>
-      // Presto transaction semantics: a statement failure inside an open
-      // transaction aborts it — only ROLLBACK is accepted afterwards
-      if (txn.active) txn.aborted = true
-      throw e
-    } finally {
+    try txn.guard(route(spark, stmt, prepared, txn) match {
+      case Rows(df) => render(df, format, out)
+      case Report(text) => (if (format == "table") out else err).println(text)
+      case Ack(line) => err.println(s"[graft-cli] $line")
+    }) finally {
       graft.sources.GraftSystemCatalog.endStatement(spark, queryId)
       err.println(f"[graft-cli] ${(System.nanoTime() - t0) / 1e9}%.2fs")
     }
@@ -1273,33 +1239,11 @@ object GraftCli {
     if (!preexisting) spark.stop()
   }
 
-  /** s12's front door: run a PREPARE and an EXECUTE through the REAL
-    * statement router's regexes and parameter binder, returning the
-    * bound query's frame (the driver needs a DataFrame; main's render
-    * path wraps this same plumbing). */
-  private[graft] def prepareExecute(spark: SparkSession, sfDir: String,
-      prepareStmt: String, executeStmt: String): DataFrame = {
-    open(spark, sfDir)
-    val store = scala.collection.mutable.Map[String, String]()
-    prepareStmt.stripSuffix(";") match {
-      case Prepare(name, query) =>
-        store(name.toLowerCase(java.util.Locale.ROOT)) = query
-      case other => throw new IllegalArgumentException(
-        s"not a PREPARE statement: $other")
-    }
-    executeStmt.stripSuffix(";") match {
-      case Execute(name, usingArgs) =>
-        val template = store(name.toLowerCase(java.util.Locale.ROOT))
-        spark.sql(bindParameters(rewriteDialect(template),
-          Option(usingArgs).map(splitArgs).getOrElse(Nil)))
-      case other => throw new IllegalArgumentException(
-        s"not an EXECUTE statement: $other")
-    }
-  }
-
   /** Inventory entries exercised THROUGH the SQL-text path (same driver
     * oracle discipline as the DataFrame entries): proves a reference user
-    * can point SQL at this engine and get verified answers. */
+    * can point SQL at this engine and get verified answers. Every
+    * statement an entry issues as text goes through `route`, the router
+    * the CLI runs. */
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "s01_sql_agg" -> ((s, d) => sql(s, d, """
       SELECT l_returnflag, l_linestatus,
@@ -1462,10 +1406,11 @@ object GraftCli {
     // s12: Presto-CLI prepared statements (PREPARE q FROM ... ? ... /
     // EXECUTE q USING ...) — the parameterized-dashboard UX every BI
     // tool drives through the reference's CLI. The ?s bind through the
-    // CLI's real regex + splice path, so this entry breaks if the
-    // binder mis-handles quoting, arity, or placement.
-    "s12_sql_prepared" -> ((s, d) => prepareExecute(s, d,
-      """PREPARE revenue_q FROM
+    // CLI's splice path, so this entry breaks if the binder mis-handles
+    // quoting, arity, or placement.
+    "s12_sql_prepared" -> ((s, d) => {
+      val (sess, store) = (open(s, d), scala.collection.mutable.Map[String, String]())
+      route(sess, """PREPARE revenue_q FROM
          SELECT l_returnflag,
            CAST(SUM(CAST(l_extendedprice * l_discount AS DECIMAL(18,6)))
              AS DOUBLE) AS revenue,
@@ -1473,8 +1418,9 @@ object GraftCli {
          FROM lineitem
          WHERE l_discount BETWEEN ? AND ? AND l_quantity < ?
            AND 'quoted?' <> 'never'
-         GROUP BY l_returnflag ORDER BY l_returnflag""",
-      "EXECUTE revenue_q USING 0.05, 0.07, 24.0")),
+         GROUP BY l_returnflag ORDER BY l_returnflag""", store)
+      routeRows(sess, "EXECUTE revenue_q USING 0.05, 0.07, 24.0", store)
+    }),
     // s13: views through the front door (Presto CREATE VIEW; the
     // reference UX is arbitrary DDL over `presto-mgr.py connect`).
     // The view is DEFINED in one statement and CONSUMED in a later one
@@ -1492,18 +1438,16 @@ object GraftCli {
     }),
     // s14: Presto SHOW STATS FOR table — the planner-statistics surface
     // (NDV / nulls fraction / low-high / varchar data size per
-    // column + the table row_count). Routed through the CLI's real
-    // statement regex; ONE aggregate pass over the table, column-count
-    // fan-out only. EXACT here because the oracle replays countDistinct;
-    // the CLI default (plain SHOW STATS FOR t) serves HLL estimates,
-    // like Presto's planner stats.
-    "s14_sql_show_stats" -> ((s, d) =>
-      showStatsStatement(s, d, "SHOW STATS EXACT FOR orders")),
+    // column + the table row_count). ONE aggregate pass over the table,
+    // column-count fan-out only. EXACT here because the oracle replays
+    // countDistinct; the CLI default (plain SHOW STATS FOR t) serves HLL
+    // estimates, like Presto's planner stats.
+    "s14_sql_show_stats" -> ((s, d) => sql(s, d, "SHOW STATS EXACT FOR orders")),
     // s15: Presto session properties (SET SESSION / SHOW SESSION /
     // RESET SESSION — the per-session tuning surface; Presto docs).
-    // Two SETs route through the real regex + validation + conf-write
-    // path; the SHOW SESSION snapshot reads values back from the LIVE
-    // Spark conf, so a SET that silently failed to land forks the hash.
+    // The SETs run the validation + conf-write path; the SHOW SESSION
+    // snapshot reads values back from the LIVE Spark conf, so a SET that
+    // silently failed to land forks the hash.
     // RESET SESSION adaptive_execution exercises the default-restore
     // path in the same script.
     "s15_sql_session" -> ((s, d) => sessionEntry(s, d, Seq(
@@ -1537,11 +1481,10 @@ object GraftCli {
          USING 'F', 1000.0""")),
     // s17: DELETE FROM through the front door (Presto 0.248 DELETE on
     // writable connectors) — CTAS a managed copy, route the DELETE
-    // through the real statement regex + anti-filter rewrite + catalog
-    // swap, then aggregate the survivors. The oracle replays the
-    // survivor set directly from the source table, so a rewrite that
-    // drops the wrong rows (predicate NULL semantics, the swap losing
-    // files) forks the hash.
+    // (anti-filter rewrite + catalog swap), then aggregate the
+    // survivors. The oracle replays the survivor set directly from the
+    // source table, so a rewrite that drops the wrong rows (predicate
+    // NULL semantics, the swap losing files) forks the hash.
     "s17_sql_delete" -> ((s, d) => {
       val sess = open(s, d)
       sess.sql("DROP TABLE IF EXISTS s17_dml_del")
@@ -1549,8 +1492,7 @@ object GraftCli {
       sess.sql("""CREATE TABLE s17_dml_del AS
         SELECT l_orderkey, l_linenumber, l_quantity, l_returnflag
         FROM lineitem""")
-      deleteStatement(sess,
-        "DELETE FROM s17_dml_del WHERE l_returnflag = 'R' AND l_quantity > 25")
+      route(sess, "DELETE FROM s17_dml_del WHERE l_returnflag = 'R' AND l_quantity > 25")
       sess.sql("""SELECT l_returnflag, COUNT(*) AS n_rows,
           CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
         FROM s17_dml_del GROUP BY l_returnflag ORDER BY l_returnflag""")
@@ -1558,8 +1500,8 @@ object GraftCli {
     // s18: DESCRIBE INPUT / DESCRIBE OUTPUT — Presto 0.248's prepared-
     // statement metadata surface, the half of s12's PREPARE/EXECUTE that
     // client libraries call to type parameter markers and result sets
-    // BEFORE fetching. PREPARE routes through the real statement regex
-    // into a session store; both DESCRIBEs run against it. One frame:
+    // BEFORE fetching. PREPARE fills a session store; both DESCRIBEs
+    // run against it. One frame:
     // parameter rows (position + inferred type, `unknown` where no
     // column context exists) then result rows (ordinal, name, type).
     "s18_sql_describe_io" -> ((s, d) => describeIoEntry(s, d)),
@@ -1607,9 +1549,9 @@ object GraftCli {
     // s21: SHOW PARTITIONS FROM t — the Presto/Hive-connector staple for
     // date-partitioned corpora. CTAS a managed table PARTITIONED BY the
     // order year (the write lays out one directory per year — the layout
-    // a 100 TB corpus scan prunes on), then route SHOW PARTITIONS through
-    // the real statement regex: the typed listing comes from catalog
-    // METADATA (partition paths), no data files open. The oracle replays
+    // a 100 TB corpus scan prunes on), then route SHOW PARTITIONS: the
+    // typed listing comes from catalog METADATA (partition paths), no
+    // data files open. The oracle replays
     // the distinct years from the source table — a partition the write
     // dropped or the listing missed forks the hash. The companion
     // partition-PRUNING evidence (PartitionFilters in the scan,
@@ -1622,7 +1564,7 @@ object GraftCli {
         SELECT o_orderkey, o_totalprice,
           CAST(year(o_orderdate) AS INT) AS o_year
         FROM orders""")
-      showPartitionsStatement(sess, "SHOW PARTITIONS FROM s21_part_orders")
+      routeRows(sess, "SHOW PARTITIONS FROM s21_part_orders")
         .orderBy(col("o_year"))
     }),
     // s22: literal Presto-SPELLED SQL through the front door (r16 verdict
@@ -1756,31 +1698,26 @@ object GraftCli {
       ORDER BY o_orderkey, x, k"""))
   )
 
-  /** s18's front door: PREPARE through the REAL router regex, then both
-    * DESCRIBE INPUT and DESCRIBE OUTPUT against the same store, unioned
-    * with a kind discriminator. The statement exercises all three
-    * inference shapes: a comparison-adjacent marker (typed from the
-    * column), an IN-list marker, and a marker with no column context
-    * (reports `unknown`). */
+  /** s18: PREPARE, then DESCRIBE INPUT and DESCRIBE OUTPUT against the
+    * same store, unioned with a kind discriminator. The statement
+    * exercises all three inference shapes: a comparison-adjacent marker
+    * (typed from the column), an IN-list marker, and a marker with no
+    * column context (reports `unknown`). */
   private[graft] def describeIoEntry(spark: SparkSession, sfDir: String): DataFrame = {
-    val sess = open(spark, sfDir)
-    val store = scala.collection.mutable.Map[String, String]()
-    ("""PREPARE sq FROM
+    val (sess, store) = (open(spark, sfDir), scala.collection.mutable.Map[String, String]())
+    route(sess, """PREPARE sq FROM
        SELECT o_orderpriority,
          COUNT(*) AS n,
          CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
        FROM orders
        WHERE o_orderstatus = ? AND o_totalprice >= ?
          AND o_custkey IN (?) AND coalesce(NULL, ?) IS NULL
-       GROUP BY o_orderpriority ORDER BY o_orderpriority""": String) match {
-      case Prepare(n, q) => store(n.toLowerCase(java.util.Locale.ROOT)) = q
-      case other => throw new IllegalStateException(s"unroutable PREPARE: $other")
-    }
+       GROUP BY o_orderpriority ORDER BY o_orderpriority""", store)
     import org.apache.spark.sql.functions.lit
-    describeInput(sess, store, "sq")
+    routeRows(sess, "DESCRIBE INPUT sq", store)
       .select(lit("input").as("kind"), col("position").as("ord"),
         lit("?").as("name"), col("type"))
-      .unionAll(describeOutput(sess, store, "sq")
+      .unionAll(routeRows(sess, "DESCRIBE OUTPUT sq", store)
         .select(lit("output").as("kind"), col("ordinal").as("ord"),
           col("column_name").as("name"), col("type")))
       .orderBy(col("kind"), col("ord"))

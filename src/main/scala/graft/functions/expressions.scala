@@ -21,8 +21,7 @@ import org.apache.spark.unsafe.types.UTF8String
  * serialization) inside the whole-stage codegen span, and the row's input
  * types are enforced at analysis. The classes after the table carry logic
  * one call cannot: the aggregates and sketches ([[GeometricMean]],
- * [[BloomFilterBuild]], [[QuantileSketchAgg]], [[QuantileSketchMerge]])
- * and the n-ary geometry predicates ([[NaryDoubleKernel]]).
+ * [[BloomFilterBuild]], [[QuantileSketchAgg]], [[QuantileSketchMerge]]).
  */
 
 /** Shared per-row kernels. Static so generated code can call them. */
@@ -1951,6 +1950,14 @@ object KernelTable {
   val sketchQuantileBin = row(Some("sketch_quantile_bin"), "sketchQuantileBin",
     Seq(longs, DoubleType), _ => IntegerType)
 
+  /** Presto ST_Intersects, two segments as x1,y1, x2,y2, x3,y3, x4,y4. */
+  val stIntersects = row(Some("st_intersects"), "segmentsIntersect", Seq.fill(8)(DoubleType),
+    _ => BooleanType)
+
+  /** Presto ST_Distance, point to segment as px,py, x1,y1, x2,y2. */
+  val stDistance = row(Some("st_distance"), "pointSegmentDist", Seq.fill(6)(DoubleType),
+    _ => DoubleType)
+
   /** Presto ST_Area, polygon-shell case. */
   val stArea = row(Some("st_area"), "ringArea", ring, _ => DoubleType)
 
@@ -2175,55 +2182,21 @@ case class BloomFilterBuild(
     copy(child = c)
 }
 
-/**
- * quantile_sketch_agg(bin) -> array<bigint> — the SQL-surface form of the
- * [[graft.operators.QuantileSketch]] histogram sketch (Presto parity:
- * qdigest_agg, which 0.248 exposes as a SQL aggregate): per-group bin
- * counts as a dense array indexed by 1-based bin. The buffer grows to the
- * highest bin actually seen (so callers don't pass a bins constant), is
- * merged by elementwise addition (commutative, associative — map-side
- * combine for free), and is CONSTANT-sized per group regardless of group
- * cardinality: the scale shape that makes a two-level percentile rollup
- * (leaf sketch → merged sketch) run without re-touching the corpus.
- * Deterministic by construction — unlike qdigest's engine-defined
- * internals, the array is hash-verifiable cross-engine.
- */
-case class QuantileSketchAgg(
-    child: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
+/** The buffer both sketch aggregates share: a dense array<bigint> of
+  * per-bin counts that grows to the highest bin seen and merges by
+  * elementwise addition (commutative, associative — map-side combine for
+  * free). Subclasses differ only in how one input row updates it. */
+abstract class BinCountsAggregate
   extends org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate[Array[Long]]
   with org.apache.spark.sql.catalyst.trees.UnaryLike[Expression] {
-
-  /** Runaway-memory guard: a bin index beyond this is a caller bug (the
-    * q115 topology uses 256), not a bigger sketch. */
-  private val MaxBins = 1 << 20
 
   override def nullable: Boolean = false
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
   override def createAggregationBuffer(): Array[Long] = Array.emptyLongArray
 
-  private def grown(buf: Array[Long], n: Int): Array[Long] =
+  protected def grown(buf: Array[Long], n: Int): Array[Long] =
     if (buf.length >= n) buf else java.util.Arrays.copyOf(buf, n)
-
-  override def update(buf: Array[Long], input: InternalRow): Array[Long] = {
-    val v = child.eval(input)
-    if (v == null) buf
-    else {
-      val bin = v match {
-        case i: Int => i.toLong
-        case l: Long => l
-        case other => throw new IllegalArgumentException(
-          s"quantile_sketch_agg: bin must be integral, got $other")
-      }
-      require(bin >= 1 && bin <= MaxBins,
-        s"quantile_sketch_agg: bin must be in [1, $MaxBins], got $bin")
-      val b = grown(buf, bin.toInt)
-      b(bin.toInt - 1) += 1
-      b
-    }
-  }
 
   override def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
     val m = grown(a, b.length)
@@ -2245,6 +2218,46 @@ case class QuantileSketchAgg(
     java.nio.ByteBuffer.wrap(bytes).asLongBuffer().get(out)
     out
   }
+}
+
+/**
+ * quantile_sketch_agg(bin) -> array<bigint> — the SQL-surface form of the
+ * [[graft.operators.QuantileSketch]] histogram sketch (Presto parity:
+ * qdigest_agg, which 0.248 exposes as a SQL aggregate): per-group bin
+ * counts as a dense array indexed by 1-based bin. The buffer grows to the
+ * highest bin actually seen (so callers don't pass a bins constant) and
+ * is CONSTANT-sized per group regardless of group cardinality: the scale
+ * shape that makes a two-level percentile rollup (leaf sketch → merged
+ * sketch) run without re-touching the corpus. Deterministic by
+ * construction — unlike qdigest's engine-defined internals, the array is
+ * hash-verifiable cross-engine.
+ */
+case class QuantileSketchAgg(
+    child: Expression,
+    mutableAggBufferOffset: Int = 0,
+    inputAggBufferOffset: Int = 0) extends BinCountsAggregate {
+
+  /** Runaway-memory guard: a bin index beyond this is a caller bug (the
+    * q115 topology uses 256), not a bigger sketch. */
+  private val MaxBins = 1 << 20
+
+  override def update(buf: Array[Long], input: InternalRow): Array[Long] = {
+    val v = child.eval(input)
+    if (v == null) buf
+    else {
+      val bin = v match {
+        case i: Int => i.toLong
+        case l: Long => l
+        case other => throw new IllegalArgumentException(
+          s"quantile_sketch_agg: bin must be integral, got $other")
+      }
+      require(bin >= 1 && bin <= MaxBins,
+        s"quantile_sketch_agg: bin must be in [1, $MaxBins], got $bin")
+      val b = grown(buf, bin.toInt)
+      b(bin.toInt - 1) += 1
+      b
+    }
+  }
 
   override def withNewMutableAggBufferOffset(newOffset: Int): QuantileSketchAgg =
     copy(mutableAggBufferOffset = newOffset)
@@ -2264,47 +2277,18 @@ case class QuantileSketchAgg(
 case class QuantileSketchMerge(
     child: Expression,
     mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate[Array[Long]]
-  with org.apache.spark.sql.catalyst.trees.UnaryLike[Expression] {
-
-  override def nullable: Boolean = false
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def createAggregationBuffer(): Array[Long] = Array.emptyLongArray
+    inputAggBufferOffset: Int = 0) extends BinCountsAggregate {
 
   override def update(buf: Array[Long], input: InternalRow): Array[Long] = {
     val v = child.eval(input)
     if (v == null) buf
     else {
       val arr = v.asInstanceOf[ArrayData]
-      val m = if (buf.length >= arr.numElements()) buf
-        else java.util.Arrays.copyOf(buf, arr.numElements())
+      val m = grown(buf, arr.numElements())
       var i = 0
       while (i < arr.numElements()) { m(i) += arr.getLong(i); i += 1 }
       m
     }
-  }
-
-  override def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
-    val m = if (a.length >= b.length) a else java.util.Arrays.copyOf(a, b.length)
-    var i = 0
-    while (i < b.length) { m(i) += b(i); i += 1 }
-    m
-  }
-
-  override def eval(buf: Array[Long]): Any = new GenericArrayData(buf)
-
-  override def serialize(buf: Array[Long]): Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(8 * buf.length)
-    bb.asLongBuffer().put(buf)
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val out = new Array[Long](bytes.length / 8)
-    java.nio.ByteBuffer.wrap(bytes).asLongBuffer().get(out)
-    out
   }
 
   override def withNewMutableAggBufferOffset(newOffset: Int): QuantileSketchMerge =
@@ -2313,96 +2297,4 @@ case class QuantileSketchMerge(
     copy(inputAggBufferOffset = newOffset)
   override protected def withNewChildInternal(c: Expression): QuantileSketchMerge =
     copy(child = c)
-}
-
-/** Shared shape for the n-ary geometry predicates (Catalyst ships fixed
-  * helpers only up to QuaternaryExpression; segment-segment needs 8
-  * doubles, point-segment 6): children all cast to double upstream, one
-  * static-kernel call per row, full codegen with standard null
-  * short-circuiting so the expression stays inside whole-stage spans. */
-trait NaryDoubleKernel extends Expression {
-  /** Fully-qualified static kernel, e.g.
-    * "graft.functions.Kernels.segmentsIntersect". */
-  protected def kernel: String
-  /** Java type + neutral initial value of the result. */
-  protected def javaType: String
-  protected def javaInit: String
-  protected def evalKernel(args: Array[Double]): Any
-
-  override def nullable: Boolean = children.exists(_.nullable)
-  override def foldable: Boolean = children.forall(_.foldable)
-
-  override def eval(input: InternalRow): Any = {
-    val args = new Array[Double](children.length)
-    var i = 0
-    while (i < children.length) {
-      val v = children(i).eval(input)
-      if (v == null) return null
-      args(i) = v.asInstanceOf[Double]
-      i += 1
-    }
-    evalKernel(args)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val gens = children.map(_.genCode(ctx))
-    val childCode = gens.map(_.code).reduce(_ + _)
-    val callArgs = gens.map(_.value.toString).mkString(", ")
-    if (nullable) {
-      val anyNull = gens.map(_.isNull.toString).mkString(" || ")
-      ev.copy(code = childCode + code"""
-        boolean ${ev.isNull} = $anyNull;
-        $javaType ${ev.value} = $javaInit;
-        if (!${ev.isNull}) { ${ev.value} = $kernel($callArgs); }""")
-    } else {
-      ev.copy(code = childCode + code"""
-        $javaType ${ev.value} = $kernel($callArgs);""",
-        isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
-    }
-  }
-}
-
-/** st_intersects(x1,y1, x2,y2, x3,y3, x4,y4) -> boolean — closed-segment
-  * intersection (Presto ST_Intersects' segment-segment core; reference
-  * surface: Presto 0.248's geospatial plugin). Orientation-sign test +
-  * collinear/touching bounding checks; see [[Kernels.segmentsIntersect]].
-  * Pair with a cheap bounding-box predicate (plain comparisons) as the
-  * prefilter — at scale the pruning form is a bbox/tile JOIN KEY
-  * (bing_tile_quadkey) so candidate pairs never materialize. */
-case class SegmentsIntersect(children: IndexedSeq[Expression])
-  extends NaryDoubleKernel {
-  require(children.length == 8,
-    s"st_intersects takes 8 coordinates (two segments), got ${children.length}")
-
-  override def dataType: DataType = BooleanType
-  override protected def kernel: String = "graft.functions.Kernels.segmentsIntersect"
-  override protected def javaType: String = "boolean"
-  override protected def javaInit: String = "false"
-  override protected def evalKernel(a: Array[Double]): Any =
-    Kernels.segmentsIntersect(a(0), a(1), a(2), a(3), a(4), a(5), a(6), a(7))
-
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): SegmentsIntersect =
-    copy(children = newChildren)
-}
-
-/** st_distance(px,py, x1,y1, x2,y2) -> double — Euclidean distance from
-  * a point to a closed segment (Presto ST_Distance's point-to-segment
-  * core); see [[Kernels.pointSegmentDist]]. */
-case class PointSegmentDist(children: IndexedSeq[Expression])
-  extends NaryDoubleKernel {
-  require(children.length == 6,
-    s"st_distance takes 6 coordinates (point + segment), got ${children.length}")
-
-  override def dataType: DataType = DoubleType
-  override protected def kernel: String = "graft.functions.Kernels.pointSegmentDist"
-  override protected def javaType: String = "double"
-  override protected def javaInit: String = "0.0"
-  override protected def evalKernel(a: Array[Double]): Any =
-    Kernels.pointSegmentDist(a(0), a(1), a(2), a(3), a(4), a(5))
-
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): PointSegmentDist =
-    copy(children = newChildren)
 }

@@ -84,14 +84,23 @@ object PlanDigest {
       case a: AdaptiveSparkPlanExec => a.executedPlan
       case p => p
     }
+    render(root)(describe) + s"CodegenFallback exprs: ${codegenFallbacks(root)}\n"
+  }
+
+  /** An executed plan one node per line, indented by depth, with `line`
+    * rendering each node. The walk descends where `children` does not
+    * reach: the final plan of an adaptive plan (its initial plan never
+    * ran), the subtree of a query stage, and the plan of each scalar/IN subquery under a `Subquery:`
+    * line. EXPLAIN ANALYZE shares it. */
+  def render(root: SparkPlan)(line: SparkPlan => String): String = {
     val sb = new StringBuilder
     def walk(p: SparkPlan, depth: Int): Unit = {
-      sb.append("  " * depth).append(describe(p)).append('\n')
+      sb.append("  " * depth).append(line(p)).append('\n')
       p match {
         // post-execution adaptive plans (the x06–x08 side captures) wrap
         // every materialized stage in a QueryStageExec whose subtree
-        // hangs off .plan, not .children — descend or the digest stops
-        // at the wrapper
+        // hangs off .plan, not .children — descend or the walk stops at
+        // the wrapper
         case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
           walk(q.plan, depth + 1)
         // a nested adaptive plan (e.g. the bloom-filter build subquery)
@@ -108,7 +117,6 @@ object PlanDigest {
       }
     }
     walk(root, 0)
-    sb.append("CodegenFallback exprs: ").append(codegenFallbacks(root)).append('\n')
     sb.toString
   }
 

@@ -177,6 +177,73 @@ class CliSpec extends GraftSpec {
     assert("\\[graft-cli\\] \\d+\\.\\d\\ds".r.findAllIn(err2).size == 1, err2)
   }
 
+  test("EXPLAIN ANALYZE reports a scalar subquery's operators and metrics") {
+    GraftCli.open(spark, sf)
+    val outB = new java.io.ByteArrayOutputStream()
+    val outP = new java.io.PrintStream(outB, true, "UTF-8")
+    GraftCli.runStatement(spark,
+      "EXPLAIN ANALYZE SELECT o_orderkey FROM orders " +
+        "WHERE o_totalprice > (SELECT avg(o_totalprice) FROM orders)",
+      "table", outP, new java.io.PrintStream(new java.io.ByteArrayOutputStream()))
+    val report = outB.toString("UTF-8")
+    val lines = report.linesIterator.toSeq
+    val sub = lines.indexWhere(_.trim == "Subquery:")
+    assert(sub >= 0, s"no subquery section:\n$report")
+    // the subquery's aggregate ran and carries its runtime metrics
+    assert(lines.drop(sub).exists(l => l.contains("HashAggregate") &&
+      l.contains("numOutputRows=")), report)
+    // both scans of orders: the outer query's and the subquery's
+    assert(lines.count(_.trim.startsWith("Scan parquet")) >= 2, report)
+  }
+
+  test("GraftCli.sql and the CLI's csv rendering give the same rows for every rows verb") {
+    val s = GraftCli.open(spark, sf)
+    val sink = new java.io.PrintStream(new java.io.ByteArrayOutputStream())
+    val prepared = scala.collection.mutable.Map[String, String]()
+    GraftCli.runStatement(s, "PREPARE cli_rq FROM SELECT r_regionkey, r_name " +
+      "FROM region WHERE r_regionkey < ? ORDER BY r_regionkey", "csv", sink, sink, prepared)
+    s.sql("DROP TABLE IF EXISTS cli_route_parts")
+    GraftCli.dropStaleLocation(s, "cli_route_parts")
+    s.sql("CREATE TABLE cli_route_parts PARTITIONED BY (k) AS " +
+      "SELECT r_name, r_regionkey % 2 AS k FROM region")
+    def csv(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+      val b = new java.io.ByteArrayOutputStream()
+      GraftCli.render(df, "csv", new java.io.PrintStream(b, true, "UTF-8"))
+      b.toString("UTF-8").linesIterator.toSeq
+    }
+    // (statement, needs the prepared-statement store): a statement that
+    // names cli_rq goes through route with the store, the rest through
+    // GraftCli.sql on a fresh state
+    val cases = Seq(
+      "EXECUTE cli_rq USING 3" -> true,
+      "DESCRIBE INPUT cli_rq" -> true,
+      "DESCRIBE OUTPUT cli_rq" -> true,
+      // plain SHOW STATS was a Spark parse error through GraftCli.sql
+      "SHOW STATS FOR orders" -> false,
+      "SHOW SESSION" -> false,
+      "SHOW COLUMNS FROM nation" -> false,
+      "SHOW PARTITIONS FROM cli_route_parts" -> false,
+      "SHOW FUNCTIONS LIKE 'minhash%'" -> false,
+      "EXPLAIN (TYPE IO) SELECT n_name FROM nation WHERE n_regionkey = 1" -> false,
+      "EXPLAIN (TYPE VALIDATE) SELECT n_name FROM nation" -> false,
+      "SELECT n_name, n_regionkey FROM nation ORDER BY n_nationkey" -> false)
+    try cases.foreach { case (stmt, stored) =>
+      val viaSql = csv(if (stored) GraftCli.routeRows(s, stmt, prepared)
+                       else GraftCli.sql(s, sf, stmt))
+      val outB = new java.io.ByteArrayOutputStream()
+      GraftCli.runStatement(s, stmt, "csv",
+        new java.io.PrintStream(outB, true, "UTF-8"), sink, prepared)
+      val viaCli = outB.toString("UTF-8").linesIterator.toSeq
+      assert(viaSql.size > 1, s"$stmt returned no rows")
+      assert(viaSql.head == viaCli.head && viaSql.tail.sorted == viaCli.tail.sorted,
+        s"$stmt:\nsql=${viaSql.mkString("\n")}\ncli=${viaCli.mkString("\n")}")
+    } finally s.sql("DROP TABLE cli_route_parts")
+    // a statement that returns no rows is refused by name, not parsed by Spark
+    val e = intercept[IllegalArgumentException](
+      GraftCli.sql(s, sf, "EXPLAIN ANALYZE SELECT 1"))
+    assert(e.getMessage.contains("EXPLAIN returns a text report"), e.getMessage)
+  }
+
   test("join-strategy hints pass through the SQL front door") {
     // Presto tunes join strategy with session properties
     // (join_distribution_type); the Spark front door takes plan hints in
@@ -545,8 +612,8 @@ class CliSpec extends GraftSpec {
     // Presto's SHOW STATS serves planner estimates — the CLI default is
     // the HLL one-pass form (at 100 TB exact per-column NDV re-shuffles
     // every column's values); EXACT keeps the oracle-able exact pass.
-    val approx = GraftCli.showStatsStatement(spark, sf, "SHOW STATS FOR orders")
-    val exact = GraftCli.showStatsStatement(spark, sf, "SHOW STATS EXACT FOR orders")
+    val approx = GraftCli.sql(spark, sf, "SHOW STATS FOR orders")
+    val exact = GraftCli.sql(spark, sf, "SHOW STATS EXACT FOR orders")
     assert(approx.queryExecution.optimizedPlan.toString
       .contains("approx_count_distinct"), "default must use HLL estimates")
     val exactPlan = exact.queryExecution.optimizedPlan.toString
@@ -571,7 +638,7 @@ class CliSpec extends GraftSpec {
       }
     }
     // APPROX is also accepted explicitly
-    assert(GraftCli.showStatsStatement(spark, sf, "SHOW STATS APPROX FOR region")
+    assert(GraftCli.sql(spark, sf, "SHOW STATS APPROX FOR region")
       .queryExecution.optimizedPlan.toString.contains("approx_count_distinct"))
   }
 
@@ -798,7 +865,7 @@ class CliSpec extends GraftSpec {
       SELECT r_name, r_regionkey AS k_region,
         CASE WHEN r_regionkey < 2 THEN 'a b' ELSE 'c' END AS k_flag
       FROM region""")
-    val parts = GraftCli.showPartitionsStatement(s,
+    val parts = GraftCli.sql(s, sf,
       "SHOW PARTITIONS FROM cli_part_probe;")
     // typed columns in partition-schema order, one row per partition
     assert(parts.schema.fieldNames.toSeq == Seq("k_region", "k_flag"))
@@ -813,7 +880,7 @@ class CliSpec extends GraftSpec {
     GraftCli.dropStaleLocation(s, "cli_part_flat")
     s.sql("CREATE TABLE cli_part_flat AS SELECT 1 AS x")
     val e = intercept[IllegalArgumentException](
-      GraftCli.showPartitionsStatement(s, "SHOW PARTITIONS FROM cli_part_flat"))
+      GraftCli.sql(s, sf, "SHOW PARTITIONS FROM cli_part_flat"))
     assert(e.getMessage.contains("not partitioned"), e.getMessage)
     s.sql("DROP TABLE cli_part_probe")
     s.sql("DROP TABLE cli_part_flat")

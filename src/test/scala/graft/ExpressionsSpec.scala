@@ -919,5 +919,11 @@ class ExpressionsSpec extends GraftSpec {
     // int literals widen to bigint; an untyped NULL stays a NULL
     assert(spark.sql("SELECT hamming64(1, 3)").head().getInt(0) == 1)
     assert(spark.sql("SELECT hamming64(NULL, 3)").head().isNullAt(0))
+    // INT and DECIMAL coordinates widen to double, also when the call is
+    // constant-folded through interpreted eval
+    val geo = spark.sql("""SELECT st_intersects(0, 0, 10, 10, 0, 10, 10, 0) AS hit,
+      st_distance(5, 3, 0, 0, 10, 0.5) AS d""").head()
+    assert(geo.getBoolean(0))
+    assert(geo.getDouble(1) == graft.functions.Kernels.pointSegmentDist(5, 3, 0, 0, 10, 0.5))
   }
 }

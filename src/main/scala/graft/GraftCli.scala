@@ -1150,7 +1150,8 @@ object GraftCli {
   }
 
   /** The rows `route` gives for `stmt`; a statement that produces a
-    * report or an acknowledgement instead fails, naming its verb. */
+    * report or an acknowledgement instead fails after it ran, naming its
+    * verb. */
   private[graft] def routeRows(spark: SparkSession, stmt: String,
       prepared: scala.collection.mutable.Map[String, String] =
         scala.collection.mutable.Map.empty): DataFrame = route(spark, stmt, prepared) match {

@@ -238,7 +238,7 @@ class CliSpec extends GraftSpec {
       assert(viaSql.head == viaCli.head && viaSql.tail.sorted == viaCli.tail.sorted,
         s"$stmt:\nsql=${viaSql.mkString("\n")}\ncli=${viaCli.mkString("\n")}")
     } finally s.sql("DROP TABLE cli_route_parts")
-    // a statement that returns no rows is refused by name, not parsed by Spark
+    // a statement that returns no rows fails naming its verb
     val e = intercept[IllegalArgumentException](
       GraftCli.sql(s, sf, "EXPLAIN ANALYZE SELECT 1"))
     assert(e.getMessage.contains("EXPLAIN returns a text report"), e.getMessage)

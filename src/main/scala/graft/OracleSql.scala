@@ -44,9 +44,9 @@ object OracleSql {
   /** The fold guarded for an EMPTY merge table: when fewer than K merges
     * exist (a corpus whose alphabetic vocabulary exhausts early — the
     * open-vocab GenData arm trains only 2), the trainer simply stops
-    * (TextAnalysis.bpeTrainOf's best.nonEmpty guard), so the replay must
-    * carry syms through the missing steps (LEFT JOIN ON TRUE + CASE)
-    * rather than CROSS JOIN the chain into an empty frame. */
+    * (TextAnalysis.trainMerges emits no row once no pair remains), so
+    * the replay must carry syms through the missing steps (LEFT JOIN ON
+    * TRUE + CASE) rather than CROSS JOIN the chain into an empty frame. */
   private val bpeFoldOrKeep: String =
     s"CASE WHEN mg.m IS NULL THEN syms ELSE $bpeFold END"
 

@@ -251,11 +251,6 @@ object GraftFunctions {
   def stAsText(gtype: Column, xs: Column, ys: Column): Column =
     call(K.stAsText, gtype, xs, ys)
 
-  /** One greedy BPE merge pass over a space-joined symbol string (the
-    * t21 trainer's per-iteration kernel). */
-  def bpeMerge(syms: Column, a: Column, b: Column): Column =
-    call(K.bpeMerge, syms, a, b)
-
   /** Shoelace area of a WKT POLYGON, holes subtracted (Presto ST_Area
     * over a multi-ring polygon); null on malformed text. */
   def stAreaWkt(text: Column): Column = call(K.stAreaWkt, text)

@@ -2,8 +2,9 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
-import graft.functions.GraftFunctions
+import graft.functions.{GraftFunctions, Kernels}
 import graft.sources.Tables
 
 /**
@@ -459,29 +460,49 @@ object TextAnalysis {
    * rule). Pre-tokenization is GPT-2 style lowercase letter runs
    * (`[a-z]+`), which also pins both engines to ASCII one-char symbols so
    * substring semantics can't fork on multi-byte code points. Scale
-   * shape: the corpus explodes once to words and immediately aggregates
-   * to the VOCABULARY (the standard (word, n) wordcount shuffle — the
-   * shuffle carries counts, not text); the quadratic-ish pair fan-out
-   * then runs over DISTINCT words only, so every later stage is
-   * vocabulary-bounded and corpus-size independent — exactly why real
-   * BPE trainers (GPT-2, SentencePiece) train on word-frequency tables,
-   * not raw text.
+   * shape: the corpus explodes once to words and aggregates to the
+   * (word, n) VOCABULARY in Spark ([[wordCounts]], the only corpus-sized
+   * work); the pair fan-out is step 1 of the t21 trainer's counter
+   * ([[pairCounts]]) over the collected table on the driver — exactly why
+   * real BPE trainers (GPT-2, SentencePiece) train on word-frequency
+   * tables, not raw text. The top 50 come back as a local frame.
    */
-  def bpePairs(s: SparkSession, d: String): DataFrame = {
-    val vocab = Tables.documents(s, d)
-      .select(explode(regexp_extract_all(lower(col("text")),
-        lit("[a-z]+"), lit(0))).as("w"))
-      .groupBy(col("w")).agg(count(lit(1)).as("n"))
-      .filter(length(col("w")) >= 2)
-    vocab
-      .select(col("n"), explode(expr(
-        "transform(sequence(1, length(w) - 1), i -> concat(substring(w, i, 1), ' ', substring(w, i + 1, 1)))"))
-        .as("pair"))
-      .groupBy(col("pair"))
-      .agg(sum(col("n")).as("pair_count"))
-      .orderBy(col("pair_count").desc, col("pair"))
-      .limit(50)
+  def bpePairs(s: SparkSession, d: String): DataFrame =
+    s.createDataFrame(pairCounts(symbols(wordCounts(Tables.documents(s, d)))).toSeq
+      .sorted(PairOrder).take(50)).toDF("pair", "pair_count")
+
+  /** The corpus's `[a-z]+` words of lower(text), one row per occurrence. */
+  private val azWords: Column =
+    explode(regexp_extract_all(lower(col("text")), lit("[a-z]+"), lit(0))).as("w")
+
+  /** The (word, n) table of a (text) frame, collected: the one Spark
+    * query of t15/t21/t22 and their only corpus-sized work. Every word is
+    * kept, 1-char words too. The driver holds one (String, Long) per
+    * distinct word; `spark.driver.maxResultSize` bounds the collect and
+    * fails it loudly past that. */
+  private[graft] def wordCounts(docs: DataFrame): Seq[(String, Long)] =
+    docs.select(azWords).groupBy(col("w")).agg(count(lit(1)))
+      .collect().toSeq.map(r => (r.getString(0), r.getLong(1)))
+
+  /** The training vocabulary: words of at least 2 characters, each with
+    * its symbols space-joined (the [[Kernels.bpeMerge]] form) and n. */
+  private def symbols(words: Seq[(String, Long)]): Seq[(String, UTF8String, Long)] =
+    words.collect { case (w, n) if w.length >= 2 => (w, UTF8String.fromString(w.mkString(" ")), n) }
+
+  /** Adjacent symbol-pair counts ("a b" -> Σ n) of a training vocabulary.
+    * Overflow throws ArithmeticException, as the ANSI SUM did. */
+  private def pairCounts(vocab: Seq[(String, UTF8String, Long)]): collection.Map[String, Long] = {
+    val counts = collection.mutable.HashMap.empty[String, Long]
+    for ((_, syms, n) <- vocab; sy = syms.toString.split(" "); i <- 1 until sy.length)
+      counts.updateWith(s"${sy(i - 1)} ${sy(i)}")(c => Some(Math.addExact(c.getOrElse(0L), n)))
+    counts
   }
+
+  /** Highest count first; ties go to the smallest pair in UTF-8 byte
+    * order, which is Spark's (and DuckDB's) string order. */
+  private val PairOrder: Ordering[(String, Long)] = (x, y) =>
+    if (x._2 != y._2) java.lang.Long.compare(y._2, x._2)
+    else UTF8String.fromString(x._1).compareTo(UTF8String.fromString(y._1))
 
   /**
    * t16: script / character-class composition profile — the
@@ -656,87 +677,53 @@ object TextAnalysis {
    * pipeline actually produces — plus the corpus token count after each
    * merge (the compression curve that tells you when to stop).
    *
-   * Exactness: pair selection is (max summed count, then
-   * lexicographically smallest pair) — a total tiebreak both engines
-   * replay; counts accumulate in BIGINT; the merge application is the
-   * codegen [[graft.functions.Kernels.bpeMerge]] greedy scan, whose
-   * fold-equivalence argument (doc there) is what lets DuckDB replay it
-   * as a list_reduce. Scale shape: the corpus explodes ONCE to the
-   * (word, n) vocabulary (the only corpus-sized shuffle, count-carrying,
-   * map-side combined); each of the K iterations is two
-   * vocabulary-bounded jobs (pair argmax + token recount) over a
-   * localCheckpoint-staged frame (the k-means loop discipline — no
-   * lineage growth), and the per-iteration driver decision is ONE row
-   * (the argmax pair), the same bounded-collect contract as a09's
-   * centroids. This is exactly why production BPE trainers (GPT-2,
-   * SentencePiece) train on frequency tables, not raw text: K more
-   * iterations cost vocabulary work, not corpus work.
+   * Scale shape: the corpus's words are counted once in Spark
+   * ([[wordCounts]], the only corpus-sized work, count-carrying and
+   * map-side combined) and collected; the K merge steps then run on the
+   * driver over that table ([[trainMerges]]), as GPT-2-style,
+   * SentencePiece and HF trainers run. K more iterations cost vocabulary
+   * work on one thread, not K rounds of Spark jobs.
    */
   def bpeTrain(s: SparkSession, d: String): DataFrame =
     bpeTrainOf(s, Tables.documents(s, d), 8)
 
   /** The t21 kernel over any (text) frame — unit-testable form (the
     * spec compares the merge list against an independent driver-side
-    * reference trainer on hand-built docs). */
-  private[graft] def bpeTrainOf(s: SparkSession, docs: DataFrame, k: Int): DataFrame = {
-    val vocab0 = docs
-      .select(explode(regexp_extract_all(lower(col("text")),
-        lit("[a-z]+"), lit(0))).as("w"))
-      .groupBy(col("w")).agg(count(lit(1)).as("n"))
-      .filter(length(col("w")) >= 2)
-      .select(trim(regexp_replace(col("w"), "(.)", "$1 ")).as("syms"), col("n"))
-      .transform(graft.plans.Checkpoints.stage)
-    // guard the fully-merged single-symbol case: Spark's sequence(1, 0)
-    // steps BACKWARDS ([1, 0]) rather than returning empty
-    val pairsOf = expr(
-      """CASE WHEN size(sy) < 2 THEN array()
-         ELSE transform(sequence(1, size(sy) - 1),
-           i -> concat(element_at(sy, i), ' ', element_at(sy, i + 1))) END""")
-    var cur = vocab0
-    // The per-step corpus-token recount scans the SAME staged frame the
-    // next step's argmax reads, with no dependency between the two jobs —
-    // submit the recount on a side thread so it back-fills while the main
-    // thread proceeds to the next argmax (guide §2.6 overlapping
-    // independent jobs; at sf the per-job scheduler floor, not compute,
-    // is the whole cost of this loop). Exactness untouched: each recount
-    // is the identical BIGINT aggregate over the identical materialized
-    // frame; only WHEN it runs moves.
-    val pool = java.util.concurrent.Executors.newSingleThreadExecutor()
-    val pending = scala.collection.mutable.ArrayBuffer[
-      (Int, String, String, String, Long, java.util.concurrent.Future[Long])]()
-    try {
-      for (step <- 1 to k) {
-        val best = cur
-          .select(col("n"), split(col("syms"), " ").as("sy"))
-          .select(col("n"), explode(pairsOf).as("pair"))
-          .groupBy(col("pair")).agg(sum(col("n")).as("cnt"))
-          .orderBy(col("cnt").desc, col("pair"))
-          .limit(1).collect() // ONE row: the argmax merge decision
-        if (best.nonEmpty) {
-          val Array(a, b) = best(0).getString(0).split(" ", 2)
-          val cnt = best(0).getLong(1)
-          cur = cur
-            .select(GraftFunctions.bpeMerge(col("syms"), lit(a), lit(b)).as("syms"),
-              col("n"))
-            .transform(graft.plans.Checkpoints.stage)
-          val staged = cur
-          pending += ((step, a, b, a + b, cnt, pool.submit(
-            new java.util.concurrent.Callable[Long] {
-              def call(): Long = staged
-                .select(sum(col("n") * size(split(col("syms"), " "))).as("t"))
-                .head().getLong(0)
-            })))
-        }
-      }
-    } finally pool.shutdown()
-    // Future.get rethrows a recount failure (wrapped) — a lost executor
-    // mid-recount still fails the entry loudly, as before.
-    val merges = pending.map { case (step, a, b, m, cnt, f) =>
-      (step, a, b, m, cnt, f.get())
+    * reference trainer on hand-built docs). The merge rows come back as
+    * a local frame, in step order. */
+  private[graft] def bpeTrainOf(s: SparkSession, docs: DataFrame, k: Int): DataFrame =
+    s.createDataFrame(trainMerges(wordCounts(docs), k)._1)
+      .toDF("step", "lhs", "rhs", "merged", "pair_count", "corpus_tokens")
+
+  /**
+   * The BPE merge loop over a (word, n) table, on the driver. Each step
+   * counts adjacent symbol pairs of the words of at least 2 characters,
+   * weighted by n ([[pairCounts]]); picks the top pair under
+   * [[PairOrder]] (a total tiebreak both engines replay); applies it with
+   * the codegen [[graft.functions.Kernels.bpeMerge]] greedy scan, whose
+   * fold-equivalence argument (doc there) is what lets DuckDB replay it
+   * as a list_reduce; and recounts corpus tokens. Once no pair remains
+   * it stops, so a small vocabulary yields fewer than `k` rows, as the
+   * reference trainer does. All sums are exact: overflow throws
+   * ArithmeticException. Returns the merge rows (step, lhs, rhs, merged,
+   * pair_count, corpus_tokens) and each trained word's final symbols,
+   * space-joined.
+   */
+  private[graft] def trainMerges(words: Seq[(String, Long)], k: Int)
+      : (Seq[(Int, String, String, String, Long, Long)], Map[String, String]) = {
+    var vocab = symbols(words)
+    val merges = Vector.newBuilder[(Int, String, String, String, Long, Long)]
+    var counts = pairCounts(vocab)
+    for (step <- 1 to k) if (counts.nonEmpty) {
+      val (pair, cnt) = counts.min(PairOrder)
+      val Array(a, b) = pair.split(" ", 2)
+      val (ua, ub) = (UTF8String.fromString(a), UTF8String.fromString(b))
+      vocab = vocab.map { case (w, sy, n) => (w, Kernels.bpeMerge(sy, ua, ub), n) }
+      merges += ((step, a, b, a + b, cnt, vocab.iterator.map { case (_, sy, n) =>
+        Math.multiplyExact(n, sy.toString.split(" ").length.toLong) }.reduce(Math.addExact(_: Long, _: Long))))
+      counts = pairCounts(vocab)
     }
-    import s.implicits._
-    merges.toSeq.toDF("step", "lhs", "rhs", "merged", "pair_count", "corpus_tokens")
-      .orderBy(col("step"))
+    (merges.result(), vocab.map { case (w, sy, _) => w -> sy.toString }.toMap)
   }
 
   /**
@@ -746,30 +733,25 @@ object TextAnalysis {
    * learned vocabulary, the number a data pipeline budgets context
    * windows and storage with.
    *
-   * Scale shape: training is t21 (vocabulary-bounded); encoding folds
-   * the K merges over the DISTINCT word list only (tiny — the encode
-   * work is vocabulary-sized, each merge a codegen bpe_merge pass),
-   * then one corpus-sized (doc, word) shuffle joins token counts back
-   * to word instances and aggregates per doc — at 100 TB the encoded
-   * vocabulary broadcasts and the corpus never shuffles at all (AQE
-   * already picks the broadcast here). Unlike training, encoding has NO
-   * length filter: 1-char words tokenize to themselves.
+   * Scale shape: one [[wordCounts]] query feeds both halves. Training is
+   * [[trainMerges]] on the driver, and it leaves every trained word's
+   * final symbols, so the encoded vocabulary — (w, n_toks, n_chars_w)
+   * for every collected word — is a local table; unlike training,
+   * encoding has NO length filter: a 1-char word is 1 token. One
+   * corpus-sized (doc, word) stream joins it and aggregates per doc. The
+   * join carries no broadcast hint: the local table's exact size picks
+   * the strategy (a broadcast at any realistic vocabulary).
    */
   def bpeEncode(s: SparkSession, d: String): DataFrame =
     bpeEncodeOf(s, Tables.documents(s, d), 8)
 
   private[graft] def bpeEncodeOf(s: SparkSession, docs: DataFrame, k: Int): DataFrame = {
-    val merges = bpeTrainOf(s, docs, k).collect()
-      .sortBy(_.getInt(0)).map(r => (r.getString(1), r.getString(2)))
-    val words = docs.select(col("doc_id"),
-      explode(regexp_extract_all(lower(col("text")), lit("[a-z]+"), lit(0))).as("w"))
-    val distinctW = words.select(col("w")).distinct()
-      .select(col("w"), trim(regexp_replace(col("w"), "(.)", "$1 ")).as("syms"))
-    val encoded = merges.foldLeft(distinctW) { case (df, (a, b)) =>
-      df.select(col("w"), GraftFunctions.bpeMerge(col("syms"), lit(a), lit(b)).as("syms"))
-    }.select(col("w"), size(split(col("syms"), " ")).as("n_toks"),
-      length(col("w")).as("n_chars_w"))
-    words.join(encoded, "w")
+    val counts = wordCounts(docs)
+    val trained = trainMerges(counts, k)._2
+    val encoded = s.createDataFrame(counts.map { case (w, _) =>
+      (w, trained.get(w).fold(1)(_.split(" ").length), w.length) }).toDF("w", "n_toks", "n_chars_w")
+    docs.select(col("doc_id"), azWords)
+      .join(encoded, "w")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_words"),
         sum(col("n_toks")).as("n_tokens"),

@@ -265,6 +265,50 @@ class TextAnalysisSpec extends GraftSpec {
     got.foreach { case (_, _, toks, cpt) => assert(toks > 0 && cpt >= 1.0) }
   }
 
+  test("t21/t22 frame builds run a bounded number of Spark jobs, not jobs per merge step") {
+    import spark.implicits._
+    val docs = Seq(
+      "aaa aaa abab the the the cat",
+      "banana bandana the cat sat",
+      "aaa abab banana the").zipWithIndex.map { case (t, i) => (i.toLong, t) }
+      .toDF("doc_id", "text")
+    val counter = new graft.tools.JobCounter(spark.sparkContext)
+    try {
+      val (train, trainJobs) = counter(graft.text.TextAnalysis.bpeTrainOf(spark, docs, 8))
+      val (_, encodeJobs) = counter(graft.text.TextAnalysis.bpeEncodeOf(spark, docs, 8))
+      assert(train.count() == 8, "the docs hold 8 trainable merges")
+      assert(trainJobs <= 3, s"bpeTrainOf build ran $trainJobs jobs")
+      assert(encodeJobs <= 3, s"bpeEncodeOf build ran $encodeJobs jobs")
+    } finally spark.sparkContext.removeSparkListener(counter)
+  }
+
+  test("trainMerges stops early when the vocabulary runs out of pairs") {
+    val (merges, syms) = graft.text.TextAnalysis.trainMerges(
+      Seq(("abc", 2L), ("x", 7L)), 5)
+    // 1-char words never train; "abc" fully merges in 2 steps, then no
+    // pair remains and no further rows follow
+    assert(merges == Seq((1, "a", "b", "ab", 2L, 4L), (2, "ab", "c", "abc", 2L, 2L)))
+    assert(syms == Map("abc" -> "abc"))
+    assert(graft.text.TextAnalysis.trainMerges(Seq(("q", 3L)), 5) == ((Nil, Map.empty)))
+  }
+
+  test("trainMerges breaks a count tie by UTF-8 byte order of the pair") {
+    // "b a" and "a b" both count 2: "a b" is smaller, whatever the input order
+    val (merges, _) = graft.text.TextAnalysis.trainMerges(Seq(("ba", 2L), ("ab", 2L)), 2)
+    assert(merges == Seq((1, "a", "b", "ab", 2L, 6L), (2, "b", "a", "ba", 2L, 4L)))
+  }
+
+  test("trainMerges fails loudly on count overflow instead of wrapping") {
+    // pair count: 2 * (MaxValue - 1) for "a b"
+    intercept[ArithmeticException] {
+      graft.text.TextAnalysis.trainMerges(Seq(("ab", Long.MaxValue - 1), ("cab", Long.MaxValue - 1)), 1)
+    }
+    // corpus tokens: "abc" -> "ab c" leaves 2 tokens of n > MaxValue / 2
+    intercept[ArithmeticException] {
+      graft.text.TextAnalysis.trainMerges(Seq(("abc", Long.MaxValue / 2 + 1)), 1)
+    }
+  }
+
   test("t23 hashed-linear scoring matches a driver-side reference, both label signs occur") {
     import org.apache.spark.unsafe.types.UTF8String
     val seed = 1181783497276652981L

@@ -78,7 +78,7 @@ object PerfProbe {
         println(f"$name%-24s ${s(t0, t1)}%8.3f ${s(t1, t2)}%8.3f ${s(t2, t3)}%8.3f ${s(t0, t3)}%8.3f ${compiles - c0}%8d $jobs%6d")
       } catch { case e: Throwable => println(s"$name FAILED (timed): ${e.getMessage}") }
       if (showStages) {
-        Thread.sleep(300)
+        // no wait: jobCounter's sentinel job has flushed the timed pass's events
         val snap = stages.synchronized(stages.toList)
         println(s"  ${snap.size} stages, slowest:")
         snap.sortBy(-_._2).take(8).foreach { case (id, ms, nt, sw, sr) =>

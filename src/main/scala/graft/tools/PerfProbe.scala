@@ -78,8 +78,9 @@ object PerfProbe {
         println(f"$name%-24s ${s(t0, t1)}%8.3f ${s(t1, t2)}%8.3f ${s(t2, t3)}%8.3f ${s(t0, t3)}%8.3f ${compiles - c0}%8d $jobs%6d")
       } catch { case e: Throwable => println(s"$name FAILED (timed): ${e.getMessage}") }
       if (showStages) {
-        // no wait: jobCounter's sentinel job has flushed the timed pass's events
-        val snap = stages.synchronized(stages.toList)
+        // no wait: after a clean timed pass, jobCounter's sentinel job has
+        // already flushed its stage events (its own stage is left out)
+        val snap = stages.synchronized(stages.toList).filter(st => jobCounter.stageIds(st._1))
         println(s"  ${snap.size} stages, slowest:")
         snap.sortBy(-_._2).take(8).foreach { case (id, ms, nt, sw, sr) =>
           println(f"    stage $id%5d $ms%6d ms $nt%4d tasks  swrite=${sw / 1024}%8d KiB  sread=${sr / 1024}%8d KiB")
@@ -99,11 +100,13 @@ object PerfProbe {
 final class JobCounter(sc: SparkContext) extends SparkListener {
   private val jobs = new AtomicInteger
   @volatile private var synced = false
+  /** The stages of the jobs the last block started. */
+  @volatile var stageIds: Set[Int] = Set.empty
   sc.addSparkListener(this)
 
   override def onJobStart(e: SparkListenerJobStart): Unit =
     Option(e.properties).map(_.getProperty("graft.jobcounter")).orNull match {
-      case "block" => jobs.incrementAndGet()
+      case "block" => jobs.incrementAndGet(); stageIds ++= e.stageIds
       case "sentinel" => synced = true
       case _ =>
     }
@@ -115,7 +118,7 @@ final class JobCounter(sc: SparkContext) extends SparkListener {
 
   /** Runs `body`; returns its result and the number of jobs it started. */
   def apply[T](body: => T): (T, Int) = {
-    jobs.set(0); synced = false
+    jobs.set(0); synced = false; stageIds = Set.empty
     val out = tagged("block")(body)
     tagged("sentinel")(sc.parallelize(Seq(0), 1).count())
     val deadline = System.nanoTime() + 30000000000L

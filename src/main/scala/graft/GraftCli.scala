@@ -3,15 +3,17 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
-import graft.functions.GraftFunctions
+import graft.functions.{GraftExtensions, GraftFunctions}
 import graft.sources.Tables
 
 /**
  * SQL front door — the reference's primary user experience is a SQL prompt
  * (presto-mgr.py `connect`/`cli`; README.md:90–96
  * `presto:test> select * from user;`). This is the Spark-native equivalent:
- * register the catalog as temp views, install the graft function family,
- * and serve SQL text.
+ * register the catalog as temp views on a graft-built session and serve
+ * SQL text. The session's parser (`functions.GraftParser`) reads every
+ * statement in the Presto dialect, so the CLI routes graft's own verbs
+ * and hands the rest to `spark.sql` without rewriting any text itself.
  *
  * Usage:
  *   runMain graft.GraftCli <sfDir> [--format table|csv|json] "SELECT ...;" [...]
@@ -41,14 +43,21 @@ import graft.sources.Tables
  */
 object GraftCli {
 
-  /** One session wired for SQL text: all tables as views + graft functions
-    * registered. The same wiring a JDBC/Thrift deployment would do once.
-    * The warehouse dir rides in the session conf so statement routes
-    * that need the backing files (ANALYZE's external-table
+  /** One session wired for SQL text: all tables as views. The same
+    * wiring a JDBC/Thrift deployment would do once. The session must be
+    * graft-built (`spark.sql.extensions` names [[GraftExtensions]]): the
+    * functions, rules and Presto-dialect parser come in with the
+    * extensions, and a parser cannot be injected into a session after it
+    * is built. The warehouse dir rides in the session conf so statement
+    * routes that need the backing files (ANALYZE's external-table
     * registration) can find them without re-plumbing every signature. */
   def open(spark: SparkSession, sfDir: String): SparkSession = {
+    val extensions = classOf[GraftExtensions].getName
+    require(spark.conf.getOption("spark.sql.extensions").exists(
+      _.split(",").map(_.trim).contains(extensions)),
+      s"GraftCli needs a session built with spark.sql.extensions=$extensions " +
+        "(GraftSession.builder/get): it carries the Presto-dialect parser")
     Tables.registerAll(spark, sfDir)
-    GraftFunctions.install(spark)
     // system.runtime.queries needs the history listener (idempotent);
     // the system CATALOG itself rides in via GraftSession's conf
     graft.sources.GraftSystemCatalog.installLog(spark)
@@ -56,52 +65,19 @@ object GraftCli {
     spark
   }
 
-  /** Presto spells the UNIT of date_diff/date_add as a string literal
-    * (`date_diff('day', a, b)`); Spark handles these functions in the
-    * GRAMMAR (AstBuilder.visitTimestampdiff/-add) and demands a bare
-    * identifier — no FunctionRegistry entry can intercept the quoted
-    * form (verified: a registry override installs but the ParseException
-    * fires first). So the front door rewrites the quoted unit to the
-    * identifier spelling, landing on Spark's own ChronoUnit
-    * full-elapsed-unit semantics — the same periods Presto's Joda
-    * implementation counts (CliSpec pins the Jan31→Feb1 month case at
-    * 0, not DuckDB-style boundary counting). Literal-/comment-aware
-    * since r18 — the pattern embedded inside a string literal is left
-    * alone (see [[PrestoRewrite]]). */
-  private[graft] def rewritePrestoDatetime(text: String): String =
-    PrestoRewrite.rewriteDatetime(text)
-
-  /** All Presto-dialect text rewrites: quoted datetime units + generic
-    * TRY(...) + zip-UNNEST (PrestoRewrite). Applied on every path that
-    * hands user SQL text to the parser — bare statements, EXECUTE
-    * templates (BEFORE parameter binding, so a bound string value
-    * containing a rewritable pattern is never corrupted), and every
-    * EXPLAIN flavor. */
-  private[graft] def rewriteDialect(text: String): String = PrestoRewrite(text)
-
   /** Execute one SQL statement (the programmatic front door): any CLI
     * statement that returns rows, routed on a fresh session state. */
   def sql(spark: SparkSession, sfDir: String, text: String): DataFrame =
     routeRows(open(spark, sfDir), text)
 
-  /** Split ;-terminated SQL statements, leaving semicolons inside
-    * single-quoted literals alone ('' quote escaping falls out naturally:
-    * the escaped quote closes and immediately reopens string mode). */
-  private[graft] def splitStatements(in: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer[String]()
-    val cur = new StringBuilder
-    var inStr = false
-    in.foreach { c =>
-      if (inStr) { cur += c; if (c == '\'') inStr = false }
-      else c match {
-        case '\'' => inStr = true; cur += c
-        case ';'  => out += cur.toString; cur.clear()
-        case _    => cur += c
-      }
-    }
-    out += cur.toString
-    out.toSeq.map(_.trim).filter(_.nonEmpty)
-  }
+  /** Split ;-terminated SQL statements at the semicolons the grammar
+    * reads as code: one inside a literal, quoted identifier or comment
+    * stays put ([[PrestoRewrite.codeIndices]]). A piece that holds only
+    * comments is no statement and is dropped. */
+  private[graft] def splitStatements(in: String): Seq[String] =
+    PrestoRewrite.cutAt(in, PrestoRewrite.codeIndices(in).filter(in.charAt(_) == ';').toSeq)
+      .map(_.trim)
+      .filter(st => PrestoRewrite.codeIndices(st).exists(!st.charAt(_).isWhitespace))
 
   /** Resolve the statement source from the CLI arguments (after sfDir):
     * `-f <script>` reads ;-terminated statements from the file (and
@@ -554,94 +530,35 @@ object GraftCli {
   }
 
   /** Split a USING argument list on top-level commas (commas inside
-    * single-quoted literals or parens — e.g. a DATE '...' or a nested
-    * call — stay put). */
-  private[graft] def splitArgs(in: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer[String]()
-    val cur = new StringBuilder
-    var inStr = false
-    var depth = 0
-    in.foreach { c =>
-      if (inStr) { cur += c; if (c == '\'') inStr = false }
-      else c match {
-        case '\'' => inStr = true; cur += c
-        case '(' => depth += 1; cur += c
-        case ')' => depth -= 1; cur += c
-        case ',' if depth == 0 => out += cur.toString; cur.clear()
-        case _ => cur += c
-      }
-    }
-    out += cur.toString
-    out.toSeq.map(_.trim).filter(_.nonEmpty)
-  }
+    * literals, comments or brackets — a DATE '...', a nested call — stay
+    * put). */
+  private[graft] def splitArgs(in: String): Seq[String] = PrestoRewrite.splitTopLevel(in)
 
-  /** The ONE `?`-marker scanner: walks a template emitting every char
-    * through `copy` and calling `marker` at each `?` the SQL grammar
-    * could actually parse as a parameter — i.e. outside single-quoted
-    * literals, double-quoted/backtick identifiers, and `--`/block
-    * comments (a `?` in any of those is payload text, not a marker).
-    * bindParameters and countParameters are both thin wrappers, so the
-    * binder and DESCRIBE INPUT/OUTPUT can never disagree on arity. */
-  private def scanTemplate(template: String, copy: Char => Unit,
-                           marker: () => Unit): Unit = {
-    val n = template.length
-    var i = 0
-    var mode = 0 // 0 sql, 1 'str', 2 "ident", 3 `ident`, 4 --line, 5 /*block*/
-    while (i < n) {
-      val c = template.charAt(i)
-      mode match {
-        case 0 =>
-          if (c == '-' && i + 1 < n && template.charAt(i + 1) == '-') {
-            copy('-'); copy('-'); i += 1; mode = 4
-          } else if (c == '/' && i + 1 < n && template.charAt(i + 1) == '*') {
-            copy('/'); copy('*'); i += 1; mode = 5
-          } else if (c == '?') marker()
-          else {
-            copy(c)
-            if (c == '\'') mode = 1
-            else if (c == '"') mode = 2
-            else if (c == '`') mode = 3
-          }
-        case 1 => copy(c); if (c == '\'') mode = 0
-        case 2 => copy(c); if (c == '"') mode = 0
-        case 3 => copy(c); if (c == '`') mode = 0
-        case 4 => copy(c); if (c == '\n') mode = 0
-        case 5 =>
-          if (c == '*' && i + 1 < n && template.charAt(i + 1) == '/') {
-            copy('*'); copy('/'); i += 1; mode = 0
-          } else copy(c)
-      }
-      i += 1
-    }
-  }
+  /** Positions of the `?` markers the SQL grammar could parse as
+    * parameters: those outside literals, quoted identifiers and comments.
+    * The binder and DESCRIBE INPUT/OUTPUT share this one scan, so they
+    * never disagree on arity. */
+  private def markers(template: String): Seq[Int] =
+    PrestoRewrite.codeIndices(template).filter(template.charAt(_) == '?').toSeq
 
   /** Bind EXECUTE arguments into a prepared template: each parameter
-    * marker (per scanTemplate's grammar-aware scan) is replaced
-    * positionally by the corresponding USING expression text (Presto
-    * binds values; for the literal/expression arguments the CLI grammar
-    * allows, textual splice into the parse position is equivalent).
-    * Arity mismatches in either direction fail with a clear message
-    * BEFORE any SQL runs. */
+    * marker is replaced positionally by the corresponding USING
+    * expression text (Presto binds values; for the literal/expression
+    * arguments the CLI grammar allows, textual splice into the parse
+    * position is equivalent). Arity mismatches in either direction fail
+    * with a clear message BEFORE any SQL runs. */
   private[graft] def bindParameters(template: String, args: Seq[String]): String = {
-    val sb = new StringBuilder
-    var idx = 0
-    scanTemplate(template, sb += _, () => {
-      if (idx >= args.length) throw new IllegalArgumentException(
-        s"EXECUTE: statement has more parameters (?) than USING arguments (${args.length})")
-      sb ++= args(idx); idx += 1
-    })
-    if (idx != args.length) throw new IllegalArgumentException(
-      s"EXECUTE: ${args.length} USING arguments for $idx parameter(s) in the prepared statement")
-    sb.toString
+    val at = markers(template)
+    if (at.length > args.length) throw new IllegalArgumentException(
+      s"EXECUTE: statement has more parameters (?) than USING arguments (${args.length})")
+    if (at.length < args.length) throw new IllegalArgumentException(
+      s"EXECUTE: ${args.length} USING arguments for ${at.length} parameter(s) in the prepared statement")
+    val pieces = PrestoRewrite.cutAt(template, at)
+    pieces.head + args.zip(pieces.tail).map { case (a, p) => a + p }.mkString
   }
 
-  /** Count parameter markers — the binder's own scan, shared so
-    * DESCRIBE INPUT/OUTPUT agree with EXECUTE on what counts. */
-  private[graft] def countParameters(template: String): Int = {
-    var n = 0
-    scanTemplate(template, _ => (), () => n += 1)
-    n
-  }
+  /** Count parameter markers — the binder's own scan. */
+  private[graft] def countParameters(template: String): Int = markers(template).length
 
   /** DESCRIBE OUTPUT name — Presto 0.248's prepared-statement result-set
     * metadata (what a client library calls to type a result set before
@@ -1059,8 +976,8 @@ object GraftCli {
     * transaction verbs, EXPLAIN ANALYZE / typed EXPLAIN, the
     * prepared-statement verbs and the Presto statements Spark SQL lacks;
     * everything else (including CREATE/DROP VIEW, which Spark serves
-    * natively through the session catalog) is bare SQL after the dialect
-    * rewrite. `prepared` is the session's named-statement store and `txn`
+    * natively through the session catalog) is bare SQL, which the
+    * session's parser reads in the Presto dialect. `prepared` is the session's named-statement store and `txn`
     * its transaction envelope (the CLI main owns one of each per run,
     * like a Presto session). */
   private[graft] def route(spark: SparkSession, stmt: String,
@@ -1094,12 +1011,8 @@ object GraftCli {
         throw new IllegalStateException(
           "current transaction is aborted — ROLLBACK before issuing " +
             "further statements")
-      // EXPLAIN paths get the same dialect rewrite as execution paths:
-      // a Presto-spelled query that runs must also EXPLAIN (r17 ADVICE)
-      case ExplainAnalyze(query) =>
-        Report(explainAnalyze(spark, rewriteDialect(query)))
-      case ExplainTyped(mode, query0) =>
-        val query = rewriteDialect(query0)
+      case ExplainAnalyze(query) => Report(explainAnalyze(spark, query))
+      case ExplainTyped(mode, query) =>
         if (mode.equalsIgnoreCase("VALIDATE")) Rows(explainValidate(spark, query))
         else if (mode.equalsIgnoreCase("DISTRIBUTED")) Report(explainDistributed(spark, query))
         else Rows(explainIo(spark, query))
@@ -1115,9 +1028,7 @@ object GraftCli {
         val key = lower(name)
         val template = prepared.getOrElse(key, throw new IllegalArgumentException(
           s"EXECUTE: no prepared statement named $key (PREPARE it first)"))
-        // rewrite the TEMPLATE, then bind: a bound string PARAMETER whose
-        // value happens to contain a rewritable pattern must stay verbatim
-        Rows(spark.sql(bindParameters(rewriteDialect(template),
+        Rows(spark.sql(bindParameters(template,
           Option(usingArgs).map(splitArgs).getOrElse(Nil))))
       case ShowStats(mode, table) =>
         Rows(showStats(spark, table, exact = "EXACT".equalsIgnoreCase(mode)))
@@ -1145,7 +1056,7 @@ object GraftCli {
       case ShowColumns(table) => Rows(showColumns(spark, table))
       case ShowPartitions(table) => Rows(showPartitions(spark, table))
       case ShowFunctions(pattern) => Rows(showFunctions(spark, Option(pattern)))
-      case bare => Rows(spark.sql(rewriteDialect(bare)))
+      case bare => Rows(spark.sql(bare))
     }
   }
 
@@ -1240,12 +1151,148 @@ object GraftCli {
     if (!preexisting) spark.stop()
   }
 
+  /** The Presto-spelled SQL-text entries, by name: the statements a
+    * Presto user pastes, served by the session parser's dialect rewrite
+    * (ServerSpec also sends them over hive-jdbc). */
+  private[graft] val prestoTexts: Map[String, String] = Map(
+    // s22: literal Presto-SPELLED SQL through the front door (r16 verdict
+    // task 2) — the reference hands its users a Presto prompt, and names
+    // whose semantics all exist here must not fail on spelling. One
+    // statement exercises the whole dialect-alias pack
+    // (GraftFunctions.prestoDialect): approx_distinct, arbitrary,
+    // json_extract_scalar, the url_extract_* family (incl. the PORT form
+    // Spark's parse_url lacks), to_unixtime's fractional-seconds DOUBLE,
+    // to_iso8601 / from_iso8601_timestamp / from_iso8601_date, strpos /
+    // index / standard position(x IN y), truncate's round-toward-zero,
+    // and the shared-name builtin log2. The URL column is constructed
+    // in-query so the extraction oracle is closed-form.
+    "s22_sql_presto_dialect" -> """
+      WITH src AS (
+        SELECT event_id, user_id, ts, value, props,
+          'https://shard' || CAST(user_id % 4 AS VARCHAR(2)) ||
+          '.example.com:' || CAST(8440 + user_id % 3 AS VARCHAR(4)) ||
+          '/api/v' || CAST(event_id % 3 AS VARCHAR(2)) ||
+          '/items?page=' || CAST(event_id % 7 AS VARCHAR(2)) ||
+          '&lang=en#sec' || CAST(event_id % 5 AS VARCHAR(2)) AS url
+        FROM events WHERE event_id % 97 = 0),
+      agg AS (
+        SELECT approx_distinct(user_id % 5) AS n_buckets,
+               arbitrary('graft') AS arb_const
+        FROM src)
+      SELECT event_id,
+        json_extract_scalar(props, '$.k') AS k_val,
+        url_extract_protocol(url) AS proto,
+        url_extract_host(url) AS host,
+        url_extract_port(url) AS portv,
+        url_extract_path(url) AS pathv,
+        url_extract_query(url) AS queryv,
+        url_extract_fragment(url) AS fragv,
+        url_extract_parameter(url, 'page') AS pagev,
+        to_unixtime(ts) AS unix_ts,
+        to_iso8601(ts) AS iso_ts,
+        CAST(from_iso8601_timestamp('2024-03-01T12:30:45') AS VARCHAR(19)) AS iso_rt,
+        CAST(from_iso8601_date('2024-03-01') AS VARCHAR(10)) AS iso_d,
+        strpos(url, CAST(event_id % 10 AS VARCHAR(2))) AS pos_digit,
+        index(url, 'example') AS pos_example,
+        CAST(position('/api/' IN url) AS BIGINT) AS pos_api,
+        truncate(value) AS val_t0,
+        truncate(value / 7, 2) AS val_t2,
+        truncate(-value) AS val_tn,
+        round(log2(1 + CAST(event_id % 1000 AS DOUBLE)), 4) AS lg,
+        n_buckets, arb_const
+      FROM src CROSS JOIN agg
+      ORDER BY event_id""",
+    // s24: the Presto DATETIME dialect through the front door —
+    // date_diff('day', a, b) is the single most common idiom in real
+    // Presto SQL (GraftFunctions.prestoDatetime): full-elapsed-unit
+    // date_diff/date_add (ChronoUnit semantics, like Presto's Joda
+    // periods), the ISO field extracts (day_of_week 1=Monday, week,
+    // year_of_week, day_of_year), last_day_of_month, and the
+    // shared-name builtin date_trunc proven in the same statement.
+    // The join condition keeps lags non-negative so the oracle's
+    // integer floor-division replay equals full-period counting.
+    "s24_sql_presto_datetime" -> """
+      SELECT o_orderkey, l_partkey,
+        date_diff('day', o_orderdate, l_shipdate) AS lag_days,
+        date_diff('hour', o_orderdate, l_shipdate) AS lag_hours,
+        date_diff('second', o_orderdate, l_shipdate) AS lag_secs,
+        date_format(date_add('day', 30, o_orderdate), 'yyyy-MM-dd HH:mm:ss') AS due_ts,
+        day_of_week(o_orderdate) AS dow,
+        day_of_year(o_orderdate) AS doy,
+        week(o_orderdate) AS wk,
+        year_of_week(o_orderdate) AS yow,
+        CAST(last_day_of_month(o_orderdate) AS VARCHAR(10)) AS month_end,
+        date_format(date_trunc('month', o_orderdate), 'yyyy-MM-dd') AS month_start
+      FROM orders JOIN lineitem
+        ON l_orderkey = o_orderkey AND l_shipdate >= o_orderdate
+      WHERE o_orderkey % 501 = 0
+      ORDER BY o_orderkey, l_partkey, lag_secs, l_extendedprice, l_quantity""",
+    // s25: the generic TRY(...) + zip-UNNEST WITH ORDINALITY dialect
+    // forms (r17 verdict task 2 — the two most common pasted-Presto
+    // idioms still unserved). TRY rewrites the known bodies to Spark's
+    // try_* family (unknown bodies refused loudly); UNNEST(a, b) zips
+    // positionally with NULL padding (zip_with semantics) and a 1-based
+    // BIGINT ordinality, expressed as LATERAL VIEW inline(zip_with(...))
+    // — builtin higher-order functions, codegen end-to-end. qty's length
+    // varies 1..3 against pri's fixed 2, so both padding directions and
+    // the try_cast / try_divide / try_element_at NULL paths are all
+    // exercised and oracled.
+    "s25_sql_presto_try_unnest" -> """
+      WITH src AS (
+        SELECT o_orderkey,
+          sequence(1, 1 + o_orderkey % 3) AS qty,
+          split(o_orderpriority, '-') AS pri
+        FROM orders WHERE o_orderkey % 301 = 0)
+      SELECT o_orderkey, x, y, ord,
+        TRY(x / (o_orderkey % 2)) AS safe_div,
+        TRY(CAST(y AS INT)) AS y_int,
+        TRY(element_at(qty, 3)) AS third
+      FROM src CROSS JOIN UNNEST(qty, pri) WITH ORDINALITY AS t(x, y, ord)
+      ORDER BY o_orderkey, ord""",
+    // s26: the Presto LITERAL spellings Spark rejects outright — bare
+    // CAST(x AS VARCHAR), ARRAY[...] literals (with Presto's 1-BASED
+    // subscript preserved via element_at), MAP(ARRAY[k], ARRAY[v]) →
+    // map_from_arrays, cardinality over a rewritten literal. Every
+    // rewrite fires only on invalid-Spark text, so no legal query can
+    // silently change meaning.
+    "s26_sql_presto_literals" -> """
+      SELECT o_orderkey,
+        CAST(o_orderkey % 7 AS VARCHAR) AS key_str,
+        ARRAY[o_orderkey % 5, o_orderkey % 3, 99][2] AS second_elem,
+        element_at(MAP(ARRAY['lo', 'hi'],
+                       ARRAY[o_totalprice * 0.5, o_totalprice]), 'hi') AS hi_val,
+        cardinality(ARRAY[1, 2, 3]) AS arr_len
+      FROM orders WHERE o_orderkey % 203 = 0
+      ORDER BY o_orderkey""",
+    // s27: the remaining Presto UNNEST spellings + bare subscripts (r19
+    // — r18 verdict task 2 and ADVICE item 3). The comma-join form
+    // `FROM t, UNNEST(a) AS u(x)` rewrites to the same LATERAL VIEW as
+    // the explicit CROSS JOIN; map-UNNEST(m) AS t(k, v) becomes
+    // LATERAL VIEW explode(m) (one row per entry); and every bare
+    // subscript — qty[...] on an array, m['lo'] on a map — rewrites to
+    // element_at, landing Presto's 1-BASED array indexing and key lookup
+    // instead of Spark's silent 0-based reading. All builtin generators
+    // and codegen'd lookups: the arrays/maps never leave their scan task.
+    "s27_sql_presto_unnest2" -> """
+      WITH src AS (
+        SELECT o_orderkey,
+          sequence(1, 1 + o_orderkey % 3) AS qty,
+          MAP(ARRAY['lo', 'hi'], ARRAY[o_totalprice * 0.5, o_totalprice]) AS m
+        FROM orders WHERE o_orderkey % 307 = 0)
+      SELECT o_orderkey, x, k, v,
+        qty[cardinality(qty)] AS last_qty,
+        m['lo'] AS lo_val
+      FROM src, UNNEST(qty) AS t(x), UNNEST(m) AS mt(k, v)
+      ORDER BY o_orderkey, x, k"""
+  )
+
   /** Inventory entries exercised THROUGH the SQL-text path (same driver
     * oracle discipline as the DataFrame entries): proves a reference user
     * can point SQL at this engine and get verified answers. Every
     * statement an entry issues as text goes through `route`, the router
     * the CLI runs. */
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    Map[String, (SparkSession, String) => DataFrame](
     "s01_sql_agg" -> ((s, d) => sql(s, d, """
       SELECT l_returnflag, l_linestatus,
         CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
@@ -1567,137 +1614,8 @@ object GraftCli {
         FROM orders""")
       routeRows(sess, "SHOW PARTITIONS FROM s21_part_orders")
         .orderBy(col("o_year"))
-    }),
-    // s22: literal Presto-SPELLED SQL through the front door (r16 verdict
-    // task 2) — the reference hands its users a Presto prompt, and names
-    // whose semantics all exist here must not fail on spelling. One
-    // statement exercises the whole dialect-alias pack
-    // (GraftFunctions.prestoDialect): approx_distinct, arbitrary,
-    // json_extract_scalar, the url_extract_* family (incl. the PORT form
-    // Spark's parse_url lacks), to_unixtime's fractional-seconds DOUBLE,
-    // to_iso8601 / from_iso8601_timestamp / from_iso8601_date, strpos /
-    // index / standard position(x IN y), truncate's round-toward-zero,
-    // and the shared-name builtin log2. The URL column is constructed
-    // in-query so the extraction oracle is closed-form.
-    "s22_sql_presto_dialect" -> ((s, d) => sql(s, d, """
-      WITH src AS (
-        SELECT event_id, user_id, ts, value, props,
-          'https://shard' || CAST(user_id % 4 AS VARCHAR(2)) ||
-          '.example.com:' || CAST(8440 + user_id % 3 AS VARCHAR(4)) ||
-          '/api/v' || CAST(event_id % 3 AS VARCHAR(2)) ||
-          '/items?page=' || CAST(event_id % 7 AS VARCHAR(2)) ||
-          '&lang=en#sec' || CAST(event_id % 5 AS VARCHAR(2)) AS url
-        FROM events WHERE event_id % 97 = 0),
-      agg AS (
-        SELECT approx_distinct(user_id % 5) AS n_buckets,
-               arbitrary('graft') AS arb_const
-        FROM src)
-      SELECT event_id,
-        json_extract_scalar(props, '$.k') AS k_val,
-        url_extract_protocol(url) AS proto,
-        url_extract_host(url) AS host,
-        url_extract_port(url) AS portv,
-        url_extract_path(url) AS pathv,
-        url_extract_query(url) AS queryv,
-        url_extract_fragment(url) AS fragv,
-        url_extract_parameter(url, 'page') AS pagev,
-        to_unixtime(ts) AS unix_ts,
-        to_iso8601(ts) AS iso_ts,
-        CAST(from_iso8601_timestamp('2024-03-01T12:30:45') AS VARCHAR(19)) AS iso_rt,
-        CAST(from_iso8601_date('2024-03-01') AS VARCHAR(10)) AS iso_d,
-        strpos(url, CAST(event_id % 10 AS VARCHAR(2))) AS pos_digit,
-        index(url, 'example') AS pos_example,
-        CAST(position('/api/' IN url) AS BIGINT) AS pos_api,
-        truncate(value) AS val_t0,
-        truncate(value / 7, 2) AS val_t2,
-        truncate(-value) AS val_tn,
-        round(log2(1 + CAST(event_id % 1000 AS DOUBLE)), 4) AS lg,
-        n_buckets, arb_const
-      FROM src CROSS JOIN agg
-      ORDER BY event_id""")),
-    // s24: the Presto DATETIME dialect through the front door —
-    // date_diff('day', a, b) is the single most common idiom in real
-    // Presto SQL (GraftFunctions.prestoDatetime): full-elapsed-unit
-    // date_diff/date_add (ChronoUnit semantics, like Presto's Joda
-    // periods), the ISO field extracts (day_of_week 1=Monday, week,
-    // year_of_week, day_of_year), last_day_of_month, and the
-    // shared-name builtin date_trunc proven in the same statement.
-    // The join condition keeps lags non-negative so the oracle's
-    // integer floor-division replay equals full-period counting.
-    "s24_sql_presto_datetime" -> ((s, d) => sql(s, d, """
-      SELECT o_orderkey, l_partkey,
-        date_diff('day', o_orderdate, l_shipdate) AS lag_days,
-        date_diff('hour', o_orderdate, l_shipdate) AS lag_hours,
-        date_diff('second', o_orderdate, l_shipdate) AS lag_secs,
-        date_format(date_add('day', 30, o_orderdate), 'yyyy-MM-dd HH:mm:ss') AS due_ts,
-        day_of_week(o_orderdate) AS dow,
-        day_of_year(o_orderdate) AS doy,
-        week(o_orderdate) AS wk,
-        year_of_week(o_orderdate) AS yow,
-        CAST(last_day_of_month(o_orderdate) AS VARCHAR(10)) AS month_end,
-        date_format(date_trunc('month', o_orderdate), 'yyyy-MM-dd') AS month_start
-      FROM orders JOIN lineitem
-        ON l_orderkey = o_orderkey AND l_shipdate >= o_orderdate
-      WHERE o_orderkey % 501 = 0
-      ORDER BY o_orderkey, l_partkey, lag_secs, l_extendedprice, l_quantity""")),
-    // s25: the generic TRY(...) + zip-UNNEST WITH ORDINALITY dialect
-    // forms (r17 verdict task 2 — the two most common pasted-Presto
-    // idioms still unserved). TRY rewrites the known bodies to Spark's
-    // try_* family (unknown bodies refused loudly); UNNEST(a, b) zips
-    // positionally with NULL padding (zip_with semantics) and a 1-based
-    // BIGINT ordinality, expressed as LATERAL VIEW inline(zip_with(...))
-    // — builtin higher-order functions, codegen end-to-end. qty's length
-    // varies 1..3 against pri's fixed 2, so both padding directions and
-    // the try_cast / try_divide / try_element_at NULL paths are all
-    // exercised and oracled.
-    "s25_sql_presto_try_unnest" -> ((s, d) => sql(s, d, """
-      WITH src AS (
-        SELECT o_orderkey,
-          sequence(1, 1 + o_orderkey % 3) AS qty,
-          split(o_orderpriority, '-') AS pri
-        FROM orders WHERE o_orderkey % 301 = 0)
-      SELECT o_orderkey, x, y, ord,
-        TRY(x / (o_orderkey % 2)) AS safe_div,
-        TRY(CAST(y AS INT)) AS y_int,
-        TRY(element_at(qty, 3)) AS third
-      FROM src CROSS JOIN UNNEST(qty, pri) WITH ORDINALITY AS t(x, y, ord)
-      ORDER BY o_orderkey, ord""")),
-    // s26: the Presto LITERAL spellings Spark rejects outright — bare
-    // CAST(x AS VARCHAR), ARRAY[...] literals (with Presto's 1-BASED
-    // subscript preserved via element_at), MAP(ARRAY[k], ARRAY[v]) →
-    // map_from_arrays, cardinality over a rewritten literal. Every
-    // rewrite fires only on invalid-Spark text, so no legal query can
-    // silently change meaning.
-    "s26_sql_presto_literals" -> ((s, d) => sql(s, d, """
-      SELECT o_orderkey,
-        CAST(o_orderkey % 7 AS VARCHAR) AS key_str,
-        ARRAY[o_orderkey % 5, o_orderkey % 3, 99][2] AS second_elem,
-        element_at(MAP(ARRAY['lo', 'hi'],
-                       ARRAY[o_totalprice * 0.5, o_totalprice]), 'hi') AS hi_val,
-        cardinality(ARRAY[1, 2, 3]) AS arr_len
-      FROM orders WHERE o_orderkey % 203 = 0
-      ORDER BY o_orderkey""")),
-    // s27: the remaining Presto UNNEST spellings + bare subscripts (r19
-    // — r18 verdict task 2 and ADVICE item 3). The comma-join form
-    // `FROM t, UNNEST(a) AS u(x)` rewrites to the same LATERAL VIEW as
-    // the explicit CROSS JOIN; map-UNNEST(m) AS t(k, v) becomes
-    // LATERAL VIEW explode(m) (one row per entry); and every bare
-    // subscript — qty[...] on an array, m['lo'] on a map — rewrites to
-    // element_at, landing Presto's 1-BASED array indexing and key lookup
-    // instead of Spark's silent 0-based reading. All builtin generators
-    // and codegen'd lookups: the arrays/maps never leave their scan task.
-    "s27_sql_presto_unnest2" -> ((s, d) => sql(s, d, """
-      WITH src AS (
-        SELECT o_orderkey,
-          sequence(1, 1 + o_orderkey % 3) AS qty,
-          MAP(ARRAY['lo', 'hi'], ARRAY[o_totalprice * 0.5, o_totalprice]) AS m
-        FROM orders WHERE o_orderkey % 307 = 0)
-      SELECT o_orderkey, x, k, v,
-        qty[cardinality(qty)] AS last_qty,
-        m['lo'] AS lo_val
-      FROM src, UNNEST(qty) AS t(x), UNNEST(m) AS mt(k, v)
-      ORDER BY o_orderkey, x, k"""))
-  )
+    })
+  ) ++ prestoTexts.map { case (n, t) => n -> ((s, d) => sql(s, d, t)) }
 
   /** s18: PREPARE, then DESCRIBE INPUT and DESCRIBE OUTPUT against the
     * same store, unioned with a kind discriminator. The statement

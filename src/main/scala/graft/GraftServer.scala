@@ -19,9 +19,13 @@ import graft.sources.Tables
  * HiveServer2-protocol Thrift endpoint (`HiveThriftServer2`) started
  * inside a graft-wired session, so any HiveServer2 client — `beeline`,
  * `hive-jdbc`, Tableau-style BI drivers — can connect over a socket and
- * run the same SQL surface the CLI serves (all warehouse tables + the
- * full graft function family, which rides into every connection via
- * `spark.sql.extensions`).
+ * run the same SQL surface the CLI serves: all warehouse tables, the
+ * full graft function family and the Presto-dialect parser
+ * (`functions.GraftParser`), which ride into every connection via
+ * `spark.sql.extensions`. So a Presto-spelled statement parses over the
+ * wire exactly as it does in the CLI. The graft-only verbs (SHOW STATS,
+ * PREPARE/EXECUTE, EXPLAIN ANALYZE, ...) are served by `GraftCli.route`
+ * and are not reachable over the wire yet.
  *
  * Scale posture: the thrift server is a front door on the DRIVER — query
  * execution stays fully distributed (each JDBC statement plans and runs
@@ -54,8 +58,8 @@ object GraftServer {
     * Tables.events) — so tables resolve in EVERY thrift connection, not
     * just the parent session. Without `singleSession=true` each JDBC
     * connection gets its own `newSession()`: temp views don't cross that
-    * boundary but SharedState's catalog does (and the graft function
-    * family rides in via `spark.sql.extensions`, which `newSession()`
+    * boundary but SharedState's catalog does (and the graft functions
+    * and parser ride in via `spark.sql.extensions`, which `newSession()`
     * re-applies). Idempotent. */
   private[graft] def registerShared(spark: SparkSession, sfDir: String): Unit = {
     def ext(table: String, location: String): Unit =
@@ -64,23 +68,10 @@ object GraftServer {
     Tables.all.filterNot(_ == "events").foreach { n =>
       ext(n, Tables.path(sfDir, n))
     }
-    // events: the raw file's ts encoding varies across data generations
-    // (see Tables.events); dispatch ONCE here and bake the normalization
-    // into a persistent view, so fresh thrift sessions see the same
-    // TIMESTAMP surface without session-conf plumbing.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(Tables.path(sfDir, "events"))
-    val tsExpr = raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        // nanos-as-long: fresh thrift sessions reading the raw column
-        // need the legacy flag too — it must ride in the DEPLOYMENT conf
-        // (spark.sql.legacy.parquet.nanosAsLong=true in spark-defaults);
-        // sessions built by this JVM's GraftSession have it via the line
-        // above. Current driver generations write TIMESTAMP(MICROS), so
-        // this arm is the compatibility path, not the common one.
-        "timestamp_micros(ts div 1000)"
-      case _ => "CAST(ts AS TIMESTAMP)"
-    }
+    // events: bake the normalized ts (Tables.eventsTs) into a persistent
+    // view, so fresh thrift sessions see the same TIMESTAMP surface
+    // without session-conf plumbing
+    val tsExpr = Tables.eventsTs(spark, sfDir)
     ext("events_raw", Tables.path(sfDir, "events"))
     spark.sql(s"""CREATE OR REPLACE VIEW events AS
       SELECT event_id, $tsExpr AS ts, user_id, event_type, value, props
@@ -88,7 +79,7 @@ object GraftServer {
   }
 
   /** Start the endpoint on `port` (0 = pick a free one). Wires the
-    * session like GraftCli.open (temp views + functions for
+    * graft-built session with GraftCli.open (temp views for
     * singleSession mode), registers the shared-catalog surface for
     * multi-session mode, and boots the Thrift service. */
   def start(spark: SparkSession, sfDir: String, port: Int = 0,

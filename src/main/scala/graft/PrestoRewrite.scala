@@ -3,11 +3,14 @@ package graft
 import java.util.Locale
 
 /**
- * Presto-dialect SQL-text rewrites for the front door (GraftCli /
- * GraftServer). The reference hands its users a Presto prompt
- * (presto-mgr.py:205 `connect`), so the three Presto spellings that
- * Spark's GRAMMAR (not its function registry) rejects are rewritten to
- * their exact-semantics Spark forms before parsing:
+ * Presto-dialect SQL-text rewrites, applied by the session parser
+ * (`functions.GraftParser`, injected by `GraftExtensions`) to every
+ * statement a graft session parses: `spark.sql`, the CLI's statements
+ * and hive-jdbc statements alike. The parser is the one caller of
+ * [[apply]]. The reference hands its users a Presto prompt
+ * (presto-mgr.py:205 `connect`), so the Presto spellings that Spark's
+ * GRAMMAR (not its function registry) rejects are rewritten to their
+ * exact-semantics Spark forms before parsing:
  *
  *  1. quoted datetime units — `date_diff('day', a, b)` → `date_diff(day, a, b)`
  *     (Spark handles these in AstBuilder.visitTimestampdiff/-add; a
@@ -33,6 +36,10 @@ import java.util.Locale
  *     This is the one rewrite that fires on text Spark would also accept:
  *     the front door advertises Presto semantics, and Spark's 0-based
  *     reading of pasted Presto text is a silent off-by-one (r18 ADVICE).
+ *     `spark.sql` on a graft session is statement text too, so it reads
+ *     `arr[1]` as the first element; expression strings (`expr`,
+ *     `selectExpr`, `filter(String)`) are not rewritten and keep Spark's
+ *     0-based meaning.
  *
  * Every rewrite is literal-aware: a pattern inside a string literal,
  * quoted identifier, or comment is never touched (the r17 ADVICE find —
@@ -40,7 +47,7 @@ import java.util.Locale
  */
 object PrestoRewrite {
 
-  /** Apply all dialect rewrites (the front door's one entry point).
+  /** Apply all dialect rewrites (the session parser's one entry point).
     * Order matters for MAP-before-ARRAY (the MAP constructor is detected
     * by its `ARRAY[` argument prefixes) and ARRAY-before-subscript (the
     * literal pass folds `ARRAY[..][i]` itself; the subscript pass then
@@ -91,6 +98,18 @@ object PrestoRewrite {
 
   private def outside(spans: IndexedSeq[(Int, Int)], pos: Int): Boolean =
     !spans.exists(s => pos >= s._1 && pos < s._2)
+
+  /** Indices of `text` outside every protected span, ascending: the
+    * characters the SQL grammar reads as code. The one lexer for
+    * splitting statements and arguments and for finding `?` markers. */
+  private[graft] def codeIndices(text: String): Iterator[Int] =
+    (0 +: protectedSpans(text).flatMap(s => Seq(s._1, s._2)) :+ text.length)
+      .grouped(2).flatMap { case Seq(a, b) => a until b }
+
+  /** The pieces of `text` between the given cut indices, each cut
+    * character dropped: n cuts give n + 1 pieces, untrimmed. */
+  private[graft] def cutAt(text: String, cuts: Seq[Int]): Seq[String] =
+    ((-1 +: cuts) zip (cuts :+ text.length)).map { case (a, b) => text.substring(a + 1, b) }
 
   // ------------------------------------------------------- datetime units
 
@@ -548,29 +567,17 @@ object PrestoRewrite {
 
   /** Split `args` on top-level commas (literal- and paren-aware). */
   private[graft] def splitTopLevel(args: String): Seq[String] = {
-    val spans = protectedSpans(args)
-    val out = Seq.newBuilder[String]
-    val cur = new StringBuilder
+    val cuts = Seq.newBuilder[Int]
     var depth = 0
-    var i = 0
-    while (i < args.length) {
-      if (!outside(spans, i)) {
-        val end = spans.find(s => i >= s._1 && i < s._2).get._2
-        cur.append(args.substring(i, end))
-        i = end
-      } else {
-        val c = args.charAt(i)
-        c match {
-          case '(' | '[' => depth += 1; cur += c
-          case ')' | ']' => depth -= 1; cur += c
-          case ',' if depth == 0 => out += cur.toString; cur.clear()
-          case _ => cur += c
-        }
-        i += 1
+    codeIndices(args).foreach { i =>
+      args.charAt(i) match {
+        case '(' | '[' => depth += 1
+        case ')' | ']' => depth -= 1
+        case ',' if depth == 0 => cuts += i
+        case _ => ()
       }
     }
-    out += cur.toString
-    out.result().map(_.trim).filter(_.nonEmpty)
+    cutAt(args, cuts.result()).map(_.trim).filter(_.nonEmpty)
   }
 
   /** Presto zips N arrays positionally, NULL-padding the shorter —

@@ -2,10 +2,12 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.{FunctionIdentifier, TableIdentifier}
 import org.apache.spark.sql.catalyst.expressions.{Abs, Add, Cast, DateFormatClass, DatePart, DayOfYear, Divide, EqualTo, Expression, ExpressionInfo, Floor, GetJsonObject, If, LastDay, Literal, Multiply, ParseUrl, RLike, RegExpExtract, Signum, StringLocate, TypeOf, UnixMicros, WeekDay, WeekOfYear}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{First, HyperLogLogPlusPlus}
-import org.apache.spark.sql.types.{DateType, DoubleType, IntegerType, LongType, StringType, TimestampType}
+import org.apache.spark.sql.catalyst.parser.{ParameterContext, ParserInterface}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.types.{DataType, DateType, DoubleType, IntegerType, LongType, StringType, StructType, TimestampType}
 import org.apache.spark.sql.GraftBridge
 
 import graft.functions.{KernelTable => K}
@@ -353,8 +355,8 @@ object GraftFunctions {
     * like Presto: day_of_week/dow 1=Monday per ISO (Spark's weekday+1),
     * week/week_of_year the ISO week, year_of_week/yow the ISO
     * week-based year, day_of_year/doy, and last_day_of_month.
-    * (date_diff/date_add live in GraftCli's dialect REWRITE — see the
-    * note on the Seq below.) */
+    * (date_diff/date_add live in the session parser's dialect REWRITE —
+    * see the note on the Seq below.) */
   private[functions] val prestoDatetime: Seq[(String, Seq[Expression] => Expression)] = {
     def dayOfWeek(args: Seq[Expression]): Expression =
       Cast(Add(WeekDay(Cast(args.head, DateType)), Literal(1)), LongType)
@@ -367,7 +369,7 @@ object GraftFunctions {
     // date_diff/date_add are NOT here: Spark handles them in the GRAMMAR
     // (AstBuilder.visitTimestampdiff/-add — a registry builder never
     // sees the call), so Presto's quoted-unit spelling is served by
-    // GraftCli's dialect rewrite at the SQL front door instead, landing
+    // the dialect rewrite in GraftParser instead, landing
     // on Spark's own ChronoUnit full-elapsed-unit semantics — the same
     // periods Presto's Joda implementation counts.
     Seq(
@@ -408,10 +410,12 @@ object GraftFunctions {
 /**
  * SparkSessionExtensions entry point:
  * `--conf spark.sql.extensions=graft.functions.GraftExtensions` makes the
- * graft function family available in every session of a deployment.
+ * graft function family, optimizer rules and Presto-dialect parser
+ * available in every session of a deployment.
  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
+    ext.injectParser((_, delegate) => new GraftParser(delegate))
     ext.injectOptimizerRule(_ => graft.plans.SelfHammingRule)
     ext.injectOptimizerRule(_ => graft.plans.IntervalJoinRule)
     ext.injectOptimizerRule(_ => graft.plans.FastDecimalCastRule)
@@ -424,4 +428,40 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         builder))
     }
   }
+}
+
+/**
+ * The session's SQL parser: Spark's, behind the Presto-dialect rewrite
+ * ([[graft.PrestoRewrite]]). Every statement text a graft session parses
+ * — `spark.sql`, the CLI's verbs, hive-jdbc statements — passes through
+ * `parsePlan`/`parsePlanWithParameters`, so the dialect is applied once,
+ * here, and no caller rewrites text itself. Spark 4.1's `SparkSession.sql`
+ * calls `parsePlanWithParameters`, whose interface default would forward
+ * to `parsePlan` and drop the parameters, so both are overridden.
+ *
+ * Everything else passes through unchanged: `parseQuery` re-parses stored
+ * view text, which is the already-rewritten statement, and
+ * `parseExpression` keeps Spark's meaning for `expr()`, `selectExpr` and
+ * `filter(String)` (0-based `arr[i]` included).
+ */
+class GraftParser(delegate: ParserInterface) extends ParserInterface {
+  override def parsePlan(sqlText: String): LogicalPlan =
+    delegate.parsePlan(graft.PrestoRewrite(sqlText))
+  override def parsePlanWithParameters(sqlText: String,
+      context: ParameterContext): LogicalPlan =
+    delegate.parsePlanWithParameters(graft.PrestoRewrite(sqlText), context)
+  override def parseQuery(sqlText: String): LogicalPlan = delegate.parseQuery(sqlText)
+  override def parseExpression(sqlText: String): Expression =
+    delegate.parseExpression(sqlText)
+  override def parseTableIdentifier(sqlText: String): TableIdentifier =
+    delegate.parseTableIdentifier(sqlText)
+  override def parseFunctionIdentifier(sqlText: String): FunctionIdentifier =
+    delegate.parseFunctionIdentifier(sqlText)
+  override def parseMultipartIdentifier(sqlText: String): Seq[String] =
+    delegate.parseMultipartIdentifier(sqlText)
+  override def parseRoutineParam(sqlText: String): StructType =
+    delegate.parseRoutineParam(sqlText)
+  override def parseTableSchema(sqlText: String): StructType =
+    delegate.parseTableSchema(sqlText)
+  override def parseDataType(sqlText: String): DataType = delegate.parseDataType(sqlText)
 }

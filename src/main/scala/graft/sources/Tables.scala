@@ -77,22 +77,30 @@ object Tables {
   def orders(s: SparkSession, d: String): DataFrame    = df(s, d, "orders")
   def lineitem(s: SparkSession, d: String): DataFrame  = df(s, d, "lineitem")
 
-  /** events.ts encoding has varied across driver data generations:
+  /** The SQL expression that normalizes events' raw `ts` column; both
+    * [[events]] and GraftServer's persistent `events` view are built
+    * from it. The encoding has varied across driver data generations:
     * INT64 TIMESTAMP(NANOS) (read as long via the legacy flag, rebuilt at
     * µs precision — `div` keeps the arithmetic in exact integer space, ns
     * epochs overflow double) vs plain TIMESTAMP(MICROS) (surfaces as
     * TIMESTAMP_NTZ; cast to session-local TIMESTAMP — sessions pin UTC —
     * so downstream unix_micros/date_format see one type either way).
-    * Dispatch on the actual parquet schema, not an assumed generation. */
-  def events(s: SparkSession, d: String): DataFrame = {
+    * Dispatch on the actual parquet schema, not an assumed generation.
+    * Current generations write TIMESTAMP(MICROS), so the nanos arm is the
+    * compatibility path; a session that reads the raw nanos column needs
+    * `spark.sql.legacy.parquet.nanosAsLong=true`, which this sets on `s`
+    * (fresh thrift sessions need it in the deployment conf). */
+  private[graft] def eventsTs(s: SparkSession, d: String): String = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = df(s, d, "events")
-    val ts = raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        timestamp_micros(expr("ts div 1000"))
-      case _ => col("ts").cast("timestamp")
+    df(s, d, "events").schema("ts").dataType match {
+      case org.apache.spark.sql.types.LongType => "timestamp_micros(ts div 1000)"
+      case _ => "CAST(ts AS TIMESTAMP)"
     }
-    raw.select(col("event_id"), ts.as("ts"),
+  }
+
+  def events(s: SparkSession, d: String): DataFrame = {
+    val ts = expr(eventsTs(s, d))
+    df(s, d, "events").select(col("event_id"), ts.as("ts"),
       col("user_id"), col("event_type"), col("value"), col("props"))
   }
   def documents(s: SparkSession, d: String): DataFrame = df(s, d, "documents")

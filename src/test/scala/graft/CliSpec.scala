@@ -25,6 +25,19 @@ class CliSpec extends GraftSpec {
     assert(GraftCli.splitStatements("  ;;  ") == Seq.empty)
   }
 
+  test("one lexer: statements, USING arguments and ? markers split outside literals and comments") {
+    assert(GraftCli.splitStatements("SELECT 1; -- first; second\nSELECT 2;") ==
+      Seq("SELECT 1", "-- first; second\nSELECT 2"))
+    assert(GraftCli.splitStatements("SELECT 1 /* x; y */ AS z; SELECT 2") ==
+      Seq("SELECT 1 /* x; y */ AS z", "SELECT 2"))
+    assert(GraftCli.splitStatements("SELECT \"a;b\" AS x") == Seq("SELECT \"a;b\" AS x"))
+    // Spark nests bracketed comments, so the ? sits inside the outer one
+    assert(GraftCli.countParameters("SELECT /* a /* b */ ? */ 1") == 0)
+    assert(GraftCli.splitArgs("'a', \"b,c\", f(1, 2)") == Seq("'a'", "\"b,c\"", "f(1, 2)"))
+    // a piece that holds only a comment is no statement
+    assert(GraftCli.splitStatements("SELECT 1; -- done\n") == Seq("SELECT 1"))
+  }
+
   test("SHOW TABLES / DESCRIBE work through the SQL front door (catalog parity)") {
     val tables = GraftCli.sql(spark, sf, "SHOW TABLES")
       .collect().map(_.getAs[String]("tableName")).toSet
@@ -1078,8 +1091,8 @@ class CliSpec extends GraftSpec {
     val s = GraftCli.open(spark, sf)
     def one(q: String) = GraftCli.sql(s, sf, q).head()
     // the rewrite itself: quoted and bare unit spellings agree
-    assert(GraftCli.rewritePrestoDatetime("date_diff('day', a, b)") == "date_diff(day,  a, b)"
-      || GraftCli.rewritePrestoDatetime("date_diff('day', a, b)") == "date_diff(day, a, b)")
+    assert(PrestoRewrite.rewriteDatetime("date_diff('day', a, b)") == "date_diff(day,  a, b)"
+      || PrestoRewrite.rewriteDatetime("date_diff('day', a, b)") == "date_diff(day, a, b)")
     assert(one("SELECT date_diff('day', TIMESTAMP '2024-01-01', TIMESTAMP '2024-01-03 12:00:00')")
       .getLong(0) == 2L)
     assert(one("SELECT date_diff(day, TIMESTAMP '2024-01-01', TIMESTAMP '2024-01-03 12:00:00')")
@@ -1097,7 +1110,7 @@ class CliSpec extends GraftSpec {
     assert(one("SELECT date_diff(DATE '2024-01-05', DATE '2024-01-01')").getInt(0) == 4)
     assert(one("SELECT CAST(date_add(DATE '2024-01-01', 3) AS STRING)").getString(0) == "2024-01-04")
     // a unit word inside an ordinary string literal is not rewritten
-    assert(GraftCli.rewritePrestoDatetime("SELECT 'day', x") == "SELECT 'day', x")
+    assert(PrestoRewrite.rewriteDatetime("SELECT 'day', x") == "SELECT 'day', x")
     // ISO extracts: 2024-01-01 is a Monday of ISO week 1; 2021-01-01 is a
     // Friday belonging to ISO week 53 of week-year 2020
     assert(one("SELECT day_of_week(TIMESTAMP '2024-01-01')").getLong(0) == 1L)
@@ -1527,22 +1540,22 @@ class CliSpec extends GraftSpec {
     val s = GraftCli.open(spark, sf)
     // the quoted-unit pattern inside a DOUBLE-quoted string literal (the
     // r17 documented false positive) is untouched
-    assert(GraftCli.rewritePrestoDatetime("""SELECT "date_diff('day', a, b)" AS t""")
+    assert(PrestoRewrite.rewriteDatetime("""SELECT "date_diff('day', a, b)" AS t""")
       == """SELECT "date_diff('day', a, b)" AS t""")
     // ... and inside comments
-    assert(GraftCli.rewritePrestoDatetime(
+    assert(PrestoRewrite.rewriteDatetime(
       "SELECT 1 -- date_diff('day', a, b)\n") ==
       "SELECT 1 -- date_diff('day', a, b)\n")
-    assert(GraftCli.rewritePrestoDatetime(
+    assert(PrestoRewrite.rewriteDatetime(
       "SELECT /* date_diff('day', a, b) */ 1") ==
       "SELECT /* date_diff('day', a, b) */ 1")
     // while a real call AFTER a comment still rewrites
-    val mixed = GraftCli.rewritePrestoDatetime(
+    val mixed = PrestoRewrite.rewriteDatetime(
       "-- note\nSELECT date_diff('day', a, b)")
     assert(mixed == "-- note\nSELECT date_diff(day,  a, b)" ||
       mixed == "-- note\nSELECT date_diff(day, a, b)")
-    // EXECUTE rewrites the TEMPLATE before binding: a bound string
-    // parameter containing the pattern stays verbatim
+    // EXECUTE binds, then the parser's literal-aware rewrite runs: a
+    // bound string parameter containing the pattern stays verbatim
     val out = new java.io.ByteArrayOutputStream
     val prepared = scala.collection.mutable.Map[String, String]()
     GraftCli.runStatement(s,
@@ -1565,5 +1578,28 @@ class CliSpec extends GraftSpec {
       "EXPLAIN ANALYZE SELECT TRY(1/0) AS x",
       "table", new java.io.PrintStream(out3), new java.io.PrintStream(new java.io.ByteArrayOutputStream))
     assert(out3.toString("UTF-8").contains("Physical Plan"), out3.toString)
+  }
+
+  test("a Presto-spelled prepared statement describes and executes") {
+    import org.apache.spark.sql.functions.{col, datediff}
+    val s = GraftCli.open(spark, sf)
+    val store = scala.collection.mutable.Map[String, String]()
+    GraftCli.route(s, "PREPARE pd FROM SELECT date_diff('day', o_orderdate, l_shipdate) AS d " +
+      "FROM orders JOIN lineitem ON l_orderkey = o_orderkey WHERE o_orderkey = ?", store)
+    val keyType = s.table("orders").schema("o_orderkey").dataType.sql.toLowerCase
+    val in = GraftCli.routeRows(s, "DESCRIBE INPUT pd", store).collect()
+      .map(r => (r.getInt(0), r.getString(1))).toSeq
+    assert(in == Seq((1, keyType)), in)
+    val out = GraftCli.routeRows(s, "DESCRIBE OUTPUT pd", store).collect()
+      .map(r => (r.getInt(0), r.getString(1), r.getString(2))).toSeq
+    assert(out == Seq((1, "d", "bigint")), out)
+    val key = s.table("orders").head().getAs[Any]("o_orderkey")
+    val got = GraftCli.routeRows(s, s"EXECUTE pd USING $key", store)
+      .collect().map(_.getLong(0)).sorted.toSeq
+    val want = s.table("orders").join(s.table("lineitem"), col("l_orderkey") === col("o_orderkey"))
+      .where(col("o_orderkey") === key)
+      .select(datediff(col("l_shipdate"), col("o_orderdate")).cast("long"))
+      .collect().map(_.getLong(0)).sorted.toSeq
+    assert(got.nonEmpty && got == want, s"got=$got want=$want")
   }
 }

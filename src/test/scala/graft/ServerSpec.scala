@@ -65,6 +65,17 @@ class ServerSpec extends GraftSpec {
     } finally conn.close()
   }
 
+  test("Presto-spelled texts (s22, s24-s27) over the socket match the in-process front door") {
+    // the dialect rewrite lives in the session parser, which rides into
+    // every thrift session with the extensions
+    val conn = connect()
+    try GraftCli.prestoTexts.toSeq.sortBy(_._1).foreach { case (name, q) =>
+      val wire = jdbcRows(conn, q)
+      val local = sparkRows(q)
+      assert(wire.nonEmpty && wire == local, s"$name\nwire=$wire\nlocal=$local")
+    } finally conn.close()
+  }
+
   test("graft-native function (cosine_sim) rides into the thrift session") {
     // extensions-injected functions must resolve in the server-side
     // session (newSession() re-applies spark.sql.extensions)

@@ -37,6 +37,29 @@ class SessionSpec extends GraftSpec {
       s"build sessions with GraftSession.builder/get, not SparkSession.builder(): ${offenders.mkString(", ")}")
   }
 
+  test("the session parser reads statements as Presto SQL and leaves expression strings to Spark") {
+    // statement text is rewritten: a subscript is Presto's 1-based one
+    assert(spark.sql("SELECT array(10,20,30)[1]").head().getInt(0) == 10)
+    // expression strings (expr, selectExpr, filter) keep Spark's 0-based one
+    assert(spark.range(1).select(org.apache.spark.sql.functions.expr("array(10,20,30)[1]"))
+      .head().getInt(0) == 20)
+    // named parameters survive the rewrite (parsePlanWithParameters)
+    assert(spark.sql("SELECT :k AS v", Map("k" -> 7)).head().getInt(0) == 7)
+  }
+
+  test("the session parser is the one caller of PrestoRewrite") {
+    // a second caller would be a second dialect path, one that a JDBC
+    // statement or a prepared template can miss
+    val rewriteCall = """PrestoRewrite\s*(\(|\.\s*apply\b)""".r
+    val offenders = {
+      val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      try files.iterator().asScala.toVector finally files.close()
+    }.filter(p => p.toString.endsWith(".scala") && p.getFileName.toString != "GraftFunctions.scala")
+      .filter(p => rewriteCall.findFirstIn(java.nio.file.Files.readString(p)).isDefined)
+    assert(offenders.isEmpty,
+      s"only functions.GraftParser applies PrestoRewrite: ${offenders.mkString(", ")}")
+  }
+
   test("active session carries graft engine defaults") {
     assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
     assert(spark.conf.get("spark.sql.extensions") == "graft.functions.GraftExtensions")

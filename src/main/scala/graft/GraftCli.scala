@@ -977,9 +977,9 @@ object GraftCli {
     * prepared-statement verbs and the Presto statements Spark SQL lacks;
     * everything else (including CREATE/DROP VIEW, which Spark serves
     * natively through the session catalog) is bare SQL, which the
-    * session's parser reads in the Presto dialect. `prepared` is the session's named-statement store and `txn`
-    * its transaction envelope (the CLI main owns one of each per run,
-    * like a Presto session). */
+    * session's parser reads in the Presto dialect. `prepared` is the
+    * session's named-statement store and `txn` its transaction envelope
+    * (the CLI main owns one of each per run, like a Presto session). */
   private[graft] def route(spark: SparkSession, stmt: String,
                            prepared: scala.collection.mutable.Map[String, String] =
                              scala.collection.mutable.Map.empty,

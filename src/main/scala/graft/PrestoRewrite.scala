@@ -64,7 +64,10 @@ object PrestoRewrite {
   /** Character spans the rewrites must never fire inside: single- and
     * double-quoted string literals, backtick identifiers, `--` line
     * comments, and (nested) bracketed comments. '' escaping falls out
-    * naturally: the escaped quote closes one span and opens another. */
+    * naturally: the escaped quote closes one span and opens another. A
+    * backslash inside a string literal escapes the next character, as in
+    * Spark's lexer (`'it\'s'` is one literal); backtick identifiers
+    * have no backslash escapes. */
   private[graft] def protectedSpans(text: String): IndexedSeq[(Int, Int)] = {
     val spans = Vector.newBuilder[(Int, Int)]
     var i = 0
@@ -74,7 +77,10 @@ object PrestoRewrite {
       if (c == '\'' || c == '"' || c == '`') {
         val start = i
         i += 1
-        while (i < n && text.charAt(i) != c) i += 1
+        while (i < n && text.charAt(i) != c) {
+          if (text.charAt(i) == '\\' && c != '`') i += 1
+          i += 1
+        }
         i += 1 // past the closing quote (or end of text)
         spans += ((start, math.min(i, n)))
       } else if (c == '-' && i + 1 < n && text.charAt(i + 1) == '-') {

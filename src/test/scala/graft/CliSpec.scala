@@ -31,6 +31,9 @@ class CliSpec extends GraftSpec {
     assert(GraftCli.splitStatements("SELECT 1 /* x; y */ AS z; SELECT 2") ==
       Seq("SELECT 1 /* x; y */ AS z", "SELECT 2"))
     assert(GraftCli.splitStatements("SELECT \"a;b\" AS x") == Seq("SELECT \"a;b\" AS x"))
+    // a backslash escapes the quote, as in Spark's lexer
+    assert(GraftCli.splitStatements("SELECT 'it\\'s; x' AS a; SELECT 2") ==
+      Seq("SELECT 'it\\'s; x' AS a", "SELECT 2"))
     // Spark nests bracketed comments, so the ? sits inside the outer one
     assert(GraftCli.countParameters("SELECT /* a /* b */ ? */ 1") == 0)
     assert(GraftCli.splitArgs("'a', \"b,c\", f(1, 2)") == Seq("'a'", "\"b,c\"", "f(1, 2)"))

@@ -1,9 +1,14 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference}
+import org.apache.spark.sql.catalyst.plans.logical.{CommandResult, LogicalPlan}
+import org.apache.spark.sql.execution.{CommandExecutionMode, QueryExecution}
+import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.StringType
 
-import graft.functions.{GraftExtensions, GraftFunctions}
+import graft.functions.{GraftExtensions, GraftFunctions, GraftParser}
 import graft.sources.Tables
 
 /**
@@ -12,8 +17,11 @@ import graft.sources.Tables
  * `presto:test> select * from user;`). This is the Spark-native equivalent:
  * register the catalog as temp views on a graft-built session and serve
  * SQL text. The session's parser (`functions.GraftParser`) reads every
- * statement in the Presto dialect, so the CLI routes graft's own verbs
- * and hands the rest to `spark.sql` without rewriting any text itself.
+ * statement: graft's own verbs through the verb table ([[verbPlan]]) and
+ * the rest in the Presto dialect. So the CLI hands every statement to
+ * `spark.sql`, and every door (the CLI, [[sql]], hive-jdbc) reads the
+ * same text the same way. The transaction envelope ([[TxnState]]) is the
+ * CLI's one statement check of its own.
  *
  * Usage:
  *   runMain graft.GraftCli <sfDir> [--format table|csv|json] "SELECT ...;" [...]
@@ -48,8 +56,8 @@ object GraftCli {
     * graft-built (`spark.sql.extensions` names [[GraftExtensions]]): the
     * functions, rules and Presto-dialect parser come in with the
     * extensions, and a parser cannot be injected into a session after it
-    * is built. The warehouse dir rides in the session conf so statement
-    * routes that need the backing files (ANALYZE's external-table
+    * is built. The warehouse dir rides in the session conf so the
+    * verbs that need the backing files (ANALYZE's external-table
     * registration) can find them without re-plumbing every signature. */
   def open(spark: SparkSession, sfDir: String): SparkSession = {
     val extensions = classOf[GraftExtensions].getName
@@ -65,10 +73,12 @@ object GraftCli {
     spark
   }
 
-  /** Execute one SQL statement (the programmatic front door): any CLI
-    * statement that returns rows, routed on a fresh session state. */
+  /** Execute one SQL statement (the programmatic front door): any
+    * statement the CLI runs except the transaction verbs. A statement run
+    * for its effect returns its one `result` row, a report its one `plan`
+    * row. */
   def sql(spark: SparkSession, sfDir: String, text: String): DataFrame =
-    routeRows(open(spark, sfDir), text)
+    open(spark, sfDir).sql(text)
 
   /** Split ;-terminated SQL statements at the semicolons the grammar
     * reads as code: one inside a literal, quoted identifier or comment
@@ -166,7 +176,7 @@ object GraftCli {
     * ANALYZE emits, which plain EXPLAIN (plan only, never run) cannot.
     * The walk is the plan digest's, so query stages and subqueries are
     * reported too. Spark's own SQL surface has no ANALYZE mode, so the
-    * CLI routes the statement itself. */
+    * verb table serves the statement itself. */
   private[graft] def explainAnalyze(spark: SparkSession, query: String): String = {
     val plan = spark.sql(query).queryExecution.executedPlan
     val nRows = plan.execute().count()
@@ -181,7 +191,7 @@ object GraftCli {
   private val ExplainAnalyze = "(?is)^\\s*EXPLAIN\\s+ANALYZE\\s+(.*)$".r
   // Presto-CLI prepared statements (PREPARE / EXECUTE ... USING /
   // DEALLOCATE PREPARE — Presto docs, SQL statement reference). Spark's
-  // SQL dialect has no PREPARE statement, so the CLI routes these.
+  // SQL dialect has no PREPARE statement, so the verb table serves these.
   private val Prepare = "(?is)^\\s*PREPARE\\s+([A-Za-z_][A-Za-z_0-9]*)\\s+FROM\\s+(.+)$".r
   // IMMEDIATE is excluded by name: EXECUTE IMMEDIATE is dynamic SQL the
   // engine serves natively through the bare sql() path (s16), not a
@@ -189,8 +199,7 @@ object GraftCli {
   private val Execute = "(?is)^\\s*EXECUTE\\s+(?!IMMEDIATE\\b)([A-Za-z_][A-Za-z_0-9]*)\\s*(?:USING\\s+(.+?))?\\s*$".r
   private val Deallocate = "(?is)^\\s*DEALLOCATE\\s+PREPARE\\s+([A-Za-z_][A-Za-z_0-9]*)\\s*$".r
   // Presto `SHOW STATS FOR table` (Presto docs, SHOW STATS) — the
-  // planner-statistics surface the CLI exposes; Spark SQL has no
-  // SHOW STATS statement, so the CLI routes it.
+  // planner-statistics surface; Spark SQL has no SHOW STATS statement.
   // SHOW STATS serves ESTIMATES by default (Presto's planner stats are
   // estimates; exact per-column NDV is the most expensive stats pass
   // there is at 100 TB) — EXACT opts into the full countDistinct form.
@@ -199,18 +208,18 @@ object GraftCli {
   // Presto session-property statements (Presto docs, SET SESSION /
   // RESET SESSION / SHOW SESSION — the per-session tuning surface every
   // Presto client drives). Spark's SET statement exists but exposes raw
-  // conf keys; the CLI serves the Presto-named property catalog below,
+  // conf keys; graft serves the Presto-named property catalog below,
   // each mapped to the Spark conf that honestly implements it.
   // Presto's ANALYZE statement: collect table + column statistics for
   // the cost-based planner (Presto docs, ANALYZE). Spark's ANALYZE TABLE
-  // needs a catalog entry (temp views carry no stats), so the route
+  // needs a catalog entry (temp views carry no stats), so graft's ANALYZE
   // registers the parquet-backed table as an EXTERNAL catalog table (no
   // copy) and runs FOR ALL COLUMNS — the stats SHOW STATS reports and
   // plans.CboSupport.withCbo turns into join-order decisions.
   private val Analyze = "(?is)^\\s*ANALYZE\\s+([A-Za-z_][A-Za-z_0-9]*)\\s*$".r
   // Presto DELETE FROM t [WHERE ...] (Presto 0.248 serves DELETE on its
   // writable connectors). Spark SQL rejects DELETE on v1 parquet tables,
-  // so the CLI routes it to a distributed anti-filter rewrite of the
+  // so the verb table serves it as a distributed anti-filter rewrite of the
   // managed table (see deleteFrom).
   private val Delete =
     "(?is)^\\s*DELETE\\s+FROM\\s+([A-Za-z_][A-Za-z_0-9]*)(?:\\s+WHERE\\s+(.+?))?\\s*$".r
@@ -220,7 +229,7 @@ object GraftCli {
   // Presto prepared-statement METADATA (Presto 0.248 DESCRIBE INPUT /
   // DESCRIBE OUTPUT) — client libraries type their parameter markers and
   // result sets from these BEFORE fetching. Spark has no prepared
-  // statements, so the CLI serves both from its session statement store.
+  // statements, so graft serves both from the session's statement store.
   // the name captures ALSO match qualified (dotted) identifiers so a
   // `DESCRIBE INPUT db.q` cannot silently fall through to Spark's native
   // DESCRIBE — prepared-statement names are session-scoped and unqualified
@@ -230,15 +239,15 @@ object GraftCli {
   private val DescribeOutput =
     "(?is)^\\s*DESCRIBE\\s+OUTPUT\\s+([A-Za-z_][A-Za-z_0-9]*(?:\\.[A-Za-z_][A-Za-z_0-9]*)*)\\s*$".r
   // Presto SHOW COLUMNS FROM t (DESCRIBE t is its alias there): a TYPED
-  // column report. Spark's native SHOW COLUMNS emits names only, so the
-  // CLI routes to the DESCRIBE relation's columns section. Qualified
-  // names (db.t) route here too — DESCRIBE resolves them natively.
+  // column report. Spark's native SHOW COLUMNS emits names only, so graft
+  // serves the DESCRIBE relation's columns section. Qualified names (db.t)
+  // match too — DESCRIBE resolves them natively.
   private val ShowColumns =
     "(?is)^\\s*SHOW\\s+COLUMNS\\s+(?:FROM|IN)\\s+([A-Za-z_][A-Za-z_0-9]*(?:\\.[A-Za-z_][A-Za-z_0-9]*)*)\\s*$".r
   // Presto 0.248 SHOW PARTITIONS FROM t (sugar for SELECT from the
   // "t$partitions" system table there): one row per partition, one TYPED
   // column per partition key. Spark's native SHOW PARTITIONS (no FROM)
-  // emits k=v strings; the CLI serves the typed Presto shape.
+  // emits k=v strings; graft serves the typed Presto shape.
   private val ShowPartitions =
     ("(?is)^\\s*SHOW\\s+PARTITIONS\\s+(?:FROM|IN)\\s+" +
       "([A-Za-z_][A-Za-z_0-9]*(?:\\.[A-Za-z_][A-Za-z_0-9]*)*)\\s*$").r
@@ -261,7 +270,7 @@ object GraftCli {
     "(?is)^\\s*EXPLAIN\\s*\\(\\s*TYPE\\s+(VALIDATE|IO|DISTRIBUTED)\\s*\\)\\s*(.+)$".r
   // Presto SHOW FUNCTIONS [LIKE 'pattern'] — the typed function listing
   // (Spark's native statement returns one untyped name column; Presto's
-  // clients expect kind metadata). Routed ahead of the bare path.
+  // clients expect kind metadata). Served instead of Spark's statement.
   private val ShowFunctions =
     "(?is)^\\s*SHOW\\s+FUNCTIONS(?:\\s+LIKE\\s+'([^']*)')?\\s*$".r
 
@@ -502,27 +511,20 @@ object GraftCli {
       .orderBy(col("column_name").asc_nulls_first)
   }
 
-  /** s15: route the session statements, snapshot SHOW SESSION (values
+  /** s15: run the session statements, snapshot SHOW SESSION (values
     * read back from the live conf — the snapshot IS the evidence the
-    * SETs landed), then restore the pre-entry confs so the entry never
-    * poisons the session for whatever runs next (Verify runs 250+
-    * entries in one session). */
+    * SETs landed), then restore every property's backing conf so the
+    * entry never poisons the session for whatever runs next (Verify runs
+    * 250+ entries in one session). */
   private[graft] def sessionEntry(spark: SparkSession, sfDir: String,
       statements: Seq[String]): DataFrame = {
     val sess = open(spark, sfDir)
-    // one backing conf per catalog property — keep in lockstep with
-    // sessionProps so the entry leaves the shared Verify session exactly
-    // as it found it
-    val touched = Seq("spark.sql.shuffle.partitions",
-      "spark.sql.autoBroadcastJoinThreshold", "spark.sql.session.timeZone",
-      "spark.sql.adaptive.enabled",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-      "spark.graft.dedup.maxBucket")
-    val saved = touched.map(k => k -> sess.conf.getOption(k))
+    val saved = sessionProps.map(p => p.toConf(p.default)._1)
+      .map(k => k -> sess.conf.getOption(k))
     try {
-      statements.foreach(route(sess, _))
+      statements.foreach(sess.sql)
       // SHOW SESSION materializes the conf reads into a literal relation
-      routeRows(sess, "SHOW SESSION")
+      sess.sql("SHOW SESSION")
     } finally saved.foreach {
       case (k, Some(v)) => sess.conf.set(k, v)
       case (k, None)    => sess.conf.unset(k)
@@ -560,26 +562,27 @@ object GraftCli {
   /** Count parameter markers — the binder's own scan. */
   private[graft] def countParameters(template: String): Int = markers(template).length
 
+  /** A prepared template with every `?` bound to NULL: binding cannot
+    * change the plan's shape, and a NULL-typed marker takes the same
+    * coerced type the analyzer gives any execution. */
+  private def nullBound(template: String): String =
+    bindParameters(template, Seq.fill(countParameters(template))("NULL"))
+
+  /** A parsed plan's query execution, in which nothing runs: NON_ROOT
+    * keeps a command an unexecuted plan node, where the default mode runs
+    * it the moment any plan stage is touched (spark.sql() runs it at
+    * once). */
+  private def planned(spark: SparkSession, plan: LogicalPlan): QueryExecution =
+    spark.sessionState.executePlan(plan, CommandExecutionMode.NON_ROOT)
+
   /** DESCRIBE OUTPUT name — Presto 0.248's prepared-statement result-set
     * metadata (what a client library calls to type a result set before
-    * fetching a row). The template is ANALYZED with every `?` bound to
-    * NULL: binding cannot change the SELECT list's shape, and a
-    * NULL-typed projection reports the same coerced type the analyzer
-    * gives any execution. Nothing executes — the schema comes off the
-    * analyzed plan. Returns (ordinal, column_name, type) in SELECT-list
-    * order. */
-  private[graft] def describeOutput(spark: SparkSession,
-      prepared: scala.collection.Map[String, String], name: String): DataFrame = {
-    if (name.contains(".")) throw new IllegalArgumentException(
-      s"DESCRIBE OUTPUT: prepared-statement names are session-scoped and " +
-        s"unqualified; got '$name'")
-    val key = name.toLowerCase(java.util.Locale.ROOT)
-    val template = prepared.getOrElse(key, throw new IllegalArgumentException(
-      s"DESCRIBE OUTPUT: no prepared statement named $key (PREPARE it first)"))
-    val bound = spark.sql(bindParameters(template,
-      Seq.fill(countParameters(template))("NULL")))
+    * fetching a row), from the parsed [[nullBound]] template. Nothing
+    * executes — the schema comes off the analyzed plan. Returns
+    * (ordinal, column_name, type) in SELECT-list order. */
+  private[graft] def describeOutput(spark: SparkSession, bound: LogicalPlan): DataFrame = {
     import spark.implicits._
-    bound.schema.fields.zipWithIndex.toSeq.map { case (f, i) =>
+    planned(spark, bound).analyzed.schema.fields.zipWithIndex.toSeq.map { case (f, i) =>
       (i + 1, f.name, f.dataType.sql.toLowerCase(java.util.Locale.ROOT))
     }.toDF("ordinal", "column_name", "type")
   }
@@ -591,18 +594,13 @@ object GraftCli {
     * comparison/arithmetic or IN list, then types that column from the
     * NULL-bound ANALYZED plan (subtree outputs include scan columns the
     * SELECT list prunes). A marker with no such column context reports
-    * `unknown` — Presto does the same for non-inferable parameters. */
-  private[graft] def describeInput(spark: SparkSession,
-      prepared: scala.collection.Map[String, String], name: String): DataFrame = {
+    * `unknown` — Presto does the same for non-inferable parameters.
+    * `parsed` is the parsed template, `bound` the parsed [[nullBound]]
+    * one. */
+  private[graft] def describeInput(spark: SparkSession, parsed: LogicalPlan,
+      bound: LogicalPlan): DataFrame = {
     import org.apache.spark.sql.catalyst.analysis.{PosParameter, UnresolvedAttribute}
     import org.apache.spark.sql.catalyst.expressions.{BinaryOperator, Expression, In}
-    if (name.contains(".")) throw new IllegalArgumentException(
-      s"DESCRIBE INPUT: prepared-statement names are session-scoped and " +
-        s"unqualified; got '$name'")
-    val key = name.toLowerCase(java.util.Locale.ROOT)
-    val template = prepared.getOrElse(key, throw new IllegalArgumentException(
-      s"DESCRIBE INPUT: no prepared statement named $key (PREPARE it first)"))
-    val parsed = spark.sessionState.sqlParser.parsePlan(template)
     val positions = scala.collection.mutable.SortedSet[Int]()
     val paired = scala.collection.mutable.Map[Int, String]()
     def scan(e: Expression): Unit = {
@@ -625,13 +623,11 @@ object GraftCli {
       e.children.foreach(scan)
     }
     parsed.foreach(_.expressions.foreach(scan))
-    val bound = spark.sql(bindParameters(template,
-      Seq.fill(countParameters(template))("NULL")))
     // one name can reach the plan from several relations (a join where
     // both sides carry `id`): only report a type when every attribute of
     // that name AGREES — a last-wins toMap could silently mistype a
     // marker from whichever relation happened to enumerate last
-    val attrTypes: Map[String, String] = bound.queryExecution.analyzed
+    val attrTypes: Map[String, String] = planned(spark, bound).analyzed
       .collect { case n => n.output }.flatten
       .map(a => a.name.toLowerCase(java.util.Locale.ROOT) ->
         a.dataType.sql.toLowerCase(java.util.Locale.ROOT))
@@ -650,7 +646,7 @@ object GraftCli {
 
   /** SHOW COLUMNS FROM t — Presto's typed column listing (in Presto,
     * DESCRIBE t is an alias of this). Spark's native SHOW COLUMNS emits
-    * names only, so the route serves the DESCRIBE relation's columns
+    * names only, so graft serves the DESCRIBE relation's columns
     * section as (column_name, data_type). The collect is bounded by the
     * table's column count; unknown tables surface Spark's catalog error,
     * statement-scoped. */
@@ -755,14 +751,41 @@ object GraftCli {
   /** Session transaction envelope (Presto semantics over autocommit
     * connectors): `active` while a START TRANSACTION block is open,
     * `aborted` once a statement inside it failed — from then on every
-    * statement but ROLLBACK is refused until the block ends. */
+    * statement but ROLLBACK is refused until the block ends. This is the
+    * CLI's one statement check of its own: abort-on-failure has to see
+    * every statement fail as it happens, and only the CLI's statement
+    * loop does. Over hive-jdbc the transaction verbs stay a parse error. */
   private[graft] final class TxnState {
-    var active = false
-    var aborted = false
+    private var active = false
+    private var aborted = false
 
-    /** Run `body`; its failure inside an open transaction aborts it. */
-    def guard[T](body: => T): T =
-      try body catch { case e: Exception => if (active) aborted = true; throw e }
+    /** Run one statement inside the envelope: a transaction verb changes
+      * the state and gives its acknowledgement; any other statement is
+      * refused while the block is aborted, else `body` runs it. A failure
+      * inside an open block aborts it. */
+    def run(stmt: String)(body: => Unit): Option[String] = try PrestoRewrite.codeSpan(stmt) match {
+      case StartTransaction(modes) =>
+        if (active) throw new IllegalStateException(
+          "START TRANSACTION: a transaction is already in progress " +
+            "(nested transactions are not supported)")
+        Option(modes).foreach(validateTxnModes)
+        active = true; aborted = false
+        Some("START TRANSACTION (autocommit connectors: each statement commits individually)")
+      case CommitStmt() =>
+        if (!active) throw new IllegalStateException("COMMIT: no transaction in progress")
+        if (aborted) throw new IllegalStateException(
+          "COMMIT: the current transaction is aborted — ROLLBACK it")
+        active = false
+        Some("COMMIT")
+      case RollbackStmt() =>
+        if (!active) throw new IllegalStateException("ROLLBACK: no transaction in progress")
+        active = false; aborted = false
+        Some("ROLLBACK (autocommit connectors: statements that completed were already committed)")
+      case _ if active && aborted =>
+        throw new IllegalStateException(
+          "current transaction is aborted — ROLLBACK before issuing further statements")
+      case _ => body; None
+    } catch { case e: Exception => if (active) aborted = true; throw e }
   }
 
   /** Validate START TRANSACTION's mode list (Presto 0.248 grammar:
@@ -779,17 +802,11 @@ object GraftCli {
 
   /** EXPLAIN (TYPE VALIDATE) — analyze-only: parse + analyze the
     * statement and report validity; nothing optimizes, plans, or
-    * executes (executePlan is lazy — commands are NOT run, unlike
-    * spark.sql() which executes them eagerly). An analyzer error
+    * executes ([[planned]]: commands are NOT run). An analyzer error
     * surfaces as the statement-scoped error, exactly what a client
     * syntax-checking a query wants. */
   private[graft] def explainValidate(spark: SparkSession, query: String): DataFrame = {
-    val parsed = spark.sessionState.sqlParser.parsePlan(query)
-    // NON_ROOT: commands stay unexecuted plan nodes (the default ALL
-    // mode eagerly RUNS a command the moment any plan stage is touched)
-    spark.sessionState.executePlan(parsed,
-      org.apache.spark.sql.execution.CommandExecutionMode.NON_ROOT)
-      .assertAnalyzed()
+    planned(spark, spark.sessionState.sqlParser.parsePlan(query)).assertAnalyzed()
     import spark.implicits._
     Seq(true).toDF("valid")
   }
@@ -800,19 +817,14 @@ object GraftCli {
     * the data filters pushed into the parquet reader, and the partition
     * filters that prune directories — the two properties a 100 TB scan
     * lives on; plus one `output` row when the statement writes. Built
-    * from executePlan's lazy physical plan, so commands are planned but
-    * never run (spark.sql() would execute them during Dataset
-    * construction). */
+    * from the [[planned]] physical plan, so commands are planned but
+    * never run — the whole point of TYPE IO is to see the I/O without
+    * doing it. */
   private[graft] def explainIo(spark: SparkSession, query: String): DataFrame = {
     import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
     import org.apache.spark.sql.execution.command.DataWritingCommandExec
     import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
-    // NON_ROOT keeps commands as PLAN nodes (DataWritingCommandExec)
-    // instead of eagerly executing them into a CommandResult — the
-    // whole point of TYPE IO is to see the I/O without doing it
-    val qe = spark.sessionState.executePlan(
-      spark.sessionState.sqlParser.parsePlan(query),
-      org.apache.spark.sql.execution.CommandExecutionMode.NON_ROOT)
+    val qe = planned(spark, spark.sessionState.sqlParser.parsePlan(query))
     val plan: SparkPlan = qe.sparkPlan // pre-AQE physical tree: scans carry
                                        // pushdown metadata; nothing runs
     val rows = plan.collect {
@@ -841,8 +853,8 @@ object GraftCli {
   /** SHOW PARTITIONS FROM t — Presto 0.248's typed partition listing
     * (one row per partition, one column per partition key, values in
     * the key's declared type). Spark's catalog serves the partition
-    * list as k=v path strings (pure metadata — no data files open); the
-    * route re-types them against the table's partition schema. Rejects
+    * list as k=v path strings (pure metadata — no data files open); graft
+    * re-types them against the table's partition schema. Rejects
     * unpartitioned tables with Presto's own complaint. */
   private[graft] def showPartitions(spark: SparkSession, table: String): DataFrame = {
     import org.apache.spark.sql.functions.{regexp_extract, url_decode, when}
@@ -877,9 +889,7 @@ object GraftCli {
     import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
     import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning, SinglePartition}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    val qe = spark.sessionState.executePlan(
-      spark.sessionState.sqlParser.parsePlan(query),
-      org.apache.spark.sql.execution.CommandExecutionMode.NON_ROOT)
+    val qe = planned(spark, spark.sessionState.sqlParser.parsePlan(query))
     // executedPlan has gone through EnsureRequirements (exchanges exist)
     // but has NOT run; under AQE the initialPlan is the pre-execution
     // tree with every exchange visible
@@ -962,144 +972,135 @@ object GraftCli {
       .like(p.toLowerCase(java.util.Locale.ROOT)))).getOrElse(df)
   }
 
-  /** What one statement produces: result rows, a free-text report
-    * (EXPLAIN ANALYZE, EXPLAIN (TYPE DISTRIBUTED)), or the line that
-    * acknowledges a statement run for its effect. */
-  private[graft] sealed trait Outcome
-  private[graft] final case class Rows(df: DataFrame) extends Outcome
-  private[graft] final case class Report(text: String) extends Outcome
-  private[graft] final case class Ack(line: String) extends Outcome
+  /** A graft statement run for its effect (PREPARE, SET SESSION, DELETE,
+    * ...) or for a text report (EXPLAIN ANALYZE, EXPLAIN (TYPE
+    * DISTRIBUTED)). `spark.sql` runs it eagerly, as any command. Its one
+    * string row is the acknowledgement line, in column `result`, or the
+    * report, in column `plan`, the name Spark's EXPLAIN uses. */
+  private[graft] final case class GraftCommand(statement: String, column: String)(
+      body: () => String) extends LeafRunnableCommand {
+    override val output: Seq[Attribute] = Seq(AttributeReference(column, StringType)())
+    override def run(spark: SparkSession): Seq[Row] = Seq(Row(body()))
+    override protected def otherCopyArgs: Seq[AnyRef] = body :: Nil
+  }
 
-  /** The one statement router: every SQL-text path (the CLI's
-    * runStatement, `sql`, the s-entries) sends a statement here, so each
-    * statement regex is matched in this one place. Routes the
-    * transaction verbs, EXPLAIN ANALYZE / typed EXPLAIN, the
-    * prepared-statement verbs and the Presto statements Spark SQL lacks;
-    * everything else (including CREATE/DROP VIEW, which Spark serves
-    * natively through the session catalog) is bare SQL, which the
-    * session's parser reads in the Presto dialect. `prepared` is the
-    * session's named-statement store and `txn` its transaction envelope
-    * (the CLI main owns one of each per run, like a Presto session). */
-  private[graft] def route(spark: SparkSession, stmt: String,
-                           prepared: scala.collection.mutable.Map[String, String] =
-                             scala.collection.mutable.Map.empty,
-                           txn: TxnState = new TxnState): Outcome = txn.guard {
-    def lower(name: String) = name.toLowerCase(java.util.Locale.ROOT)
-    stmt.stripSuffix(";") match {
-      // transaction verbs run FIRST: ROLLBACK must work inside an
-      // aborted block, and the envelope check below must not see them
-      case StartTransaction(modes) =>
-        if (txn.active) throw new IllegalStateException(
-          "START TRANSACTION: a transaction is already in progress " +
-            "(nested transactions are not supported)")
-        Option(modes).foreach(validateTxnModes)
-        txn.active = true; txn.aborted = false
-        Ack("START TRANSACTION (autocommit connectors: each statement commits individually)")
-      case CommitStmt() =>
-        if (!txn.active) throw new IllegalStateException(
-          "COMMIT: no transaction in progress")
-        if (txn.aborted) throw new IllegalStateException(
-          "COMMIT: the current transaction is aborted — ROLLBACK it")
-        txn.active = false
-        Ack("COMMIT")
-      case RollbackStmt() =>
-        if (!txn.active) throw new IllegalStateException(
-          "ROLLBACK: no transaction in progress")
-        txn.active = false; txn.aborted = false
-        Ack("ROLLBACK (autocommit connectors: statements that completed were already committed)")
-      case _ if txn.active && txn.aborted =>
-        throw new IllegalStateException(
-          "current transaction is aborted — ROLLBACK before issuing " +
-            "further statements")
-      case ExplainAnalyze(query) => Report(explainAnalyze(spark, query))
-      case ExplainTyped(mode, query) =>
-        if (mode.equalsIgnoreCase("VALIDATE")) Rows(explainValidate(spark, query))
-        else if (mode.equalsIgnoreCase("DISTRIBUTED")) Report(explainDistributed(spark, query))
-        else Rows(explainIo(spark, query))
-      case Prepare(name, query) =>
-        prepared(lower(name)) = query
-        Ack(s"PREPARE ${lower(name)}")
-      case Deallocate(name) =>
-        val key = lower(name)
-        if (prepared.remove(key).isEmpty) throw new IllegalArgumentException(
-          s"DEALLOCATE PREPARE: no prepared statement named $key")
-        Ack(s"DEALLOCATE $key")
-      case Execute(name, usingArgs) =>
-        val key = lower(name)
-        val template = prepared.getOrElse(key, throw new IllegalArgumentException(
-          s"EXECUTE: no prepared statement named $key (PREPARE it first)"))
-        Rows(spark.sql(bindParameters(template,
-          Option(usingArgs).map(splitArgs).getOrElse(Nil))))
-      case ShowStats(mode, table) =>
-        Rows(showStats(spark, table, exact = "EXACT".equalsIgnoreCase(mode)))
-      case Analyze(table) =>
-        val t = lower(table)
-        if (!Tables.all.contains(t)) throw new IllegalArgumentException(
-          s"ANALYZE: unknown table $t (warehouse tables: ${Tables.all.mkString(", ")})")
-        val dir = spark.conf.getOption("spark.graft.sfDir").getOrElse(
-          throw new IllegalStateException("ANALYZE: session has no warehouse dir"))
-        graft.plans.CboSupport.registerWithStats(spark, dir, Seq(t))
-        Ack(s"ANALYZE $t -> catalog table ${graft.plans.CboSupport.tableName(t)} " +
-          "(row count + column stats recorded; enable CBO to feed the planner)")
-      case Delete(table, whereCond) =>
-        val n = deleteFrom(spark, table, Option(whereCond))
-        Ack(s"DELETE $n row(s) from ${lower(table)}")
-      case SetSession(name, value) =>
-        setSession(spark, name, value)
-        Ack(s"SET SESSION ${lower(name)}")
-      case ResetSession(name) =>
-        resetSession(spark, name)
-        Ack(s"RESET SESSION ${lower(name)}")
-      case ShowSession() => Rows(showSession(spark))
-      case DescribeInput(name) => Rows(describeInput(spark, prepared, name))
-      case DescribeOutput(name) => Rows(describeOutput(spark, prepared, name))
-      case ShowColumns(table) => Rows(showColumns(spark, table))
-      case ShowPartitions(table) => Rows(showPartitions(spark, table))
-      case ShowFunctions(pattern) => Rows(showFunctions(spark, Option(pattern)))
-      case bare => Rows(spark.sql(bare))
+  /** The first words of graft's verbs: any other statement, every SELECT
+    * and WITH among them, misses the table after this one test. */
+  private val VerbWords = Set("ANALYZE", "DEALLOCATE", "DELETE", "DESCRIBE",
+    "EXECUTE", "EXPLAIN", "PREPARE", "RESET", "SET", "SHOW")
+
+  /** The verb table: the plan of a graft verb, matched on the statement's
+    * code span ([[PrestoRewrite.codeSpan]]), or `None` for a statement
+    * Spark's grammar reads (CREATE/DROP VIEW included, which Spark serves
+    * natively through the session catalog). Reached only from
+    * `functions.GraftParser`, which holds the session and its prepared
+    * statements.
+    * A rows verb gives the plan of the DataFrame its handler builds, so
+    * results stay lazy and stream; EXECUTE binds its arguments here and
+    * gives the plan of the bound template, which is read on the dialect
+    * path only (a verb prepared as a template fails there, and `PREPARE
+    * q FROM EXECUTE q` cannot recurse); effect and report verbs give a
+    * [[GraftCommand]]. */
+  private[graft] def verbPlan(parser: GraftParser, sqlText: String): Option[LogicalPlan] = {
+    val stmt = PrestoRewrite.codeSpan(sqlText)
+    if (!VerbWords(stmt.takeWhile(_.isLetter).toUpperCase(java.util.Locale.ROOT))) None
+    else {
+      val (spark, prepared) = (parser.session, parser.prepared)
+      def lower(name: String) = name.toLowerCase(java.util.Locale.ROOT)
+      def rows(df: DataFrame) = Some(df.queryExecution.logical)
+      def effect(body: => String) = Some(GraftCommand(stmt, "result")(() => body))
+      def report(body: => String) = Some(GraftCommand(stmt, "plan")(() => body))
+      def template(verb: String, name: String): String = {
+        if (name.contains(".")) throw new IllegalArgumentException(
+          s"$verb: prepared-statement names are session-scoped and unqualified; got '$name'")
+        Option(prepared.get(lower(name))).getOrElse(throw new IllegalArgumentException(
+          s"$verb: no prepared statement named ${lower(name)} (PREPARE it first)"))
+      }
+      stmt match {
+        case ExplainAnalyze(query) => report(explainAnalyze(spark, query))
+        case ExplainTyped(mode, query) =>
+          if (mode.equalsIgnoreCase("VALIDATE")) rows(explainValidate(spark, query))
+          else if (mode.equalsIgnoreCase("DISTRIBUTED")) report(explainDistributed(spark, query))
+          else rows(explainIo(spark, query))
+        case Prepare(name, query) => effect {
+          prepared.put(lower(name), query)
+          s"PREPARE ${lower(name)}"
+        }
+        case Deallocate(name) => effect {
+          if (prepared.remove(lower(name)) == null) throw new IllegalArgumentException(
+            s"DEALLOCATE PREPARE: no prepared statement named ${lower(name)}")
+          s"DEALLOCATE ${lower(name)}"
+        }
+        case Execute(name, usingArgs) =>
+          Some(parser.dialect(bindParameters(template("EXECUTE", name),
+            Option(usingArgs).map(splitArgs).getOrElse(Nil))))
+        case ShowStats(mode, table) =>
+          rows(showStats(spark, table, exact = "EXACT".equalsIgnoreCase(mode)))
+        case Analyze(table) => effect {
+          val t = lower(table)
+          if (!Tables.all.contains(t)) throw new IllegalArgumentException(
+            s"ANALYZE: unknown table $t (warehouse tables: ${Tables.all.mkString(", ")})")
+          val dir = spark.conf.getOption("spark.graft.sfDir").getOrElse(
+            throw new IllegalStateException("ANALYZE: session has no warehouse dir"))
+          graft.plans.CboSupport.registerWithStats(spark, dir, Seq(t))
+          s"ANALYZE $t -> catalog table ${graft.plans.CboSupport.tableName(t)} " +
+            "(row count + column stats recorded; enable CBO to feed the planner)"
+        }
+        case Delete(table, whereCond) => effect {
+          val n = deleteFrom(spark, table, Option(whereCond))
+          s"DELETE $n row(s) from ${lower(table)}"
+        }
+        case SetSession(name, value) => effect {
+          setSession(spark, name, value)
+          s"SET SESSION ${lower(name)}"
+        }
+        case ResetSession(name) => effect {
+          resetSession(spark, name)
+          s"RESET SESSION ${lower(name)}"
+        }
+        case ShowSession() => rows(showSession(spark))
+        case DescribeInput(name) =>
+          val t = template("DESCRIBE INPUT", name)
+          rows(describeInput(spark, parser.dialect(t), parser.dialect(nullBound(t))))
+        case DescribeOutput(name) =>
+          rows(describeOutput(spark, parser.dialect(nullBound(template("DESCRIBE OUTPUT", name)))))
+        case ShowColumns(table) => rows(showColumns(spark, table))
+        case ShowPartitions(table) => rows(showPartitions(spark, table))
+        case ShowFunctions(pattern) => rows(showFunctions(spark, Option(pattern)))
+        case _ => None
+      }
     }
   }
 
-  /** The rows `route` gives for `stmt`; a statement that produces a
-    * report or an acknowledgement instead fails after it ran, naming its
-    * verb. */
-  private[graft] def routeRows(spark: SparkSession, stmt: String,
-      prepared: scala.collection.mutable.Map[String, String] =
-        scala.collection.mutable.Map.empty): DataFrame = route(spark, stmt, prepared) match {
-    case Rows(df) => df
-    case other =>
-      val verb = stmt.trim.takeWhile(!_.isWhitespace).toUpperCase(java.util.Locale.ROOT)
-      val what = if (other.isInstanceOf[Report]) "a text report" else "an acknowledgement"
-      throw new IllegalArgumentException(
-        s"$verb returns $what, not rows: run it through the CLI (GraftCli.main)")
-  }
-
-  /** Run one ;-stripped statement through `route` and render its
-    * outcome: rows to `out` in `format`, an acknowledgement to `err`,
-    * and wall time to `err` (stderr, so csv/json stdout stays
-    * machine-clean — the reference CLI reports elapsed per query the
-    * same way). A text report is free text, so under csv/json it ALSO
-    * goes to stderr — stdout carries machine-readable rows only, in
-    * every mode. The timing line prints even when the statement throws
-    * (finally), so a csv/json consumer can rely on exactly one timing
-    * line per statement. A failure while rendering rows aborts an open
-    * transaction like a failure while routing. */
+  /** Run one statement and render what it gives: rows to `out` in
+    * `format`, an acknowledgement to `err`, and wall time to `err`
+    * (stderr, so csv/json stdout stays machine-clean — the reference CLI
+    * reports elapsed per query the same way). A text report is free
+    * text, so under csv/json it ALSO goes to stderr — stdout carries
+    * machine-readable rows only, in every mode. The timing line prints
+    * even when the statement throws (finally), so a csv/json consumer
+    * can rely on exactly one timing line per statement. A failure while
+    * rendering rows aborts an open transaction like a failure while
+    * planning. */
   private[graft] def runStatement(spark: SparkSession, stmt: String,
                                   format: String, out: java.io.PrintStream,
                                   err: java.io.PrintStream,
-                                  prepared: scala.collection.mutable.Map[String, String] =
-                                    scala.collection.mutable.Map.empty,
                                   txn: TxnState = new TxnState): Unit = {
     val t0 = System.nanoTime()
     // every statement runs under a query_id job group: RUNNING row in
     // system.runtime.queries, stages attributable in .tasks, and
     // CALL system.runtime.kill_query(id) can cancel it live
     val queryId = graft.sources.GraftSystemCatalog.beginStatement(spark, stmt)
-    try txn.guard(route(spark, stmt, prepared, txn) match {
-      case Rows(df) => render(df, format, out)
-      case Report(text) => (if (format == "table") out else err).println(text)
-      case Ack(line) => err.println(s"[graft-cli] $line")
-    }) finally {
+    try txn.run(stmt) {
+      val df = spark.sql(stmt)
+      df.queryExecution.commandExecuted match {
+        case CommandResult(_, GraftCommand(_, "result"), _, rows) =>
+          err.println(s"[graft-cli] ${rows.head.getString(0)}")
+        case CommandResult(_, _: GraftCommand, _, rows) =>
+          (if (format == "table") out else err).println(rows.head.getString(0))
+        case _ => render(df, format, out)
+      }
+    }.foreach(line => err.println(s"[graft-cli] $line")) finally {
       graft.sources.GraftSystemCatalog.endStatement(spark, queryId)
       err.println(f"[graft-cli] ${(System.nanoTime() - t0) / 1e9}%.2fs")
     }
@@ -1136,14 +1137,11 @@ object GraftCli {
     open(spark, sfDir)
     catalogDir.foreach(d =>
       graft.sources.CatalogProperties.wireReporting(spark, d, System.err))
-    // session-scoped prepared-statement store (Presto session semantics:
-    // names live for the connection, statement-scoped errors don't drop it)
-    val prepared = scala.collection.mutable.Map[String, String]()
     // session transaction envelope (Presto semantics: statement errors
     // inside a block abort it; the envelope outlives the failed statement)
     val txn = new TxnState
     statements.foreach { stmt =>
-      try runStatement(spark, stmt, format, System.out, System.err, prepared, txn)
+      try runStatement(spark, stmt, format, System.out, System.err, txn)
       catch { case e: Exception =>
         System.err.println(s"[graft-cli] error: ${e.getMessage}")
       }
@@ -1289,8 +1287,8 @@ object GraftCli {
   /** Inventory entries exercised THROUGH the SQL-text path (same driver
     * oracle discipline as the DataFrame entries): proves a reference user
     * can point SQL at this engine and get verified answers. Every
-    * statement an entry issues as text goes through `route`, the router
-    * the CLI runs. */
+    * statement an entry issues as text goes through the session parser,
+    * as a CLI statement does. */
   val queries: Map[String, (SparkSession, String) => DataFrame] =
     Map[String, (SparkSession, String) => DataFrame](
     "s01_sql_agg" -> ((s, d) => sql(s, d, """
@@ -1454,11 +1452,11 @@ object GraftCli {
     // s12: Presto-CLI prepared statements (PREPARE q FROM ... ? ... /
     // EXECUTE q USING ...) — the parameterized-dashboard UX every BI
     // tool drives through the reference's CLI. The ?s bind through the
-    // CLI's splice path, so this entry breaks if the binder mis-handles
-    // quoting, arity, or placement.
+    // verb table's splice path, so this entry breaks if the binder
+    // mis-handles quoting, arity, or placement.
     "s12_sql_prepared" -> ((s, d) => {
-      val (sess, store) = (open(s, d), scala.collection.mutable.Map[String, String]())
-      route(sess, """PREPARE revenue_q FROM
+      val sess = open(s, d)
+      sess.sql("""PREPARE revenue_q FROM
          SELECT l_returnflag,
            CAST(SUM(CAST(l_extendedprice * l_discount AS DECIMAL(18,6)))
              AS DOUBLE) AS revenue,
@@ -1466,8 +1464,8 @@ object GraftCli {
          FROM lineitem
          WHERE l_discount BETWEEN ? AND ? AND l_quantity < ?
            AND 'quoted?' <> 'never'
-         GROUP BY l_returnflag ORDER BY l_returnflag""", store)
-      routeRows(sess, "EXECUTE revenue_q USING 0.05, 0.07, 24.0", store)
+         GROUP BY l_returnflag ORDER BY l_returnflag""")
+      sess.sql("EXECUTE revenue_q USING 0.05, 0.07, 24.0")
     }),
     // s13: views through the front door (Presto CREATE VIEW; the
     // reference UX is arbitrary DDL over `presto-mgr.py connect`).
@@ -1528,7 +1526,7 @@ object GraftCli {
             GROUP BY o_orderpriority ORDER BY o_orderpriority'
          USING 'F', 1000.0""")),
     // s17: DELETE FROM through the front door (Presto 0.248 DELETE on
-    // writable connectors) — CTAS a managed copy, route the DELETE
+    // writable connectors) — CTAS a managed copy, run the DELETE
     // (anti-filter rewrite + catalog swap), then aggregate the
     // survivors. The oracle replays the survivor set directly from the
     // source table, so a rewrite that drops the wrong rows (predicate
@@ -1540,7 +1538,7 @@ object GraftCli {
       sess.sql("""CREATE TABLE s17_dml_del AS
         SELECT l_orderkey, l_linenumber, l_quantity, l_returnflag
         FROM lineitem""")
-      route(sess, "DELETE FROM s17_dml_del WHERE l_returnflag = 'R' AND l_quantity > 25")
+      sess.sql("DELETE FROM s17_dml_del WHERE l_returnflag = 'R' AND l_quantity > 25")
       sess.sql("""SELECT l_returnflag, COUNT(*) AS n_rows,
           CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
         FROM s17_dml_del GROUP BY l_returnflag ORDER BY l_returnflag""")
@@ -1554,7 +1552,7 @@ object GraftCli {
     // column context exists) then result rows (ordinal, name, type).
     "s18_sql_describe_io" -> ((s, d) => describeIoEntry(s, d)),
     // s19: SHOW COLUMNS FROM t — the Presto CLI staple (DESCRIBE t is
-    // its Presto alias), served TYPED via the routed DESCRIBE relation.
+    // its Presto alias), served TYPED via the DESCRIBE relation.
     "s19_sql_show_columns" -> ((s, d) => {
       open(s, d)
       // part, not orders: orders' timestamp column reads as timestamp_ntz
@@ -1597,7 +1595,7 @@ object GraftCli {
     // s21: SHOW PARTITIONS FROM t — the Presto/Hive-connector staple for
     // date-partitioned corpora. CTAS a managed table PARTITIONED BY the
     // order year (the write lays out one directory per year — the layout
-    // a 100 TB corpus scan prunes on), then route SHOW PARTITIONS: the
+    // a 100 TB corpus scan prunes on), then run SHOW PARTITIONS: the
     // typed listing comes from catalog METADATA (partition paths), no
     // data files open. The oracle replays
     // the distinct years from the source table — a partition the write
@@ -1612,31 +1610,31 @@ object GraftCli {
         SELECT o_orderkey, o_totalprice,
           CAST(year(o_orderdate) AS INT) AS o_year
         FROM orders""")
-      routeRows(sess, "SHOW PARTITIONS FROM s21_part_orders")
+      sess.sql("SHOW PARTITIONS FROM s21_part_orders")
         .orderBy(col("o_year"))
     })
   ) ++ prestoTexts.map { case (n, t) => n -> ((s, d) => sql(s, d, t)) }
 
   /** s18: PREPARE, then DESCRIBE INPUT and DESCRIBE OUTPUT against the
-    * same store, unioned with a kind discriminator. The statement
+    * session's store, unioned with a kind discriminator. The statement
     * exercises all three inference shapes: a comparison-adjacent marker
     * (typed from the column), an IN-list marker, and a marker with no
     * column context (reports `unknown`). */
   private[graft] def describeIoEntry(spark: SparkSession, sfDir: String): DataFrame = {
-    val (sess, store) = (open(spark, sfDir), scala.collection.mutable.Map[String, String]())
-    route(sess, """PREPARE sq FROM
+    val sess = open(spark, sfDir)
+    sess.sql("""PREPARE sq FROM
        SELECT o_orderpriority,
          COUNT(*) AS n,
          CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
        FROM orders
        WHERE o_orderstatus = ? AND o_totalprice >= ?
          AND o_custkey IN (?) AND coalesce(NULL, ?) IS NULL
-       GROUP BY o_orderpriority ORDER BY o_orderpriority""", store)
+       GROUP BY o_orderpriority ORDER BY o_orderpriority""")
     import org.apache.spark.sql.functions.lit
-    routeRows(sess, "DESCRIBE INPUT sq", store)
+    sess.sql("DESCRIBE INPUT sq")
       .select(lit("input").as("kind"), col("position").as("ord"),
         lit("?").as("name"), col("type"))
-      .unionAll(routeRows(sess, "DESCRIBE OUTPUT sq", store)
+      .unionAll(sess.sql("DESCRIBE OUTPUT sq")
         .select(lit("output").as("kind"), col("ordinal").as("ord"),
           col("column_name").as("name"), col("type")))
       .orderBy(col("kind"), col("ord"))
@@ -1767,7 +1765,7 @@ object GraftCli {
     "s21_sql_show_partitions" -> """
       SELECT DISTINCT CAST(year(o_orderdate) AS INTEGER) AS o_year
       FROM orders ORDER BY o_year""",
-    // s17: survivors of the routed DELETE, replayed from the source
+    // s17: survivors of the DELETE, replayed from the source
     // table (NOT-TRUE predicate semantics: WHERE-null rows survive)
     "s17_sql_delete" -> """
       SELECT l_returnflag, COUNT(*) AS n_rows,

@@ -23,9 +23,11 @@ import graft.sources.Tables
  * full graft function family and the Presto-dialect parser
  * (`functions.GraftParser`), which ride into every connection via
  * `spark.sql.extensions`. So a Presto-spelled statement parses over the
- * wire exactly as it does in the CLI. The graft-only verbs (SHOW STATS,
- * PREPARE/EXECUTE, EXPLAIN ANALYZE, ...) are served by `GraftCli.route`
- * and are not reachable over the wire yet.
+ * wire exactly as it does in the CLI, and so do graft's own verbs (SHOW
+ * STATS, PREPARE/EXECUTE, EXPLAIN ANALYZE, ...), which the parser reads
+ * too. Each connection's session keeps its own prepared statements (one
+ * shared store under `singleSession`). The transaction verbs are the
+ * CLI's alone.
  *
  * Scale posture: the thrift server is a front door on the DRIVER — query
  * execution stays fully distributed (each JDBC statement plans and runs

@@ -112,6 +112,15 @@ object PrestoRewrite {
     (0 +: protectedSpans(text).flatMap(s => Seq(s._1, s._2)) :+ text.length)
       .grouped(2).flatMap { case Seq(a, b) => a until b }
 
+  /** The statement's code span: `text` without its leading and trailing
+    * whitespace, comments and `;`. Graft's verbs are matched on it. */
+  private[graft] def codeSpan(text: String): String = {
+    val comments = protectedSpans(text).filter(s => text.startsWith("--", s._1) || text.startsWith("/*", s._1))
+    def blank(i: Int) = text.charAt(i).isWhitespace || text.charAt(i) == ';' || !outside(comments, i)
+    val from = text.indices.find(!blank(_)).getOrElse(text.length)
+    text.substring(from, text.indices.reverseIterator.find(!blank(_)).fold(from)(_ + 1))
+  }
+
   /** The pieces of `text` between the given cut indices, each cut
     * character dropped: n cuts give n + 1 pieces, untrimmed. */
   private[graft] def cutAt(text: String, cuts: Seq[Int]): Seq[String] =

@@ -415,7 +415,7 @@ object GraftFunctions {
  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectParser((_, delegate) => new GraftParser(delegate))
+    ext.injectParser((session, delegate) => new GraftParser(session, delegate))
     ext.injectOptimizerRule(_ => graft.plans.SelfHammingRule)
     ext.injectOptimizerRule(_ => graft.plans.IntervalJoinRule)
     ext.injectOptimizerRule(_ => graft.plans.FastDecimalCastRule)
@@ -431,25 +431,43 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 /**
- * The session's SQL parser: Spark's, behind the Presto-dialect rewrite
- * ([[graft.PrestoRewrite]]). Every statement text a graft session parses
- * — `spark.sql`, the CLI's verbs, hive-jdbc statements — passes through
- * `parsePlan`/`parsePlanWithParameters`, so the dialect is applied once,
- * here, and no caller rewrites text itself. Spark 4.1's `SparkSession.sql`
- * calls `parsePlanWithParameters`, whose interface default would forward
- * to `parsePlan` and drop the parameters, so both are overridden.
+ * The session's SQL parser. A statement that opens with one of graft's
+ * verbs (SHOW STATS, PREPARE/EXECUTE, SET SESSION, EXPLAIN ANALYZE, ...;
+ * the table is [[graft.GraftCli.verbPlan]]) becomes that verb's plan;
+ * every other statement, every SELECT and WITH among them, is Spark's,
+ * behind the Presto-dialect rewrite ([[graft.PrestoRewrite]]). Every
+ * statement text a graft session parses (`spark.sql`, the CLI, hive-jdbc
+ * statements) passes through `parsePlan`/`parsePlanWithParameters`, so
+ * each door reads the same statements the same way. Spark 4.1's
+ * `SparkSession.sql` calls `parsePlanWithParameters`, whose interface
+ * default would forward to `parsePlan` and drop the parameters, so both
+ * are overridden.
+ *
+ * `injectParser` builds one parser per session, so the session's
+ * prepared statements live here. The thrift server gives each connection
+ * its own session, or shares one under `singleSession`; the store is
+ * concurrent for the shared case.
  *
  * Everything else passes through unchanged: `parseQuery` re-parses stored
  * view text, which is the already-rewritten statement, and
  * `parseExpression` keeps Spark's meaning for `expr()`, `selectExpr` and
  * `filter(String)` (0-based `arr[i]` included).
  */
-class GraftParser(delegate: ParserInterface) extends ParserInterface {
+class GraftParser(val session: SparkSession, delegate: ParserInterface) extends ParserInterface {
+  /** Prepared-statement templates by lower-cased name. */
+  private[graft] val prepared = new java.util.concurrent.ConcurrentHashMap[String, String]()
+
   override def parsePlan(sqlText: String): LogicalPlan =
-    delegate.parsePlan(graft.PrestoRewrite(sqlText))
+    graft.GraftCli.verbPlan(this, sqlText).getOrElse(dialect(sqlText))
   override def parsePlanWithParameters(sqlText: String,
-      context: ParameterContext): LogicalPlan =
-    delegate.parsePlanWithParameters(graft.PrestoRewrite(sqlText), context)
+      context: ParameterContext): LogicalPlan = graft.GraftCli.verbPlan(this, sqlText)
+    .getOrElse(dialect(sqlText, delegate.parsePlanWithParameters(_, context)))
+
+  /** The dialect path alone: the Presto rewrite, then Spark's parser. A
+    * prepared template is read here, never as a verb. */
+  private[graft] def dialect(sqlText: String, read: String => LogicalPlan = delegate.parsePlan) =
+    read(graft.PrestoRewrite(sqlText))
+
   override def parseQuery(sqlText: String): LogicalPlan = delegate.parseQuery(sqlText)
   override def parseExpression(sqlText: String): Expression =
     delegate.parseExpression(sqlText)

@@ -215,9 +215,8 @@ class CliSpec extends GraftSpec {
   test("GraftCli.sql and the CLI's csv rendering give the same rows for every rows verb") {
     val s = GraftCli.open(spark, sf)
     val sink = new java.io.PrintStream(new java.io.ByteArrayOutputStream())
-    val prepared = scala.collection.mutable.Map[String, String]()
     GraftCli.runStatement(s, "PREPARE cli_rq FROM SELECT r_regionkey, r_name " +
-      "FROM region WHERE r_regionkey < ? ORDER BY r_regionkey", "csv", sink, sink, prepared)
+      "FROM region WHERE r_regionkey < ? ORDER BY r_regionkey", "csv", sink, sink)
     s.sql("DROP TABLE IF EXISTS cli_route_parts")
     GraftCli.dropStaleLocation(s, "cli_route_parts")
     s.sql("CREATE TABLE cli_route_parts PARTITIONED BY (k) AS " +
@@ -227,37 +226,98 @@ class CliSpec extends GraftSpec {
       GraftCli.render(df, "csv", new java.io.PrintStream(b, true, "UTF-8"))
       b.toString("UTF-8").linesIterator.toSeq
     }
-    // (statement, needs the prepared-statement store): a statement that
-    // names cli_rq goes through route with the store, the rest through
-    // GraftCli.sql on a fresh state
     val cases = Seq(
-      "EXECUTE cli_rq USING 3" -> true,
-      "DESCRIBE INPUT cli_rq" -> true,
-      "DESCRIBE OUTPUT cli_rq" -> true,
+      "EXECUTE cli_rq USING 3",
+      "DESCRIBE INPUT cli_rq",
+      "DESCRIBE OUTPUT cli_rq",
       // plain SHOW STATS was a Spark parse error through GraftCli.sql
-      "SHOW STATS FOR orders" -> false,
-      "SHOW SESSION" -> false,
-      "SHOW COLUMNS FROM nation" -> false,
-      "SHOW PARTITIONS FROM cli_route_parts" -> false,
-      "SHOW FUNCTIONS LIKE 'minhash%'" -> false,
-      "EXPLAIN (TYPE IO) SELECT n_name FROM nation WHERE n_regionkey = 1" -> false,
-      "EXPLAIN (TYPE VALIDATE) SELECT n_name FROM nation" -> false,
-      "SELECT n_name, n_regionkey FROM nation ORDER BY n_nationkey" -> false)
-    try cases.foreach { case (stmt, stored) =>
-      val viaSql = csv(if (stored) GraftCli.routeRows(s, stmt, prepared)
-                       else GraftCli.sql(s, sf, stmt))
+      "SHOW STATS FOR orders",
+      "SHOW SESSION",
+      "SHOW COLUMNS FROM nation",
+      "SHOW PARTITIONS FROM cli_route_parts",
+      "SHOW FUNCTIONS LIKE 'minhash%'",
+      "EXPLAIN (TYPE IO) SELECT n_name FROM nation WHERE n_regionkey = 1",
+      "EXPLAIN (TYPE VALIDATE) SELECT n_name FROM nation",
+      "SELECT n_name, n_regionkey FROM nation ORDER BY n_nationkey")
+    try cases.foreach { stmt =>
+      val viaSql = csv(GraftCli.sql(s, sf, stmt))
       val outB = new java.io.ByteArrayOutputStream()
       GraftCli.runStatement(s, stmt, "csv",
-        new java.io.PrintStream(outB, true, "UTF-8"), sink, prepared)
+        new java.io.PrintStream(outB, true, "UTF-8"), sink)
       val viaCli = outB.toString("UTF-8").linesIterator.toSeq
       assert(viaSql.size > 1, s"$stmt returned no rows")
       assert(viaSql.head == viaCli.head && viaSql.tail.sorted == viaCli.tail.sorted,
         s"$stmt:\nsql=${viaSql.mkString("\n")}\ncli=${viaCli.mkString("\n")}")
     } finally s.sql("DROP TABLE cli_route_parts")
-    // a statement that returns no rows fails naming its verb
-    val e = intercept[IllegalArgumentException](
-      GraftCli.sql(s, sf, "EXPLAIN ANALYZE SELECT 1"))
-    assert(e.getMessage.contains("EXPLAIN returns a text report"), e.getMessage)
+    // a report is one row in a `plan` column
+    val report = GraftCli.sql(s, sf, "EXPLAIN ANALYZE SELECT 1")
+    assert(report.columns.toSeq == Seq("plan"), report.columns.mkString(","))
+    val plans = report.collect()
+    assert(plans.length == 1 && plans.head.getString(0).contains("== Physical Plan"),
+      plans.mkString("\n"))
+  }
+
+  test("a comment around a graft verb does not hide it, in GraftCli.sql and in a -f script") {
+    val session = GraftCli.sql(spark, sf, "-- note\nSHOW SESSION").collect()
+    assert(session.map(_.getString(0)).toSeq == GraftCli.sessionProps.map(_.name).sorted,
+      session.mkString("\n"))
+    spark.sparkContext // force the suite session so main borrows it
+    val f = java.nio.file.Files.createTempFile("cli_comments", ".sql")
+    java.nio.file.Files.write(f, ("-- planner statistics\n" +
+      "SHOW STATS FOR region /* estimates */;\n" +
+      "-- a template\n" +
+      "PREPARE cli_commented FROM SELECT r_name FROM region WHERE r_regionkey = ? /* one marker */;\n" +
+      "EXECUTE cli_commented USING 0;\n").getBytes("UTF-8"))
+    val outB = new java.io.ByteArrayOutputStream()
+    val errB = new java.io.ByteArrayOutputStream()
+    val outP = new java.io.PrintStream(outB, true, "UTF-8")
+    val errP = new java.io.PrintStream(errB, true, "UTF-8")
+    val (so, se) = (System.out, System.err)
+    System.setOut(outP); System.setErr(errP)
+    try GraftCli.main(Array(sf, "--format", "csv", "-f", f.toString))
+    finally { System.setOut(so); System.setErr(se); outP.flush(); errP.flush() }
+    val out = new String(outB.toByteArray, "UTF-8").linesIterator.filter(_.nonEmpty).toSeq
+    val err = new String(errB.toByteArray, "UTF-8")
+    assert(!err.contains("[graft-cli] error:"), err)
+    assert(out.exists(_.startsWith("column_name,")), out.mkString("\n"))
+    assert(err.contains("[graft-cli] PREPARE cli_commented"), err)
+    assert(out.takeRight(2) == Seq("r_name", "AFRICA"), out.mkString("\n"))
+  }
+
+  test("s15 leaves every session property's backing conf as it found it") {
+    val s = GraftCli.open(spark, sf)
+    def confs() = GraftCli.sessionProps.map(p => p.toConf(p.default)._1)
+      .map(k => k -> s.conf.getOption(k))
+    val before = confs()
+    GraftCli.queries("s15_sql_session")(spark, sf).collect()
+    assert(confs() == before)
+  }
+
+  test("one session's prepared statements serve two threads at once") {
+    val s = GraftCli.open(spark, sf)
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val threads = Seq(1, 2).map { t =>
+      new Thread(() =>
+        try (1 to 50).foreach { i =>
+          s.sql(s"PREPARE cli_thread$t FROM SELECT ? AS t, ? AS i")
+          val got = s.sql(s"EXECUTE cli_thread$t USING $t, $i").collect()
+            .map(r => (r.getInt(0), r.getInt(1))).toSeq
+          if (got != Seq((t, i))) failures.add(s"thread $t pass $i: $got")
+          s.sql(s"DEALLOCATE PREPARE cli_thread$t")
+        } catch { case e: Throwable => failures.add(s"thread $t: $e") })
+    }
+    threads.foreach(_.start())
+    threads.foreach(_.join())
+    assert(failures.isEmpty, failures.toArray.mkString("\n"))
+  }
+
+  test("a template that executes itself fails at EXECUTE instead of recursing") {
+    val s = GraftCli.open(spark, sf)
+    s.sql("PREPARE cli_self FROM EXECUTE cli_self")
+    // the template is read on the dialect path only, where EXECUTE is
+    // Spark's parse error; a StackOverflowError would escape intercept
+    intercept[org.apache.spark.sql.catalyst.parser.ParseException](s.sql("EXECUTE cli_self"))
+    s.sql("DEALLOCATE PREPARE cli_self")
   }
 
   test("join-strategy hints pass through the SQL front door") {
@@ -939,12 +999,9 @@ class CliSpec extends GraftSpec {
       lines.mkString("\n"))
     // DESCRIBE INPUT/OUTPUT: dotted names are rejected, not silently
     // passed to Spark's native DESCRIBE
-    val store = scala.collection.Map("q" -> "SELECT 1")
-    val e1 = intercept[IllegalArgumentException](
-      GraftCli.describeInput(s, store, "db.q"))
+    val e1 = intercept[IllegalArgumentException](s.sql("DESCRIBE INPUT db.q"))
     assert(e1.getMessage.contains("unqualified"), e1.getMessage)
-    val e2 = intercept[IllegalArgumentException](
-      GraftCli.describeOutput(s, store, "db.q"))
+    val e2 = intercept[IllegalArgumentException](s.sql("DESCRIBE OUTPUT db.q"))
     assert(e2.getMessage.contains("unqualified"), e2.getMessage)
     s.sql("DROP TABLE cli_qual_probe")
   }
@@ -954,15 +1011,14 @@ class CliSpec extends GraftSpec {
     // the SAME name `k` reaches the plan as INT (t1) and STRING (t2):
     // a last-wins name->type map would mistype the marker from whichever
     // relation enumerates last — ambiguity must report `unknown`
-    val store = scala.collection.Map(
-      "amb" -> ("SELECT * FROM (SELECT 1 AS k) t1 " +
-        "JOIN (SELECT 'x' AS k) t2 ON t1.k = CAST(t2.k AS INT) WHERE t1.k = ?"),
-      "uni" -> "SELECT 1 FROM orders WHERE o_custkey = ?")
-    val amb = GraftCli.describeInput(s, store, "amb").collect()
+    s.sql("PREPARE amb FROM SELECT * FROM (SELECT 1 AS k) t1 " +
+      "JOIN (SELECT 'x' AS k) t2 ON t1.k = CAST(t2.k AS INT) WHERE t1.k = ?")
+    s.sql("PREPARE uni FROM SELECT 1 FROM orders WHERE o_custkey = ?")
+    val amb = s.sql("DESCRIBE INPUT amb").collect()
     assert(amb.length == 1 && amb.head.getString(1) == "unknown",
       amb.mkString(","))
     // unambiguous names still type normally
-    val uni = GraftCli.describeInput(s, store, "uni").collect()
+    val uni = s.sql("DESCRIBE INPUT uni").collect()
     assert(uni.length == 1 && uni.head.getString(1) == "bigint",
       uni.mkString(","))
   }
@@ -1560,13 +1616,12 @@ class CliSpec extends GraftSpec {
     // EXECUTE binds, then the parser's literal-aware rewrite runs: a
     // bound string parameter containing the pattern stays verbatim
     val out = new java.io.ByteArrayOutputStream
-    val prepared = scala.collection.mutable.Map[String, String]()
     GraftCli.runStatement(s,
       "PREPARE pv FROM SELECT ? AS v, date_diff('day', DATE '2024-01-01', DATE '2024-01-03') AS d",
-      "csv", new java.io.PrintStream(out), new java.io.PrintStream(new java.io.ByteArrayOutputStream), prepared)
+      "csv", new java.io.PrintStream(out), new java.io.PrintStream(new java.io.ByteArrayOutputStream))
     GraftCli.runStatement(s,
       "EXECUTE pv USING 'date_diff(''day'', x, y)'",
-      "csv", new java.io.PrintStream(out), new java.io.PrintStream(new java.io.ByteArrayOutputStream), prepared)
+      "csv", new java.io.PrintStream(out), new java.io.PrintStream(new java.io.ByteArrayOutputStream))
     val csv = out.toString("UTF-8")
     assert(csv.contains("date_diff('day', x, y)") && csv.contains(",2"), csv)
     // EXPLAIN paths accept Presto spellings (r17 ADVICE): typed EXPLAIN
@@ -1586,18 +1641,17 @@ class CliSpec extends GraftSpec {
   test("a Presto-spelled prepared statement describes and executes") {
     import org.apache.spark.sql.functions.{col, datediff}
     val s = GraftCli.open(spark, sf)
-    val store = scala.collection.mutable.Map[String, String]()
-    GraftCli.route(s, "PREPARE pd FROM SELECT date_diff('day', o_orderdate, l_shipdate) AS d " +
-      "FROM orders JOIN lineitem ON l_orderkey = o_orderkey WHERE o_orderkey = ?", store)
+    s.sql("PREPARE pd FROM SELECT date_diff('day', o_orderdate, l_shipdate) AS d " +
+      "FROM orders JOIN lineitem ON l_orderkey = o_orderkey WHERE o_orderkey = ?")
     val keyType = s.table("orders").schema("o_orderkey").dataType.sql.toLowerCase
-    val in = GraftCli.routeRows(s, "DESCRIBE INPUT pd", store).collect()
+    val in = s.sql("DESCRIBE INPUT pd").collect()
       .map(r => (r.getInt(0), r.getString(1))).toSeq
     assert(in == Seq((1, keyType)), in)
-    val out = GraftCli.routeRows(s, "DESCRIBE OUTPUT pd", store).collect()
+    val out = s.sql("DESCRIBE OUTPUT pd").collect()
       .map(r => (r.getInt(0), r.getString(1), r.getString(2))).toSeq
     assert(out == Seq((1, "d", "bigint")), out)
     val key = s.table("orders").head().getAs[Any]("o_orderkey")
-    val got = GraftCli.routeRows(s, s"EXECUTE pd USING $key", store)
+    val got = s.sql(s"EXECUTE pd USING $key")
       .collect().map(_.getLong(0)).sorted.toSeq
     val want = s.table("orders").join(s.table("lineitem"), col("l_orderkey") === col("o_orderkey"))
       .where(col("o_orderkey") === key)

@@ -107,6 +107,54 @@ class ServerSpec extends GraftSpec {
     } finally conn.close()
   }
 
+  test("graft verbs over the socket match the in-process front door") {
+    val conn = connect()
+    val conn2 = connect()
+    try {
+      val stats = "SHOW STATS EXACT FOR orders"
+      val wireStats = jdbcRows(conn, stats)
+      val localStats = sparkRows(stats)
+      assert(wireStats.nonEmpty && wireStats == localStats, s"wire=$wireStats\nlocal=$localStats")
+      // SET SESSION lands in the connection's own session only
+      val before = spark.conf.get("spark.sql.shuffle.partitions")
+      assert(jdbcRows(conn, "SET SESSION hash_partition_count = 8") ==
+        Seq(Seq("SET SESSION hash_partition_count")))
+      val wireSession = jdbcRows(conn, "SHOW SESSION")
+      assert(spark.conf.get("spark.sql.shuffle.partitions") == before)
+      // a thrift connection's session is a new session of the context
+      val fresh = spark.newSession()
+      GraftCli.sql(fresh, sf, "SET SESSION hash_partition_count = 8")
+      val localSession = GraftCli.sql(fresh, sf, "SHOW SESSION").collect().toSeq
+        .map(_.toSeq.map(String.valueOf(_)))
+      assert(wireSession == localSession, s"wire=$wireSession\nlocal=$localSession")
+      assert(wireSession.exists(_.take(2) == Seq("hash_partition_count", "8")), wireSession)
+      // PREPARE -> DESCRIBE OUTPUT -> EXECUTE ... USING -> DEALLOCATE
+      val template = "SELECT r_regionkey, r_name FROM region WHERE r_regionkey < ? ORDER BY r_regionkey"
+      assert(jdbcRows(conn, s"PREPARE srv_q FROM $template") == Seq(Seq("PREPARE srv_q")))
+      GraftCli.sql(spark, sf, s"PREPARE srv_q FROM $template")
+      Seq("DESCRIBE OUTPUT srv_q", "EXECUTE srv_q USING 3").foreach { q =>
+        val wire = jdbcRows(conn, q)
+        val local = sparkRows(q)
+        assert(wire.nonEmpty && wire == local, s"$q\nwire=$wire\nlocal=$local")
+      }
+      // the name belongs to connection 1's session
+      val e = intercept[java.sql.SQLException](jdbcRows(conn2, "EXECUTE srv_q USING 3"))
+      assert(e.getMessage.contains("no prepared statement named srv_q"), e.getMessage)
+      assert(jdbcRows(conn, "DEALLOCATE PREPARE srv_q") == Seq(Seq("DEALLOCATE srv_q")))
+      GraftCli.sql(spark, sf, "DEALLOCATE PREPARE srv_q")
+      // EXPLAIN ANALYZE: one row in a `plan` column
+      val st = conn.createStatement()
+      try {
+        val rs = st.executeQuery("EXPLAIN ANALYZE SELECT count(*) AS n FROM nation")
+        assert(rs.getMetaData.getColumnCount == 1 && rs.getMetaData.getColumnName(1) == "plan")
+        assert(rs.next() && rs.getString(1).contains("== Physical Plan"))
+        assert(!rs.next())
+      } finally st.close()
+    } finally {
+      try conn.close() finally conn2.close()
+    }
+  }
+
   test("the events view serves the normalized TIMESTAMP surface cross-session") {
     val conn = connect()
     try {

@@ -8,6 +8,7 @@ import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StringType
 
+import graft.dedup.Dedup
 import graft.functions.{GraftExtensions, GraftFunctions, GraftParser}
 import graft.sources.Tables
 
@@ -331,21 +332,12 @@ object GraftCli {
     // with the corpus on boilerplate-heavy text, so the pair-expansion
     // cap is the one dedup parameter a 100 TB operator genuinely tunes
     // per corpus — surfaced here so SQL clients reach it the Presto way.
-    SessionProp("dedup_max_bucket", "integer", "1000",
+    SessionProp("dedup_max_bucket", "integer", Dedup.MaxBucket.toString,
       "Per-bucket pair-expansion cap for the bucketed dedup operators (minhash/simhash/embedding LSH, winnowing)",
-      // >= 2, not merely positive: a cap of 1 makes every between(2, cap)
-      // bucket filter an empty range — bucketed dedup would silently pair
-      // nothing (Dedup.bucketCap enforces the same bound at plan-build
-      // for conf writes that bypass SET SESSION; rejecting here surfaces
-      // the mistake at SET time with the session-property name)
-      v => ("spark.graft.dedup.maxBucket", {
-        val t = parsePosInt("dedup_max_bucket", v)
-        if (t.toLong < 2) throw new IllegalArgumentException(
-          s"SET SESSION dedup_max_bucket: expected an integer >= 2 " +
-            s"(1 would drop every bucket), got $t")
-        t
-      }),
-      s => s.conf.get("spark.graft.dedup.maxBucket", "1000")))
+      // checked at SET time by the same rule Dedup.bucketCap applies at
+      // plan-build to conf writes that bypass SET SESSION
+      v => ("spark.graft.dedup.maxBucket", Dedup.parseCap(unquote(v)).toString),
+      s => s.conf.get("spark.graft.dedup.maxBucket", Dedup.MaxBucket.toString)))
 
   private def unquote(v: String): String = {
     val t = v.trim

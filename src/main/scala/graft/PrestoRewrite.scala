@@ -135,16 +135,23 @@ object PrestoRewrite {
     ("(?i)\\b(date_diff|datediff|date_add|dateadd|timestampdiff|timestampadd)\\s*\\(\\s*" +
       "'(year|quarter|month|week|day|dayofyear|hour|minute|second|millisecond|microsecond)'\\s*,").r
 
-  private[graft] def rewriteDatetime(text: String): String = {
+  private[graft] def rewriteDatetime(text: String): String =
+    // the match itself CONTAINS a quoted literal (the unit) — `pass` only
+    // needs the match to START outside any literal/comment
+    pass(text, DatetimeUnitQuote, m => s"${m.group(1)}(${m.group(2)}, ")
+
+  /** `text` with every match of `re` that starts outside a literal or
+    * comment (and after the previous replaced match) replaced by
+    * `render(m)`. */
+  private def pass(text: String, re: scala.util.matching.Regex,
+                   render: scala.util.matching.Regex.Match => String): String = {
     val spans = protectedSpans(text)
     val sb = new StringBuilder
     var last = 0
-    DatetimeUnitQuote.findAllMatchIn(text).foreach { m =>
-      // the match itself CONTAINS a quoted literal (the unit) — what must
-      // hold is that the match STARTS outside any literal/comment
+    re.findAllMatchIn(text).foreach { m =>
       if (m.start >= last && outside(spans, m.start)) {
         sb.append(text.substring(last, m.start))
-        sb.append(m.group(1)).append('(').append(m.group(2)).append(", ")
+        sb.append(render(m))
         last = m.end
       }
     }
@@ -156,9 +163,11 @@ object PrestoRewrite {
 
   private val TryOpen = "(?i)\\btry\\s*\\(".r
 
-  /** From the index of an opening '(' (exclusive), return the index of
-    * its matching ')' — quote- and comment-aware. -1 if unbalanced. */
-  private[graft] def matchParen(text: String, open: Int): Int = {
+  /** The index of the bracket that closes the '(' or '[' at `open` —
+    * quote- and comment-aware, counting that bracket kind only. -1 if
+    * unbalanced. */
+  private[graft] def matchClose(text: String, open: Int): Int = {
+    val (o, c) = if (text.charAt(open) == '[') ('[', ']') else ('(', ')')
     val spans = protectedSpans(text)
     var depth = 1
     var i = open + 1
@@ -167,11 +176,10 @@ object PrestoRewrite {
         // jump to the end of the protected span
         i = spans.find(s => i >= s._1 && i < s._2).get._2
       } else {
-        text.charAt(i) match {
-          case '(' => depth += 1; i += 1
-          case ')' => depth -= 1; if (depth == 0) return i; i += 1
-          case _ => i += 1
-        }
+        val ch = text.charAt(i)
+        if (ch == o) depth += 1
+        else if (ch == c) { depth -= 1; if (depth == 0) return i }
+        i += 1
       }
     }
     -1
@@ -240,7 +248,7 @@ object PrestoRewrite {
     if (!lower.startsWith(name)) return false
     var i = name.length
     while (i < b.length && Character.isWhitespace(b.charAt(i))) i += 1
-    i < b.length && b.charAt(i) == '(' && matchParen(b, i) == b.length - 1
+    i < b.length && b.charAt(i) == '(' && matchClose(b, i) == b.length - 1
   }
 
   private def rewriteTryBody(body: String): String = {
@@ -289,7 +297,7 @@ object PrestoRewrite {
         .find(m => outside(spans, m.start)) match {
         case Some(m) =>
           val open = m.end - 1
-          val close = matchParen(cur, open)
+          val close = matchClose(cur, open)
           require(close > 0, s"TRY: unbalanced parentheses after offset ${m.start}")
           val body = cur.substring(open + 1, close)
           cur = cur.substring(0, m.start) + rewriteTryBody(body) +
@@ -301,26 +309,6 @@ object PrestoRewrite {
   }
 
   // -------------------------------------- ARRAY[...] / MAP(ARRAY, ARRAY)
-
-  /** From the index of an opening '[' (exclusive), the index of its
-    * matching ']' — literal-aware, counts square brackets only. */
-  private[graft] def matchBracket(text: String, open: Int): Int = {
-    val spans = protectedSpans(text)
-    var depth = 1
-    var i = open + 1
-    while (i < text.length) {
-      if (!outside(spans, i)) {
-        i = spans.find(s => i >= s._1 && i < s._2).get._2
-      } else {
-        text.charAt(i) match {
-          case '[' => depth += 1; i += 1
-          case ']' => depth -= 1; if (depth == 0) return i; i += 1
-          case _ => i += 1
-        }
-      }
-    }
-    -1
-  }
 
   private val ArrayOpen = "(?i)\\barray\\s*\\[".r
 
@@ -340,7 +328,7 @@ object PrestoRewrite {
       ArrayOpen.findAllMatchIn(cur).find(m => outside(spans, m.start)) match {
         case Some(m) =>
           val open = m.end - 1
-          val close = matchBracket(cur, open)
+          val close = matchClose(cur, open)
           require(close > 0, s"ARRAY[: unbalanced brackets after offset ${m.start}")
           var expr = "array(" + cur.substring(open + 1, close) + ")"
           var end = close
@@ -350,7 +338,7 @@ object PrestoRewrite {
             var j = end + 1
             while (j < cur.length && Character.isWhitespace(cur.charAt(j))) j += 1
             if (j < cur.length && cur.charAt(j) == '[') {
-              val idxClose = matchBracket(cur, j)
+              val idxClose = matchClose(cur, j)
               require(idxClose > 0,
                 s"ARRAY[..][: unbalanced subscript after offset $j")
               expr = s"element_at($expr, ${cur.substring(j + 1, idxClose).trim})"
@@ -383,7 +371,7 @@ object PrestoRewrite {
         .find(m => m.start >= from && outside(spans, m.start)) match {
         case Some(m) =>
           val open = m.end - 1
-          val close = matchParen(cur, open)
+          val close = matchClose(cur, open)
           val args = if (close > 0) splitTopLevel(cur.substring(open + 1, close))
                      else Seq.empty
           if (args.length == 2 && args.forall(a => ArrayArg.matches(a.trim))) {
@@ -526,7 +514,7 @@ object PrestoRewrite {
         }
       }
       if (found < 0) return cur
-      val close = matchBracket(cur, found)
+      val close = matchClose(cur, found)
       require(close > 0, s"subscript: unbalanced [ after offset $found")
       val baseExpr = cur.substring(base, found).trim
       val idx = cur.substring(found + 1, close).trim
@@ -547,21 +535,6 @@ object PrestoRewrite {
   private val DecimalLit = "(?i)\\bdecimal\\s+'(-?[0-9]+(?:\\.[0-9]+)?)'".r
 
   private[graft] def rewriteBareTypes(text: String): String = {
-    def pass(in: String, re: scala.util.matching.Regex,
-             render: scala.util.matching.Regex.Match => String): String = {
-      val spans = protectedSpans(in)
-      val sb = new StringBuilder
-      var last = 0
-      re.findAllMatchIn(in).foreach { m =>
-        if (m.start >= last && outside(spans, m.start)) {
-          sb.append(in.substring(last, m.start))
-          sb.append(render(m))
-          last = m.end
-        }
-      }
-      sb.append(in.substring(last))
-      sb.toString
-    }
     // DECIMAL-literal pass FIRST: its match starts outside any literal
     // (the quoted digits are part of the Presto form itself)
     val afterDecimal = pass(text, DecimalLit, m => s"${m.group(1)}BD")
@@ -661,7 +634,7 @@ object PrestoRewrite {
         .find(m => outside(spans, m.start)) match {
         case Some(m) =>
           val open = m.end - 1
-          val close = matchParen(cur, open)
+          val close = matchClose(cur, open)
           require(close > 0, s"UNNEST: unbalanced parentheses after offset ${m.start}")
           val exprs = splitTopLevel(cur.substring(open + 1, close))
           val rest = cur.substring(close + 1)

@@ -21,20 +21,14 @@ import graft.sources.Tables
  * size. Probes only scan their top-`NProbe` cells, cutting the scan
  * ~NList/NProbe at 100 TB.
  *
- * a03 is the all-pairs KNN join: two independent LSH hash tables, capped
- * buckets (same `MaxBucket` discipline as [[graft.dedup.Dedup]]), pair
- * candidates deduped across tables as bare id pairs before embeddings are
- * re-joined for the cosine verify.
+ * a03 is the all-pairs KNN join: two independent LSH hash tables whose
+ * buckets pair through [[graft.dedup.Dedup.lshCandidatePairs]] (capped at
+ * the session's `Dedup.bucketCap`), pair candidates deduped across tables
+ * as bare id pairs before embeddings are re-joined for the cosine verify.
  */
 object Ann {
 
   private val K = 10
-
-  /** Max vectors per LSH bucket before the bucket is dropped as degenerate
-    * (same rationale as Dedup.MaxBucket: a pile of near-identical
-    * embeddings — exactly what dedup corpora contain — must not expand
-    * O(b²) pairs in one task; the second hash table recovers recall). */
-  private val MaxBucket = 1000
 
   /** a01: brute-force exact cosine top-k for probe vectors (vec_id < 5). */
   def bruteForce(s: SparkSession, d: String): DataFrame = {
@@ -143,7 +137,7 @@ object Ann {
    * bucket mates, over TWO independent hash tables. The scale topology for
    * "nearest neighbor per corpus row":
    *   1. one corpus scan computes both bucket ids (narrow),
-   *   2. hash shuffle on (table, bucket), buckets capped at `MaxBucket`
+   *   2. hash shuffle on (table, bucket), buckets capped at `Dedup.bucketCap`
    *      (a hot bucket is dropped, not expanded O(b²) in one task),
    *   3. candidate pairs deduped across tables as bare (id_a, id_b) rows —
    *      embeddings are NOT carried through the distinct,
@@ -618,9 +612,10 @@ object Ann {
    * embedding near-dups at corpus scale: k-means cells bound the pairwise
    * work (no all-pairs join anywhere; candidate pairs exist only INSIDE a
    * cell), then pairs above the cosine threshold drop the higher vec_id.
-   * Cells are capped at [[MaxBucket]] like every LSH bucket in the dedup
-   * family — a degenerate pile of identical embeddings (exactly what dedup
-   * corpora contain) must not expand O(b²) in one task. Per-cell report:
+   * Cells pair through [[Dedup.bucketPairs]] under the session's
+   * `Dedup.bucketCap`, like every bucket in the dedup family — a
+   * degenerate pile of identical embeddings (exactly what dedup corpora
+   * contain) must not expand O(b²) in one task. Per-cell report:
    * members, dropped, kept.
    */
   def semanticDedup(s: SparkSession, d: String): DataFrame = {
@@ -629,23 +624,10 @@ object Ann {
     val assigned = emb.select(col("vec_id"), col("embedding"),
       array_max(simStructs(col("embedding"))).getField("cent_id").as("cell"))
 
-    // the d05 bounded in-bucket pair expansion, keyed by cell
-    val pairs = assigned
-      .groupBy(col("cell"))
-      .agg(collect_list(struct(col("vec_id"), col("embedding"))).as("recs"))
-      .filter(size(col("recs")).between(2, MaxBucket))
-      .select(col("cell"), explode(expr(
-        """flatten(transform(sequence(0, size(recs) - 2),
-          |  i -> transform(slice(recs, i + 2, size(recs) - i - 1),
-          |       y -> struct(recs[i].vec_id AS a, y.vec_id AS b,
-          |                   recs[i].embedding AS ea, y.embedding AS eb))))""".stripMargin))
-        .as("p"))
-      .select(col("cell"),
-        // collect_list order is nondeterministic → (a, b) arrives in either
-        // order; the victim is ALWAYS the higher vec_id, so the drop set is
-        // order-independent.
-        greatest(col("p.a"), col("p.b")).as("victim"),
-        round(GraftFunctions.cosineSim(col("p.ea"), col("p.eb")), 4).as("cos"))
+    // the victim of a pair is the higher vec_id, id_b
+    val pairs = Dedup.bucketPairs(assigned, Seq("cell"), Dedup.bucketCap(assigned))
+      .select(col("cell"), col("id_b").as("victim"),
+        round(GraftFunctions.cosineSim(col("embedding_a"), col("embedding_b")), 4).as("cos"))
       .filter(col("cos") >= SemTau)
 
     val dropped = pairs.groupBy(col("cell"))

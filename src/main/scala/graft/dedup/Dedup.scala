@@ -66,10 +66,10 @@ object Dedup {
         GraftFunctions.chunkLongs(col("sig"), RowsPerBand))
       .as(Seq("band", "band_key")))
 
-  /** Max docs per LSH bucket before the bucket is dropped as degenerate.
+  /** Max rows per bucket before the bucket is dropped as degenerate.
     * At corpus scale a boilerplate-text bucket otherwise emits O(n²) pairs;
     * dropping is standard (the docs still collide in other bands). */
-  private val MaxBucket = 1000
+  private[graft] val MaxBucket = 1000
 
   /** The effective bucket cap: session-tunable via
     * `spark.graft.dedup.maxBucket` (default [[MaxBucket]]). The r16
@@ -78,24 +78,20 @@ object Dedup {
     * grows quadratically — a 100 TB operator tunes this down to their
     * corpus's boilerplate profile rather than paying that mass. Read at
     * plan-build time on the driver; every bucketed dedup path
-    * (minhash-LSH, simhash pigeonhole, embedding LSH, winnowing)
-    * honors it. */
-  private def bucketCap(df: DataFrame): Int = {
-    val raw = df.sparkSession.conf.get("spark.graft.dedup.maxBucket",
-      MaxBucket.toString)
-    // Validated here, not only in the CLI's parsePosInt: the conf is also
-    // reachable via spark.conf.set directly, where a garbage value would
-    // otherwise crash plan-build with a bare NumberFormatException and a
-    // value of 1 would make every between(2, cap) filter an empty range,
-    // silently disabling all bucketed dedup pairing.
-    val cap = try raw.toInt catch { case _: NumberFormatException =>
-      throw new IllegalArgumentException(
-        s"spark.graft.dedup.maxBucket must be an integer >= 2, got '$raw'") }
-    require(cap >= 2,
-      s"spark.graft.dedup.maxBucket must be >= 2 (a cap of 1 drops every " +
-        s"bucket — between(2, cap) is empty), got $cap")
-    cap
-  }
+    * (minhash-LSH, simhash pigeonhole, embedding LSH, winnowing, a03's
+    * LSH tables, a07's k-means cells) honors it. */
+  private[graft] def bucketCap(df: DataFrame): Int =
+    parseCap(df.sparkSession.conf.get("spark.graft.dedup.maxBucket",
+      MaxBucket.toString))
+
+  /** `raw` as a bucket cap — the one check behind both spellings of the
+    * knob (`SET SESSION dedup_max_bucket` and a direct conf write). A cap
+    * of 1 would make every between(2, cap) filter an empty range and
+    * silently disable all bucketed pairing, so it is refused like text. */
+  private[graft] def parseCap(raw: String): Int =
+    raw.trim.toIntOption.filter(_ >= 2).getOrElse(throw new IllegalArgumentException(
+      s"dedup_max_bucket (spark.graft.dedup.maxBucket) must be an integer >= 2 " +
+        s"(a cap of 1 drops every bucket), got '$raw'"))
 
   /** Bucket cap for PROBE-pair generation (d16's curve calibration).
     * MaxBucket bounds the worst bucket but still admits ~500k pairs per
@@ -114,34 +110,40 @@ object Dedup {
     * which no bucket cap can starve. */
   private val ProbeBucketCap = 16
 
-  /** Pairs (a < b) of docs sharing an LSH bucket. ONE signature pass
-    * (the banded frame — slim: doc_id + band + 8-byte key — is staged,
-    * so neither the cap count nor the join sides recompute signatures),
-    * hash shuffles on (band, band_key) only, pair expansion bounded per
-    * bucket, never a cross join.
+  /** Pairs of rows sharing a bucket, for every bucketed near-dup path.
+    * `rows` holds the bucket `keys`, then one id column (its first
+    * non-key column, unique within a bucket), then payload columns. Only
+    * buckets of 2..`cap` rows expand; each unordered pair comes back once
+    * per shared bucket as the keys, `id_a` < `id_b`, and every payload
+    * column once per side (`<name>_a`, `<name>_b`).
     *
-    * The expansion itself is a codegen hash SELF-JOIN over the
-    * duplicated-bucket slice: each (doc, band) row is unique, so
-    * id_a < id_b enumerates every unordered bucket pair exactly once —
-    * identical pairs to the collect_list + nested-transform form it
-    * replaces, which built each bucket's pair array through INTERPRETED
-    * lambda evaluation (r14 measured the winnowing twin at 13.5 s for
-    * 840k pairs at sf1.0; the join form is sub-second). The cap filter
-    * moves to a codegen count aggregate — the count IS size(ids). */
-  def lshCandidatePairs(bands: DataFrame): DataFrame = {
-    val banded = graft.plans.Checkpoints.stage(bands)
-    val ok = banded.groupBy(col("band"), col("band_key"))
-      .agg(count(lit(1)).as("c"))
-      .filter(col("c").between(2, bucketCap(bands)))
-      .select(col("band"), col("band_key"))
-    val rows = banded.join(ok, Seq("band", "band_key"), "left_semi")
-    rows.select(col("band"), col("band_key"), col("doc_id").as("id_a"))
-      .join(rows.select(col("band"), col("band_key"), col("doc_id").as("id_b")),
-        Seq("band", "band_key"))
-      .filter(col("id_a") < col("id_b"))
+    * The cap is a codegen count aggregate and the expansion a codegen
+    * hash SELF-JOIN over the surviving slice. The collect_list +
+    * nested-transform form it replaced built each bucket's pair array
+    * through INTERPRETED lambdas: r14 measured 13.5 s for 840k winnowing
+    * pairs at sf1.0, against sub-second for the join. */
+  private[graft] def bucketPairs(rows: DataFrame, keys: Seq[String], cap: Int): DataFrame = {
+    val ks = keys.map(col)
+    val ok = rows.groupBy(ks: _*).agg(count(lit(1)).as("c"))
+      .filter(col("c").between(2, cap))
+      .select(ks: _*)
+    val kept = rows.join(ok, keys, "left_semi")
+    val id +: payload = rows.columns.toSeq.filterNot(keys.contains)
+    def side(s: String) = kept.select(ks ++ (col(id).as(s"id_$s") +:
+      payload.map(p => col(p).as(s"${p}_$s"))): _*)
+    side("a").join(side("b"), keys).filter(col("id_a") < col("id_b"))
+  }
+
+  /** Distinct pairs (id_a < id_b) of docs sharing an LSH bucket. ONE
+    * signature pass (the banded frame — slim: doc_id + band + 8-byte key
+    * — is staged, so neither the cap count nor the join sides recompute
+    * signatures), hash shuffles on (band, band_key) only, never a cross
+    * join. */
+  def lshCandidatePairs(bands: DataFrame): DataFrame =
+    bucketPairs(graft.plans.Checkpoints.stage(bands), Seq("band", "band_key"),
+      bucketCap(bands))
       .select(col("id_a"), col("id_b"))
       .distinct()
-  }
 
   /**
    * d02: MinHash-LSH near-dup summary. Each doc reports how many LSH
@@ -224,36 +226,19 @@ object Dedup {
     val sigs = Tables.documents(s, d)
       .select(col("doc_id"),
         GraftFunctions.simhash64(split(lower(col("text")), "\\s+")).as("sh"))
-    // Pigeonhole buckets → codegen hash SELF-JOIN pair expansion (r20;
-    // the lshCandidatePairs/winnowing discipline): the collect_list +
-    // nested-transform form built each bucket's pair array through
-    // INTERPRETED lambda evaluation (flat at sf0.1, the dominant cost at
-    // sf1 — the same 13.5s-class defect the winnowing twin had). Each
-    // (doc, blk) row is unique, so a < b enumerates every unordered
-    // bucket pair exactly once with its signatures attached; a pair
-    // found in TWO blocks arrives once per block as the IDENTICAL tuple
-    // (sh functionally determined by the ids — the old list-order
-    // double-count bug cannot recur) and the distinct collapses it.
-    // Same cap, same counts, same pairs.
+    // Pigeonhole buckets: a pair found in TWO blocks arrives once per
+    // block as the IDENTICAL tuple (sh is functionally determined by the
+    // id) and the distinct collapses it.
     val blocks = graft.plans.Checkpoints.stage(
       sigs.select(col("doc_id"), col("sh"), posexplode(
           GraftFunctions.blocks16(col("sh")))
         .as(Seq("blk", "blk_val"))))
-    val ok = blocks.groupBy(col("blk"), col("blk_val"))
-      .agg(count(lit(1)).as("c"))
-      .filter(col("c").between(2, bucketCap(blocks)))
-      .select(col("blk"), col("blk_val"))
-    val rows = blocks.join(ok, Seq("blk", "blk_val"), "left_semi")
-    val pairs = rows
-      .select(col("blk"), col("blk_val"), col("doc_id").as("a"), col("sh").as("sh_a"))
-      .join(rows.select(col("blk"), col("blk_val"),
-        col("doc_id").as("b"), col("sh").as("sh_b")), Seq("blk", "blk_val"))
-      .filter(col("a") < col("b"))
-      .select(col("a"), col("b"), col("sh_a"), col("sh_b"))
+    val pairs = bucketPairs(blocks, Seq("blk", "blk_val"), bucketCap(blocks))
+      .select(col("id_a"), col("id_b"), col("sh_a"), col("sh_b"))
       .distinct()
       .filter(GraftFunctions.hamming64(col("sh_a"), col("sh_b")) <= 3)
-    val cand = pairs.select(col("a").as("doc_id"))
-      .unionAll(pairs.select(col("b").as("doc_id")))
+    val cand = pairs.select(col("id_a").as("doc_id"))
+      .unionAll(pairs.select(col("id_b").as("doc_id")))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_near"))
     sigs.select(col("doc_id"), col("sh"))
@@ -384,27 +369,14 @@ object Dedup {
     val bucketed = graft.plans.Checkpoints.stage(
       emb.select(col("vec_id"), col("embedding"),
         (0 until nPlanes).map(bit).reduce(_ + _).as("bucket")))
-    // bucket → codegen hash SELF-JOIN pair expansion (r20; the d03/
-    // lshCandidatePairs discipline — the collect_list+nested-transform
-    // form built each bucket's pair array INTERPRETED and carried the
-    // embedding payloads through the aggregation buffer). One hash
-    // table ⇒ each unordered pair lives in exactly one bucket, so
-    // a < b enumerates it once — no distinct needed, as before; the
-    // endpoint counts and the symmetric cosine are orientation-blind.
-    val ok = bucketed.groupBy(col("bucket")).agg(count(lit(1)).as("c"))
-      .filter(col("c").between(2, bucketCap(bucketed)))
-      .select(col("bucket"))
-    val rows = bucketed.join(ok, Seq("bucket"), "left_semi")
-    val pairs = rows
-      .select(col("bucket"), col("vec_id").as("a"), col("embedding").as("ea"))
-      .join(rows.select(col("bucket"), col("vec_id").as("b"),
-        col("embedding").as("eb")), Seq("bucket"))
-      .filter(col("a") < col("b"))
-      .select(col("a"), col("b"),
-        GraftFunctions.cosineSim(col("ea"), col("eb")).as("cos"))
+    // One hash table ⇒ each unordered pair lives in exactly one bucket,
+    // so no distinct is needed.
+    val pairs = bucketPairs(bucketed, Seq("bucket"), bucketCap(bucketed))
+      .select(col("id_a"), col("id_b"),
+        GraftFunctions.cosineSim(col("embedding_a"), col("embedding_b")).as("cos"))
       .filter(col("cos") >= 0.95)
-    val perVec = pairs.select(col("a").as("vec_id"))
-      .unionAll(pairs.select(col("b").as("vec_id")))
+    val perVec = pairs.select(col("id_a").as("vec_id"))
+      .unionAll(pairs.select(col("id_b").as("vec_id")))
       .groupBy(col("vec_id")).agg(count(lit(1)).as("n_neardup"))
     bucketed.select(col("vec_id"), col("bucket"))
       .join(perVec, Seq("vec_id"), "left")
@@ -532,7 +504,7 @@ object Dedup {
    * dedup in one JVM pass), all INSIDE the row — fingerprinting
    * shuffles nothing; only the 8-byte
    * (fp, doc_id) pairs shuffle, and pair expansion is bucket-capped at
-   * [[MaxBucket]] like every LSH path.
+   * [[bucketCap]] like every LSH path.
    */
   def winnowing(s: SparkSession, d: String): DataFrame =
     winnowingOf(Tables.documents(s, d))
@@ -543,7 +515,7 @@ object Dedup {
     winnowingPairs(docs, bucketCap(docs))
 
   /** Winnowing pair enumeration with an explicit bucket cap. d10 uses
-    * [[MaxBucket]] (its report IS the full shared-run pair set); d16
+    * [[bucketCap]] (its report IS the full shared-run pair set); d16
     * passes the much tighter [[ProbeBucketCap]] — see the constant's
     * comment for the measured sf10 blowup that forced the split. */
   private[graft] def winnowingPairs(docs: DataFrame, cap: Int): DataFrame = {
@@ -565,28 +537,14 @@ object Dedup {
     * (or checkpoint-derived) slim (doc_id, fp) frame — d16 feeds it from
     * the shared probe base instead of paying its own corpus scan +
     * stage. */
-  private def winnowingPairsFromFps(staged: DataFrame, cap: Int): DataFrame = {
-    // dup-first (the d13 discipline): fingerprints are overwhelmingly
-    // singletons; a codegen count aggregate (map-side combined) finds
-    // the duplicated ones so nothing downstream touches the singleton
-    // mass. Cap semantics identical — the count IS size(ids).
-    val dupFps = staged.groupBy(col("fp")).agg(count(lit(1)).as("c"))
-      .filter(col("c").between(2, cap)).select(col("fp"))
-    // pair expansion as a codegen hash SELF-JOIN on the duplicated slice
-    // (each unordered pair once per fp — fps are per-doc distinct from
-    // the kernel, so id_a < id_b enumerates exactly the bucket pairs).
-    // The collect_list + nested-transform HOF this replaces built the
-    // per-bucket pair array INTERPRETED — measured 13.5 s for 840k pairs
-    // at sf1.0 vs sub-second for the join; same cap, same counts.
-    val dupRows = staged.join(dupFps, Seq("fp"), "left_semi")
-    dupRows.select(col("fp"), col("doc_id").as("id_a"))
-      .join(dupRows.select(col("fp"), col("doc_id").as("id_b")), Seq("fp"))
-      .filter(col("id_a") < col("id_b"))
+  private def winnowingPairsFromFps(staged: DataFrame, cap: Int): DataFrame =
+    // fps are per-doc distinct from the kernel, so each pair arrives
+    // once per shared fingerprint
+    bucketPairs(staged, Seq("fp"), cap)
       .groupBy(col("id_a"), col("id_b"))
       .agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= 2)
       .orderBy(col("id_a"), col("id_b"))
-  }
 
   /** Shingle width for duplicated-span extraction — the 8-gram standard
     * from published LLM decontamination/dedup procedures (same width as

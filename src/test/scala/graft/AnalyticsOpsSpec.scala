@@ -36,6 +36,29 @@ class AnalyticsOpsSpec extends GraftSpec {
         r.getAs[Long]("n_members"))
       assert(r.getAs[Long]("n_kept") >= 1, "a cell never drops ALL members")
     }
+    // cells pair through Dedup.bucketPairs' compiled hash self-join, not
+    // a collect_list + nested-transform generator
+    val digest = graft.plans.PlanDigest.canonical(res)
+    assert(!digest.contains("ObjectHashAggregateExec") && !digest.contains("GenerateExec"),
+      digest)
+    assert(graft.plans.PlanDigest.codegenFallbacks(res.queryExecution.executedPlan) < 14)
+  }
+
+  test("a07 semantic dedup honours the session bucket cap") {
+    val key = "spark.graft.dedup.maxBucket"
+    def cells = Ann.semanticDedup(spark, sf).collect()
+      .map(r => (r.getAs[Long]("n_members"), r.getAs[Long]("n_dropped")))
+    // at the default cap some cell of more than 2 members drops a vector
+    assert(cells.exists { case (m, dropped) => m > 2 && dropped > 0 }, cells.mkString(", "))
+    val before = spark.conf.getOption(key)
+    spark.conf.set(key, "2")
+    try {
+      val capped = cells
+      assert(capped.nonEmpty && capped.forall(_._2 == 0L), capped.mkString(", "))
+    } finally before match {
+      case Some(v) => spark.conf.set(key, v)
+      case None    => spark.conf.unset(key)
+    }
   }
 
   test("a11 pq: narrow join-free assignment partitions the corpus per subspace") {

@@ -185,6 +185,17 @@ class DedupAnnSpec extends GraftSpec {
     val text = (1 to 16).map(i => s"common$i").mkString(" ")
     val docs = Seq((1L, text), (2L, text), (3L, text)).toDF("doc_id", "text")
     assert(Dedup.winnowingOf(docs).count() == 3L) // default cap 1000: all pairs
+    // the shared expansion under an explicit cap: bucket x holds three
+    // rows, bucket y two; each side keeps its own payload, and rows of
+    // different buckets never pair
+    val rows = Seq(("x", 3L, "p3"), ("x", 1L, "p1"), ("x", 2L, "p2"),
+      ("y", 9L, "p9"), ("y", 4L, "p4")).toDF("k", "id", "pl")
+    def pairs(cap: Int) = Dedup.bucketPairs(rows, Seq("k"), cap)
+      .select($"k", $"id_a", $"id_b", $"pl_a", $"pl_b")
+      .as[(String, Long, Long, String, String)].collect().toSet
+    assert(pairs(2) == Set(("y", 4L, 9L, "p4", "p9")))
+    assert(pairs(3) == Set(("x", 1L, 2L, "p1", "p2"), ("x", 1L, 3L, "p1", "p3"),
+      ("x", 2L, 3L, "p2", "p3"), ("y", 4L, 9L, "p4", "p9")))
     spark.conf.set("spark.graft.dedup.maxBucket", "2")
     try {
       // cap 2 drops every 3-doc bucket as degenerate — no pairs survive

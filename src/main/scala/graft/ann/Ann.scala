@@ -625,18 +625,18 @@ object Ann {
       array_max(simStructs(col("embedding"))).getField("cent_id").as("cell"))
 
     // the victim of a pair is the higher vec_id, id_b
-    val pairs = Dedup.bucketPairs(assigned, Seq("cell"), Dedup.bucketCap(assigned))
-      .select(col("cell"), col("id_b").as("victim"),
-        round(GraftFunctions.cosineSim(col("embedding_a"), col("embedding_b")), 4).as("cos"))
-      .filter(col("cos") >= SemTau)
-
-    val dropped = pairs.groupBy(col("cell"))
-      .agg(countDistinct(col("victim")).as("n_dropped"))
-    assigned.groupBy(col("cell")).agg(count(lit(1)).as("n_members"))
-      .join(dropped, Seq("cell"), "left")
-      .select(col("cell"), col("n_members"),
-        coalesce(col("n_dropped"), lit(0L)).as("n_dropped"),
-        (col("n_members") - coalesce(col("n_dropped"), lit(0L))).as("n_kept"))
+    val victims = Dedup.bucketPairs(assigned, Seq("cell"), Dedup.bucketCap(assigned))
+      .filter(round(GraftFunctions.cosineSim(col("embedding_a"), col("embedding_b")), 4) >= SemTau)
+      .select(col("cell"), lit(null).cast("long").as("vec_id"), col("id_b").as("victim"))
+    // members and victims in ONE aggregate (count skips the victim rows'
+    // null vec_id, countDistinct the member rows' null victim): no
+    // separate member-count shuffle and no join back
+    assigned.select(col("cell"), col("vec_id"), lit(null).cast("long").as("victim"))
+      .unionByName(victims)
+      .groupBy(col("cell"))
+      .agg(count(col("vec_id")).as("n_members"), countDistinct(col("victim")).as("n_dropped"))
+      .select(col("cell"), col("n_members"), col("n_dropped"),
+        (col("n_members") - col("n_dropped")).as("n_kept"))
       .orderBy(col("cell"))
   }
 

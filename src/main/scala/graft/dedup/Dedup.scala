@@ -87,7 +87,8 @@ object Dedup {
   /** `raw` as a bucket cap — the one check behind both spellings of the
     * knob (`SET SESSION dedup_max_bucket` and a direct conf write). A cap
     * of 1 would make every between(2, cap) filter an empty range and
-    * silently disable all bucketed pairing, so it is refused like text. */
+    * silently disable all bucketed pairing, so it is refused as loudly as
+    * a non-integer. */
   private[graft] def parseCap(raw: String): Int =
     raw.trim.toIntOption.filter(_ >= 2).getOrElse(throw new IllegalArgumentException(
       s"dedup_max_bucket (spark.graft.dedup.maxBucket) must be an integer >= 2 " +
